@@ -157,11 +157,11 @@ R13_SET: list[str] = [
 ]
 
 #: Round-14 set, benched EARLY: these fixtures shipped late in round
-#: 13 with their driver checks deferred to the round-14 window
-#: (plans.DEFERRED_TO_NEXT_ROUND), so their timings get a cross-round
-#: history before their first driver row — outlink extraction, the
-#: fetch-once redirect manifest, one frontier-expansion iteration, and
-#: the Crawl-delay politeness extraction.
+#: 13 without a CORRECTNESS row (plans.derived_order puts never-checked
+#: queries at the head of the checked window), so their timings get a
+#: cross-round history before their first check — outlink
+#: extraction, the fetch-once redirect manifest, one frontier-expansion
+#: iteration, and the Crawl-delay politeness extraction.
 R14_SET: list[str] = [
     "q_extract_links",
     "q_fetch_once",

@@ -867,17 +867,19 @@ def _nearest_code(sub: Column, sv: Column) -> Column:
     """In-row argmin code id for one subvector against the broadcast
     ``__book`` array — reproduces the round-8 formulation
     ``min_by(code_id, struct(__d, code_id))`` over the broadcast-join
-    candidates bit-exactly: the same ``_l2sq`` distance fold, the same
-    (distance, code_id) lexicographic total order (Spark compares
-    struct fields with the NaN-greatest / NaN == NaN total order sorts
-    use), and ties are impossible because code_id is unique within a
-    subspace — so the left fold's result is iteration-order-free and
-    equals the aggregate minimum. Verified row-identical against the
-    old join+min_by formulation by
-    tests/test_operators.py::test_pq_encode_matches_join_formulation.
-    A subspace missing from the codebook yields a NULL code where the
-    old inner join silently dropped the (id, sub) pair — unreachable
-    for pq_train-produced books, which cover every subspace."""
+    candidates bit-exactly: the same ``_l2sq`` distance fold and the
+    same (distance, code_id) struct order, taken by ``array_min``
+    (the ordering ``min_by`` and sorts use: NULL fields first, NaN
+    greatest, NaN == NaN). code_id is unique within a subspace, so
+    the minimum is independent of the collected order. A NULL
+    distance (NULL vector, or a vector too short for this subspace —
+    ``zip_with`` pads with NULL) therefore picks the smallest code_id,
+    as ``min_by`` did. A subspace missing from the codebook yields a
+    NULL code (``array_min`` of an empty array) where the old inner
+    join silently dropped the (id, sub) pair — unreachable for
+    pq_train-produced books, which cover every subspace. Pinned
+    against the old join+min_by formulation by
+    tests/test_operators.py::test_pq_encode_matches_join_formulation."""
     cands = F.filter(F.col("__book"), lambda b: b["bsub"] == sub)
     scored = F.transform(
         cands,
@@ -885,12 +887,7 @@ def _nearest_code(sub: Column, sv: Column) -> Column:
             _l2sq(sv, b["bvec"]).alias("d"), b["bcid"].alias("cid")
         ),
     )
-    best = F.aggregate(
-        F.slice(scored, 2, F.greatest(F.size(scored) - 1, F.lit(0))),
-        F.element_at(scored, 1),
-        lambda acc, s: F.when(s < acc, s).otherwise(acc),
-    )
-    return best["cid"]
+    return F.array_min(scored)["cid"]
 
 
 def pq_train(

@@ -42,60 +42,88 @@ def test_queries_run_at_sf0001(spark):
         assert q[name](spark, "/root/testdata/sf0.001").count() >= 0
 
 
+def test_check_window_is_derived_from_correctness_files(tmp_path):
+    """The external correctness check hashes the first 50 registry
+    entries; their order is computed from the committed
+    CORRECTNESS_r<N>.json files (plans.derived_order), not kept by
+    hand."""
+    import json
+
+    from nextbus2pg_spark.plans import derived_order, last_green_rounds
+
+    green = {"rows_match": True, "hash_match": True}
+    failed = {"rows_match": True, "hash_match": False}
+    errored = {"rows_match": None, "hash_match": None, "err": "boom"}
+    for fname, rows in {
+        "CORRECTNESS_r01.json": {
+            "q_a": green, "q_b": green, "q_c": green, "q_t": green,
+        },
+        "CORRECTNESS_r02.json": {
+            "q_b": green, "q_c": failed, "q_d": failed, "q_e": errored,
+            "q_t": green,
+        },
+        "CORRECTNESS_r03_c8.json": {"q_d": green},  # not a round file
+    }.items():
+        (tmp_path / fname).write_text(json.dumps(rows))
+    names = ["q_e", "q_c", "q_d", "q_b", "q_a", "q_t", "q_z"]
+    oracle = set(names) - {"q_z"}  # q_z is rows-only
+
+    # a failed/errored row counts as unchecked: q_c stays at r1, q_d and
+    # q_e never went green
+    assert last_green_rounds(tmp_path) == {
+        "q_a": 1, "q_b": 2, "q_c": 1, "q_t": 2,
+    }
+    # never-green in registration order, then touched, then stalest
+    # first with a name tiebreak, rows-only last
+    assert derived_order(names, oracle, tmp_path, touched=("q_t",)) == [
+        "q_e", "q_d", "q_t", "q_a", "q_c", "q_b", "q_z",
+    ]
+    # no files (an installed package): registration order
+    assert derived_order(
+        names, oracle, tmp_path / "absent", touched=("q_t",)
+    ) == names
+
+
 def test_fixtures_md_staleness_ledger_is_current():
-    """FIXTURES.md §C embeds plans.staleness_table() verbatim between
-    STALENESS markers — the auditable rotation ledger the round-7
-    verdict asked for. Regenerate it whenever DRIVER_CHECKED_R{N} or
-    the registry changes (the generator script lives in the ledger's
-    own BEGIN marker comment)."""
+    """The only hand-kept part of the window order is plans.TOUCHED: it
+    must name registered oracle-backed queries, and FIXTURES.md §C must
+    describe the derived rule rather than a per-round ledger."""
     import re
+    from pathlib import Path
 
-    from nextbus2pg_spark.plans import staleness_table
+    from nextbus2pg_spark.plans import ORACLE, QUERIES, TOUCHED
 
-    with open("/root/repo/FIXTURES.md") as f:
-        text = f.read()
-    m = re.search(
-        r"<!-- STALENESS:BEGIN.*?-->\n(.*?)<!-- STALENESS:END -->",
-        text,
-        flags=re.S,
-    )
-    assert m, "FIXTURES.md is missing the STALENESS ledger section"
-    assert m.group(1).strip() == staleness_table().strip()
+    assert len(set(TOUCHED)) == len(TOUCHED)
+    assert set(TOUCHED) <= set(QUERIES) & set(ORACLE)
+
+    text = (Path(__file__).resolve().parents[1] / "FIXTURES.md").read_text()
+    m = re.search(r"^## C\. .*?(?=^## )", text, flags=re.S | re.M)
+    assert m, "FIXTURES.md is missing section C"
+    assert "derived_order" in m.group(0) and "TOUCHED" in m.group(0)
+    assert "STALENESS" not in text
 
 
 def test_staleness_ceiling():
-    """Round-8 verdict item 8: staleness is a failing test, not judge
-    nagging. Two invariants over the driver-row rotation:
+    """Drain guarantee over the committed CORRECTNESS files: never-green
+    oracle queries and TOUCHED all sit in the first-50 window, and no
+    query outside it is staler than a stale-fill query inside it, so
+    every vintage is re-checked oldest-first."""
+    from pathlib import Path
 
-    1. hard floor — no query's last driver row is more than
-       ``STALENESS_CEILING`` rounds behind ``CURRENT_ROUND``;
-    2. drain guarantee — any row ``STALENESS_CEILING`` rounds behind
-       (i.e. at the ceiling's edge right now) must sit inside the
-       first-50 driver window, so it is re-checked THIS round instead
-       of aging past the ceiling.
-
-    Together these force the oldest-first rotation to keep every
-    vintage within a 4–5 round window (210 queries / 50 slots ≈ a
-    4.2-round full rotation, so the ceiling is attainable).
-    """
     from nextbus2pg_spark.plans import (
-        CURRENT_ROUND,
+        ORACLE,
         QUERIES,
-        STALENESS_CEILING,
-        _LAST_CHECKED_ROUND,
+        TOUCHED,
+        last_green_rounds,
     )
 
-    window = set(list(QUERIES)[:50])
-    too_old = {
-        n: r for n, r in _LAST_CHECKED_ROUND.items()
-        if CURRENT_ROUND - r > STALENESS_CEILING
-    }
-    assert not too_old, f"driver rows past the staleness ceiling: {too_old}"
-    at_edge = {
-        n for n, r in _LAST_CHECKED_ROUND.items()
-        if CURRENT_ROUND - r == STALENESS_CEILING and n in QUERIES
-    }
-    missed = at_edge - window
-    assert not missed, (
-        f"rows at the staleness edge not scheduled for re-check: {missed}"
-    )
+    last = last_green_rounds(Path(__file__).resolve().parents[1])
+    assert last, "no CORRECTNESS_r<N>.json files found at the repo root"
+    order = list(QUERIES)
+    window = order[:50]
+    never = {n for n in QUERIES if n in ORACLE and n not in last}
+    assert never | set(TOUCHED) <= set(window)
+    fill = [n for n in window if n not in never and n not in TOUCHED]
+    outside = [n for n in order[50:] if n in ORACLE]
+    if fill and outside:
+        assert max(last[n] for n in fill) <= min(last[n] for n in outside)

@@ -320,12 +320,14 @@ def test_ivf_assign_matches_window_formulation(spark):
 
 def test_pq_encode_matches_join_formulation(spark):
     """Round-14 differential: the in-row PQ encoding (_nearest_code —
-    collected codebook row + total-order argmin fold) must reproduce
+    collected codebook row + in-row array_min argmin) must reproduce
     the round-8 explode + broadcast-join + min_by(struct(d, code_id))
     formulation ROW-IDENTICALLY, including distance ties broken by the
-    smaller code_id, zero vectors (epsilon-floored unit norm), and a
-    NaN vector (NaN distances — NaN-greatest total order). The replay
-    below IS the old code."""
+    smaller code_id, zero vectors (epsilon-floored unit norm), a NaN
+    vector (NaN distances — NaN-greatest total order), and a NULL or
+    too-short vector (NULL distances — NULLs first, then the smallest
+    code_id). The replay below IS the old code. A codebook missing a
+    subspace yields a NULL code for it instead of raising."""
     from nextbus2pg_spark.operators.similarity import (
         _l2sq,
         _sub_slices,
@@ -342,6 +344,14 @@ def test_pq_encode_matches_join_formulation(spark):
     rows.append((101, rows[7][1]))            # exact twin
     rows.append((102, [float("nan")] * 16))   # NaN distances
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    # encoded but not trained on: NULL distances in every subspace of
+    # the NULL vector and in each subspace the 5-element one doesn't fill
+    edge = df.unionByName(
+        spark.createDataFrame(
+            [(103, None), (104, [1.0, -2.0, 3.0, 0.5, 4.0])],
+            "vec_id long, embedding array<float>",
+        )
+    )
 
     def old_encode(corpus, codebook, id_col, vec_col):
         m = codebook.select(F.max("sub")).first()[0] + 1
@@ -387,13 +397,29 @@ def test_pq_encode_matches_join_formulation(spark):
         book_t = book.unionByName(dup)
         new = sorted(
             (r["id"], tuple(r["codes"]))
-            for r in pq_encode(df, book_t, "vec_id", "embedding").collect()
+            for r in pq_encode(
+                edge, book_t, "vec_id", "embedding"
+            ).collect()
         )
         old = sorted(
             (r["id"], tuple(r["codes"]))
-            for r in old_encode(df, book_t, "vec_id", "embedding").collect()
+            for r in old_encode(
+                edge, book_t, "vec_id", "embedding"
+            ).collect()
         )
         assert new == old, (m, n_codes)
+
+    # subspace 1 missing from the last book: NULL there, the rest as
+    # encoded against the full book
+    gap = sorted(
+        (r["id"], tuple(r["codes"]))
+        for r in pq_encode(
+            edge, book_t.where(F.col("sub") != 1), "vec_id", "embedding"
+        ).collect()
+    )
+    assert gap == [
+        (i, codes[:1] + (None,) + codes[2:]) for i, codes in new
+    ]
 
 
 def test_scrub_pii_order_and_counts(spark):
