@@ -221,24 +221,18 @@ class ContinuousAggregate:
         """Merge one batch's partial aggregates into the stored state:
         union + re-aggregate with each aggregate's MERGE operator
         (sum-of-counts, sum-of-sums, min-of-mins, max-of-maxes)."""
-        partials = self._partials(batch)
-        if not self.exists():
-            self.store.init(partials)
-            return
-        base_gen = self.store.current_manifest()["gen"]
-        touched = self.store.touched_buckets(partials)
-        merged = (
-            self.store.read(touched)
-            .unionByName(partials)
-            .groupBy(*self.bucket_cols)
-            .agg(
-                *[
-                    self._builders(fn, params)[1](F.col(name)).alias(name)
-                    for name, (fn, _, params) in self.aggs.items()
-                ]
-            )
+        merges = [
+            self._builders(fn, params)[1](F.col(name)).alias(name)
+            for name, (fn, _, params) in self.aggs.items()
+        ]
+        self.store.merge(
+            self._partials(batch),
+            lambda existing, partials: (
+                existing.unionByName(partials)
+                .groupBy(*self.bucket_cols)
+                .agg(*merges)
+            ),
         )
-        self.store.replace_buckets(merged, touched, expected_gen=base_gen)
 
     def sink(self):
         """foreachBatch adapter: ``stream.writeStream.foreachBatch(

@@ -5,7 +5,7 @@ stages over the keyed-write layer, in FK-dependency order:
     1. routes            (agency.py:42-71,  upsert K2)
     2. services          (agency.py:78-109, sentinel row + upsert K3)
     3. stops             (agency.py:116-190, missing-stop repair J4/J5,
-                          dedup A1, upsert K4)
+                          upsert K4 with its A1 dedup)
     4. service_stop_orders (agency.py:197-232, W1 numbering,
                           insert-if-absent K5)
 
@@ -16,16 +16,16 @@ Semantics preserved:
 - surrogate ids are stable across refreshes: a fresh id is minted per
   incoming row, and the upsert discards it when the business key exists
   (K2 key-stability). Ids are deterministic md5-uuids of the business
-  key by default (SURVEY.md §7 hard-part #4 — injectable/testable;
-  pass ``deterministic_ids=False`` for uuid4-parity with agency.py:52);
+  key (SURVEY.md §7 hard-part #4 — injectable/testable);
 - the NULL-tag sentinel service per route ("vehicles not currently
   running a service", route.py:35-37) unions in before the upsert (U3);
 - missing stops (direction lists ⊖ body stops, J3) borrow
   (title, lon, lat) from any same-tag body stop, deterministically
   top-1-sorted (J5, "so that choice of stop is deterministic",
   agency.py:146-151), else NULLs (J4, agency.py:162-170);
-- stop dedup grain (route_id, tag, location-text) before upsert (A1)
-  with the NULL-tolerant location key (K4, create_tables.sql:85-86).
+- stop dedup grain (route_id, tag, location-text) (A1) is the upsert's
+  own within-batch dedup, on the NULL-tolerant location key (K4,
+  create_tables.sql:85-86).
 
 Scale: dimension tables are small-by-construction; every join here
 broadcasts. The design point is correctness of the keyed-write algebra —
@@ -56,12 +56,6 @@ def surrogate_uuid(*business_key_cols, prefix: str) -> F.Column:
         F.substring(h, 17, 4),
         F.substring(h, 21, 12),
     )
-
-
-def _keygen(deterministic: bool, prefix: str, *cols) -> F.Column:
-    if deterministic:
-        return surrogate_uuid(*cols, prefix=prefix)
-    return F.expr("uuid()")  # agency.py:52 uuid4-parity mode
 
 
 @dataclass
@@ -99,12 +93,11 @@ def refresh_routes(
     store: DimensionStore,
     route_list: DataFrame,
     agency_id: str,
-    deterministic_ids: bool = True,
 ) -> DataFrame:
     """Stage 1 (agency.py:42-71): routeList → project+keygen → upsert K2."""
     incoming = route_list.select(
-        _keygen(
-            deterministic_ids, "route", F.lit(agency_id), F.col("tag")
+        surrogate_uuid(
+            F.lit(agency_id), F.col("tag"), prefix="route"
         ).alias("route_id"),
         F.lit(agency_id).alias("agency_id"),
         F.col("tag"),
@@ -118,7 +111,6 @@ def refresh_services(
     store: DimensionStore,
     directions: DataFrame,
     agency_id: str,
-    deterministic_ids: bool = True,
 ) -> DataFrame:
     """Stage 2 (agency.py:78-109): directions + NULL-tag sentinel per
     route → upsert K3 on the null-safe (route_id, tag) key."""
@@ -142,8 +134,8 @@ def refresh_services(
         F.lit(False).alias("use_for_ui"),
     )
     incoming = svc.unionByName(sentinel).select(
-        _keygen(
-            deterministic_ids, "service", F.col("route_id"), F.col("tag")
+        surrogate_uuid(
+            F.col("route_id"), F.col("tag"), prefix="service"
         ).alias("service_id"),
         "route_id",
         "tag",
@@ -160,10 +152,10 @@ def refresh_stops(
     body_stops: DataFrame,
     direction_stops: DataFrame,
     agency_id: str,
-    deterministic_ids: bool = True,
 ) -> DataFrame:
     """Stage 3 (agency.py:116-190): body stops + repaired missing stops
-    → dedup A1 → upsert K4 (NULL-tolerant location key)."""
+    → upsert K4 (NULL-tolerant location key), whose within-batch
+    dedup is A1 (agency.py:184)."""
     routes = store.route.read().where(F.col("agency_id") == agency_id)
     rt = routes.select(F.col("tag").alias("route_tag"), "route_id")
 
@@ -211,11 +203,10 @@ def refresh_stops(
     incoming = (
         body.unionByName(repaired)
         .withColumn("location_text", point_text(F.col("location")))
-        .dropDuplicates(["route_id", "tag", "location_text"])  # A1
         .select(
-            _keygen(
-                deterministic_ids, "stop",
+            surrogate_uuid(
                 F.col("route_id"), F.col("tag"), F.col("location_text"),
+                prefix="stop",
             ).alias("stop_id"),
             "route_id",
             "tag",
@@ -274,15 +265,12 @@ def run_refresh(
     direction_stops: DataFrame,
     agency_id: str,
     update_timestamp: dt.datetime | None = None,
-    deterministic_ids: bool = True,
 ) -> None:
     """All four stages in FK order (run.py:69-77's refresh block; retry
     is the caller's policy, as in the reference's n_tries loop)."""
-    refresh_routes(store, route_list, agency_id, deterministic_ids)
-    refresh_services(store, directions, agency_id, deterministic_ids)
-    refresh_stops(
-        store, body_stops, direction_stops, agency_id, deterministic_ids
-    )
+    refresh_routes(store, route_list, agency_id)
+    refresh_services(store, directions, agency_id)
+    refresh_stops(store, body_stops, direction_stops, agency_id)
     refresh_service_stop_orders(
         store, direction_stops, agency_id, update_timestamp
     )

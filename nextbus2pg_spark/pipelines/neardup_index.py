@@ -215,15 +215,9 @@ class NearDupIndex:
         bands = self._bands_from_wide(doomed)
         probe = bands.select("band", "band_hash").distinct()
         if self.bands.exists():
-            touched = self.bands.touched_buckets(probe)
-            if touched:
-                base_gen = self.bands.current_manifest()["gen"]
-                merged = self.bands.read(touched).join(
-                    ids, "id", "left_anti"
-                )
-                self.bands.replace_buckets(
-                    merged, touched, expected_gen=base_gen
-                )
+            self.bands.merge(
+                probe, lambda rows, _: rows.join(ids, "id", "left_anti")
+            )
         self.sigs.delete_keys(ids)
 
     def add_if_absent(

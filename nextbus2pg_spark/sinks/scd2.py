@@ -88,13 +88,12 @@ class Scd2Table:
                 scd2_bootstrap(batch, self.key, self.tracked, batch_date)
             )
             return
-        base_gen = self.store.current_manifest()["gen"]
-        touched = self.store.touched_buckets(batch)
-        merged = scd2_merge(
-            self.store.read(touched), batch, self.key, self.tracked,
-            batch_date,
+        self.store.merge(
+            batch,
+            lambda history, b: scd2_merge(
+                history, b, self.key, self.tracked, batch_date
+            ),
         )
-        self.store.replace_buckets(merged, touched, expected_gen=base_gen)
 
 
 def scd2_foreach_batch(

@@ -31,6 +31,16 @@ Design (the same shape as a Delta transaction log, minimally):
   never invalidated by the writer of gen N (single-writer model, like
   the reference's one polling process — run.py:29-66).
 
+Write path: every keyed write is ``merge(incoming, fn)`` — pin the
+base generation, read only the buckets ``incoming`` touches, and
+replace them with ``fn(existing, incoming)`` under the base-generation
+check (nothing is published when no bucket is touched). A first write
+is the same merge into the empty table: ``existing`` is a zero-row
+frame typed like ``incoming`` and no bucket-probe job runs. ``init``,
+``append`` and ``replace_buckets`` all end in one commit body — claim
+the next generation, read the manifest once, write, publish, vacuum —
+with one release of the claim on failure.
+
 Reference parity note: the reference's store is Postgres — every upsert
 is row-level in-place (agency.py:60-71). This module gives the same
 keyed-merge semantics on files, which is what the 100 TB deployment
@@ -48,18 +58,13 @@ import datetime as _dt
 import json
 import re
 import time
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _MANIFEST_RE = re.compile(r"_manifest-(\d+)\.json$")
 _CLAIM_RE = re.compile(r"_claim-(\d+)$")
-
-#: default sentinel for ``_pinned_reader`` — "pin to the stored
-#: schema"; distinct from an explicit None ("legacy: do not pin").
-_PIN_TO_STORED = object()
-
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer holds (or published) the generation this writer
@@ -222,6 +227,13 @@ class BucketedParquetStore:
         finally:
             stream.close()
         return json.loads(data)
+
+    def _latest_manifest(self) -> dict | None:
+        """The newest manifest doc, None while the table has none: one
+        root listing plus one parse, the single way every read and
+        write resolves table state."""
+        gens = self._manifest_gens()
+        return self._read_manifest(gens[-1]) if gens else None
 
     def _create_exclusive(self, rel: str) -> bool:
         """Atomically create ``rel`` as a zero-byte lock file; False if
@@ -404,7 +416,7 @@ class BucketedParquetStore:
         buckets: dict[int, list[str]],
         stats: dict[str, dict] | None = None,
         schema_json: str | None = None,
-    ) -> None:
+    ) -> dict:
         """Atomically publish generation ``gen`` (which the caller must
         have CLAIMED): write the manifest to a .tmp file and rename to
         its final (fresh) name — the commit point. Nothing before this
@@ -412,13 +424,9 @@ class BucketedParquetStore:
         per-column min/max; only entries for dirs actually referenced
         by ``buckets`` are kept. ``schema_json`` records the table
         schema in the manifest (so an EMPTY table — e.g. after a
-        delete-all — still reads with a typed schema); omitted, the
-        previous manifest's schema carries forward."""
-        jvm, fs, _ = self._fs()
-        if schema_json is None:
-            gens = self._manifest_gens()
-            if gens:
-                schema_json = self._read_manifest(gens[-1]).get("schema")
+        delete-all — still reads with a typed schema). Returns the
+        published manifest doc."""
+        _, fs, _ = self._fs()
         live_dirs = {d for dirs in buckets.values() for d in dirs}
         doc = {
             "gen": gen,
@@ -457,18 +465,21 @@ class BucketedParquetStore:
         # the number); drop the instance record so a long-lived writer
         # doesn't accumulate one dict entry per generation forever.
         self._claimed_instances.pop(gen, None)
-        self._vacuum(gen)
+        return doc
 
-    def _vacuum(self, latest_gen: int) -> None:
+    def _vacuum(self, known: dict[int, dict]) -> None:
         """Drop manifests/data not needed by the last ``keep_generations``
         manifests. The previous manifest's files are always retained so
         a reader that resolved gen-1 just before our publish still has
-        its files."""
+        its files. ``known`` maps generations to manifest docs the
+        writer already holds (manifests are immutable), so only the
+        other retained manifests are parsed."""
         gens = self._manifest_gens()
         keep = set(gens[-self.keep_generations:])
         live: set[str] = set()
         for g in keep:
-            for dirs in self._read_manifest(g)["buckets"].values():
+            man = known.get(g) or self._read_manifest(g)
+            for dirs in man["buckets"].values():
                 live.update(dirs)
         _, fs, root = self._fs()
         for g in gens:
@@ -510,10 +521,10 @@ class BucketedParquetStore:
         return self._manifest_gens()
 
     def current_manifest(self) -> dict:
-        gens = self._manifest_gens()
-        if not gens:
+        man = self._latest_manifest()
+        if man is None:
             raise FileNotFoundError(f"no manifest under {self.path}")
-        return self._read_manifest(gens[-1])
+        return man
 
     def read_generation(self, gen: int) -> DataFrame:
         """Time-travel read: the table exactly as generation ``gen``
@@ -608,11 +619,7 @@ class BucketedParquetStore:
                 )
             )
         if rewritten_old or rewritten_new:
-            empty = (
-                self.spark.createDataFrame([], to_schema)
-                if to_schema is not None
-                else self._empty_frame()
-            )
+            empty = self._empty_frame(man_b)
             old = _read_dirs(rewritten_old) if rewritten_old else empty
             new = _read_dirs(rewritten_new) if rewritten_new else empty
             cols = old.columns
@@ -647,7 +654,7 @@ class BucketedParquetStore:
             )
             parts.append(diff)
         if not parts:
-            return self._empty_frame().withColumn(
+            return self._empty_frame(man_b).withColumn(
                 "_change_type", F.lit("").cast("string")
             )
         out = parts[0]
@@ -655,8 +662,8 @@ class BucketedParquetStore:
             out = out.unionByName(p)
         return out
 
-    def _effective_n_buckets(self) -> int:
-        """The bucket count that actually partitions stored data.
+    def _adopt_bucketing(self, man: dict | None) -> None:
+        """Take the bucket count that actually partitions stored data.
 
         The MANIFEST is authoritative once the table exists: a caller
         reopening the table with a different ``n_buckets`` would
@@ -664,39 +671,40 @@ class BucketedParquetStore:
         keys → silent duplicates) and mix two bucketings in one
         manifest. The constructor value only seeds a brand-new table.
         """
-        if self.exists():
-            stored = int(self.current_manifest()["n_buckets"])
-            if stored != self.n_buckets:
-                self.n_buckets = stored
-        return self.n_buckets
+        if man is not None:
+            self.n_buckets = int(man["n_buckets"])
 
-    def bucket_of(self, df: DataFrame) -> Column:
-        return bucket_expr(
-            self.key_cols, self._effective_n_buckets(), self.null_safe
-        )
+    def _bucket_col(self) -> Column:
+        return bucket_expr(self.key_cols, self.n_buckets, self.null_safe)
 
     def touched_buckets(self, df: DataFrame) -> list[int]:
         """Distinct bucket ids present in ``df`` (bounded by n_buckets,
         so the collect is a scalar-sized driver hop, not a data move)."""
+        self._adopt_bucketing(self._latest_manifest())
+        return self._touched(df)
+
+    def _touched(self, df: DataFrame) -> list[int]:
         rows = (
-            df.select(self.bucket_of(df).alias(self.BUCKET_COL))
+            df.select(self._bucket_col().alias(self.BUCKET_COL))
             .distinct()
             .collect()
         )
         return sorted(r[0] for r in rows)
 
-    def _bucket_dirs(self, buckets: Sequence[int] | None = None) -> list[str]:
-        man = self.current_manifest()
-        out: list[str] = []
-        sel = (
-            set(man["buckets"])
-            if buckets is None
-            else {str(b) for b in buckets}
-        )
-        for b, dirs in man["buckets"].items():
-            if b in sel:
-                out.extend(f"{self.path}/{d}" for d in dirs)
-        return out
+    def _bucket_dirs(
+        self, buckets: Sequence[int] | None = None, man: dict | None = None
+    ) -> list[str]:
+        """Full paths of the data dirs of ``buckets`` (all when None) in
+        ``man`` (default: the current manifest)."""
+        if man is None:
+            man = self.current_manifest()
+        sel = None if buckets is None else {str(b) for b in buckets}
+        return [
+            f"{self.path}/{d}"
+            for b, dirs in man["buckets"].items()
+            if sel is None or b in sel
+            for d in dirs
+        ]
 
     def dirs_for_range(self, col: str, lower=None, upper=None) -> list[str]:
         """Data-dir relpaths that might hold rows with
@@ -704,7 +712,10 @@ class BucketedParquetStore:
         recorded stats for ``col`` are always kept — pruning is an
         optimization, never a correctness filter. Bounds of datetime/
         date type are compared in isoformat (matching ``_stat_ser``)."""
-        man = self.current_manifest()
+        return self._dirs_for_range(self.current_manifest(), col, lower, upper)
+
+    @staticmethod
+    def _dirs_for_range(man: dict, col: str, lower, upper) -> list[str]:
         stats = man.get("stats", {})
         lo = _stat_ser(lower)
         hi = _stat_ser(upper)
@@ -739,11 +750,12 @@ class BucketedParquetStore:
         filter the NULL rows a caller saw would depend on physical dir
         layout. Callers that need NULL rows (e.g. to apply
         ``col >= x OR col IS NULL`` themselves) must use ``read()``."""
-        kept = self.dirs_for_range(col, lower, upper)
+        man = self.current_manifest()
+        kept = self._dirs_for_range(man, col, lower, upper)
         if not kept:
-            df = self._empty_frame()
+            df = self._empty_frame(man)
         else:
-            df = self._pinned_reader().parquet(
+            df = self._pinned_reader(self._schema_of_manifest(man)).parquet(
                 *[f"{self.path}/{d}" for d in kept]
             )
         if apply_filter:
@@ -764,39 +776,34 @@ class BucketedParquetStore:
         s = man.get("schema")
         return StructType.fromJson(json.loads(s)) if s else None
 
-    def _stored_schema(self):
-        return self._schema_of_manifest(self.current_manifest())
-
-    def _pinned_reader(self, schema=_PIN_TO_STORED):
-        """DataFrameReader pinned to ``schema`` when one is given —
-        the single construction point for schema-pinned dir reads
-        (read / read_range / read_changes must never diverge on
-        pinning semantics). The default sentinel means "pin to the
-        CURRENT manifest's stored schema"; an explicit ``None`` means
-        "do not pin" (legacy manifests with no recorded schema — the
-        dirs read with their native layout). The two must stay
-        distinct: pinning a legacy read_changes range to the LATEST
-        schema would backfill columns neither generation had."""
-        st = self._stored_schema() if schema is _PIN_TO_STORED else schema
+    def _pinned_reader(self, schema):
+        """DataFrameReader pinned to ``schema`` — the single
+        construction point for schema-pinned dir reads (read /
+        read_range / read_changes must never diverge on pinning
+        semantics). Callers pass the schema of the manifest they
+        resolved; ``None`` means "do not pin" (legacy manifests with no
+        recorded schema — the dirs read with their native layout), so
+        a legacy read_changes range is never pinned to the LATEST
+        schema, which would backfill columns neither generation had."""
         reader = self.spark.read
-        if st is not None:
-            reader = reader.schema(st)
-        return reader
+        return reader if schema is None else reader.schema(schema)
 
-    def _empty_frame(self) -> DataFrame:
+    def _empty_frame(self, man: dict) -> DataFrame:
         """Typed zero-row frame for valid-but-empty selections: from
         the manifest's recorded schema when present (survives a
         delete-all that leaves no data dir anywhere), else derived
         from any data dir (legacy manifests)."""
-        st = self._stored_schema()
+        st = self._schema_of_manifest(man)
         if st is not None:
             return self.spark.createDataFrame([], st)
-        all_dirs = self._bucket_dirs(None)
+        all_dirs = self._bucket_dirs(None, man)
         if not all_dirs:
             raise FileNotFoundError(f"store {self.path} has no data")
         return self.spark.read.parquet(all_dirs[0]).limit(0)
 
-    def _check_schema(self, df: DataFrame, allow_evolution: bool) -> str:
+    def _check_schema(
+        self, df: DataFrame, allow_evolution: bool, man: dict
+    ) -> str:
         """Schema gate for every write into an existing table: a frame
         whose columns silently differ from the stored schema is the
         classic mixed-schema-dirs hazard (parquet reads then take the
@@ -810,8 +817,9 @@ class BucketedParquetStore:
         - MISSING or re-typed columns → always rejected (a frame
           missing a stored column is a bug upstream, not evolution).
 
-        Returns the schema JSON to publish."""
-        stored = self._stored_schema()
+        ``man`` is the manifest the write commits on top of. Returns
+        the schema JSON to publish."""
+        stored = self._schema_of_manifest(man)
         if stored is None:
             # Legacy manifest (pre-schema-recording): derive the
             # baseline from existing data so the first post-upgrade
@@ -821,7 +829,7 @@ class BucketedParquetStore:
             # must be the WIDEST legacy schema, not whichever dir gets
             # sampled first (one-time footer-union cost on the first
             # post-upgrade write only).
-            all_dirs = self._bucket_dirs(None)
+            all_dirs = self._bucket_dirs(None, man)
             if not all_dirs:
                 return df.schema.json()
             stored = (
@@ -883,10 +891,17 @@ class BucketedParquetStore:
         selected — dirs written before a schema widening supply NULL
         for the added columns instead of dropping them layout-
         dependently."""
-        dirs = self._bucket_dirs(buckets)
+        return self._read(self.current_manifest(), buckets)
+
+    def _read(
+        self, man: dict, buckets: Sequence[int] | None = None
+    ) -> DataFrame:
+        dirs = self._bucket_dirs(buckets, man)
         if not dirs:
-            return self._empty_frame()
-        return self._pinned_reader().parquet(*dirs)
+            return self._empty_frame(man)
+        return self._pinned_reader(self._schema_of_manifest(man)).parquet(
+            *dirs
+        )
 
     # -- writes -------------------------------------------------------
 
@@ -914,7 +929,7 @@ class BucketedParquetStore:
             # (publish is the last step); its files are unreferenced.
             fs.delete(gen_dir, True)
         (
-            df.withColumn(self.BUCKET_COL, self.bucket_of(df))
+            df.withColumn(self.BUCKET_COL, self._bucket_col())
             .repartition(self.BUCKET_COL)  # one task-set per bucket; no
             # small-file explosion (tasks x buckets files otherwise)
             .write.mode("errorifexists")
@@ -968,20 +983,16 @@ class BucketedParquetStore:
         return (gens[-1] + 1) if gens else 0
 
     def init(self, df: DataFrame) -> None:
-        """Bootstrap the table from a first full frame."""
-        gen = self.claim_next_generation()
-        try:
-            written = self._write_generation(df, gen)
-            stats = self._collect_stats(gen, written, df.columns)
-            self._publish(
-                gen,
-                {b: [d] for b, d in written.items()},
-                stats,
-                df.schema.json(),
-            )
-        except BaseException:
-            self._release_claim(gen)
-            raise
+        """Bootstrap the table from a first full frame (on an existing
+        table: a wholesale rewrite that resets its schema and stats)."""
+        self._commit(df, drop=None)
+
+    def append(self, df: DataFrame, allow_evolution: bool = False) -> None:
+        """Append-only write: adds new dirs to the touched buckets
+        without reading or rewriting anything (O(batch) IO — the
+        vehicle_location event-log shape, agency.py:303-322).
+        Schema-gated: see :meth:`_check_schema`."""
+        self._commit(df, drop=(), allow_evolution=allow_evolution)
 
     def replace_buckets(
         self,
@@ -1000,38 +1011,81 @@ class BucketedParquetStore:
         :class:`ConcurrentWriteError` if any other writer published in
         between — without it, a concurrent append to a touched bucket
         would be silently erased by this replace (the merge never saw
-        its rows)."""
+        its rows). Keyed writers use :meth:`merge`, which does this."""
+        self._commit(merged, touched, expected_gen, allow_evolution)
+
+    def merge(
+        self,
+        incoming: DataFrame,
+        fn: Callable[[DataFrame, DataFrame], DataFrame],
+    ) -> None:
+        """Read-merge-replace: the buckets ``incoming`` touches become
+        ``fn(existing, incoming)``, ``existing`` being their current
+        rows; every other bucket keeps its files. The publish is pinned
+        to the generation ``existing`` came from (else
+        :class:`ConcurrentWriteError`); when no bucket is touched
+        nothing is published. On a table with no manifest ``existing``
+        is ``incoming.limit(0)`` — an empty relation the optimizer folds
+        out of ``fn``'s plan — and no bucket-probe job runs."""
+        man = self._latest_manifest()
+        existing, touched, base_gen = incoming.limit(0), (), -1
+        if man is not None:
+            self._adopt_bucketing(man)
+            touched = self._touched(incoming)
+            if not touched:
+                return
+            existing, base_gen = self._read(man, touched), int(man["gen"])
+        self._commit(fn(existing, incoming), touched, base_gen)
+
+    def _commit(
+        self,
+        df: DataFrame,
+        drop: Sequence[int] | None,
+        expected_gen: int | None = None,
+        allow_evolution: bool = False,
+    ) -> None:
+        """Claim → write → publish, the body of every write. The
+        manifest is read once, after the claim (so it is
+        authoritative); any failure releases the claim. ``drop``: the
+        buckets whose dirs the new generation replaces (``()`` appends,
+        ``None`` rewrites the whole table and its schema).
+        ``expected_gen`` (-1: no manifest) is the OCC check."""
         gen = self.claim_next_generation()
         try:
-            man = self.current_manifest()  # after the claim: authoritative
-            if expected_gen is not None and int(man["gen"]) != int(
-                expected_gen
-            ):
+            man = self._latest_manifest()
+            base_gen = -1 if man is None else int(man["gen"])
+            if expected_gen is not None and base_gen != int(expected_gen):
                 raise ConcurrentWriteError(
                     f"table {self.path} advanced from generation "
-                    f"{expected_gen} to {man['gen']} since this merge was "
+                    f"{expected_gen} to {base_gen} since this merge was "
                     "computed; re-read and re-merge"
                 )
-            # Schema-gate BEFORE the write job: df.schema is plan
-            # metadata, so a bad frame fails in milliseconds instead of
-            # after hours of touched-bucket IO.
-            schema_json = self._check_schema(merged, allow_evolution)
-            written = self._write_generation(merged, gen)
-            buckets: dict[int, list[str]] = {
-                int(b): list(dirs) for b, dirs in man["buckets"].items()
-            }
-            for b in touched:
-                buckets[int(b)] = []
+            self._adopt_bucketing(man)
+            if man is None or drop is None:
+                schema_json, buckets, stats = df.schema.json(), {}, {}
+            else:
+                # Schema-gate BEFORE the write job: df.schema is plan
+                # metadata, so a bad frame fails in milliseconds instead
+                # of after hours of touched-bucket IO.
+                schema_json = self._check_schema(df, allow_evolution, man)
+                dropped = {int(b) for b in drop}
+                buckets = {
+                    int(b): [] if int(b) in dropped else list(dirs)
+                    for b, dirs in man["buckets"].items()
+                }
+                stats = dict(man.get("stats", {}))  # kept dirs keep stats
+            written = self._write_generation(df, gen)
             for b, d in written.items():
-                buckets[int(b)] = [d]
-            stats = dict(man.get("stats", {}))  # retained dirs keep stats
-            stats.update(self._collect_stats(gen, written, merged.columns))
-            self._publish(
+                buckets.setdefault(b, []).append(d)
+            stats.update(self._collect_stats(gen, written, df.columns))
+            doc = self._publish(
                 gen,
                 {b: d for b, d in buckets.items() if d},
                 stats,
                 schema_json,
             )
+            known = {gen: doc} if man is None else {gen: doc, base_gen: man}
+            self._vacuum(known)
         except BaseException:
             self._release_claim(gen)
             raise
@@ -1040,8 +1094,8 @@ class BucketedParquetStore:
         """Delete every row matching a key in ``keys`` — the DELETE
         half of the MERGE story (corpus retraction / right-to-erasure:
         at 100 TB the operation that CANNOT be "re-ingest without the
-        rows"). Same physical shape as a merge: only the buckets
-        containing delete keys are read, anti-joined, and republished;
+        rows"). A :meth:`merge` whose ``fn`` anti-joins the keys: only
+        the buckets containing delete keys are read and republished;
         every other bucket keeps its files byte-identical, and the
         publish is claim-serialized + OCC-checked so a concurrent
         append can't be erased.
@@ -1059,24 +1113,23 @@ class BucketedParquetStore:
         leaves an empty-but-existing table."""
         if not self.exists():
             raise FileNotFoundError(f"store {self.path} has no data")
-        base_gen = self.current_manifest()["gen"]
-        probe = keys.select(*self.key_cols).distinct()
-        touched = self.touched_buckets(probe)
-        if not touched:
-            return
-        existing = self.read(touched).alias("e")
-        cond = None
-        for k in self.key_cols:
-            e, i = F.col(f"e.{k}"), F.col(f"i.{k}")
-            if self.null_safe:
-                c = F.coalesce(e.cast("string"), F.lit("")) == F.coalesce(
-                    i.cast("string"), F.lit("")
-                )
-            else:
-                c = e == i
-            cond = c if cond is None else (cond & c)
-        merged = existing.join(probe.alias("i"), cond, "left_anti")
-        self.replace_buckets(merged, touched, expected_gen=base_gen)
+
+        def drop_matches(existing: DataFrame, probe: DataFrame) -> DataFrame:
+            cond = None
+            for k in self.key_cols:
+                e, i = F.col(f"e.{k}"), F.col(f"i.{k}")
+                if self.null_safe:
+                    c = F.coalesce(e.cast("string"), F.lit("")) == F.coalesce(
+                        i.cast("string"), F.lit("")
+                    )
+                else:
+                    c = e == i
+                cond = c if cond is None else (cond & c)
+            return existing.alias("e").join(
+                probe.alias("i"), cond, "left_anti"
+            )
+
+        self.merge(keys.select(*self.key_cols).distinct(), drop_matches)
 
     def compact(
         self,
@@ -1105,35 +1158,10 @@ class BucketedParquetStore:
         }
         if not todo:
             return {}
-        merged = self.read(list(todo))
+        merged = self._read(man, list(todo))
         # expected_gen: compaction runs OFF the write path, so a
         # concurrent append between our read and the publish is a real
         # possibility — without the check its rows would be erased from
         # the compacted buckets.
         self.replace_buckets(merged, list(todo), expected_gen=man["gen"])
         return {b: len(d) for b, d in sorted(todo.items())}
-
-    def append(self, df: DataFrame, allow_evolution: bool = False) -> None:
-        """Append-only write: adds new dirs to the touched buckets
-        without reading or rewriting anything (O(batch) IO — the
-        vehicle_location event-log shape, agency.py:303-322).
-        Schema-gated: see :meth:`_check_schema`."""
-        if not self.exists():
-            self.init(df)
-            return
-        gen = self.claim_next_generation()
-        try:
-            man = self.current_manifest()  # after the claim: authoritative
-            schema_json = self._check_schema(df, allow_evolution)
-            written = self._write_generation(df, gen)
-            buckets: dict[int, list[str]] = {
-                int(b): list(dirs) for b, dirs in man["buckets"].items()
-            }
-            for b, d in written.items():
-                buckets.setdefault(int(b), []).append(d)
-            stats = dict(man.get("stats", {}))
-            stats.update(self._collect_stats(gen, written, df.columns))
-            self._publish(gen, buckets, stats, schema_json)
-        except BaseException:
-            self._release_claim(gen)
-            raise

@@ -28,6 +28,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from nextbus2pg_spark.operators.keyed_write import (
+    _dedup_on_keys,
     append_dedup,
     insert_if_absent,
     upsert_batch,
@@ -114,8 +115,8 @@ def jdbc_upsert_writer(
     ph = "%s" if paramstyle == "format" else "?"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # T7 empty-batch short-circuit (agency.py:303)
-            return
+        # T7 empty-batch short-circuit (agency.py:303): an empty
+        # partition never opens a connection (_execute_per_partition).
         if append_only:
             deduped = append_dedup(batch_df, list(key_cols))
             col_list = ", ".join(deduped.columns)
@@ -126,21 +127,16 @@ def jdbc_upsert_writer(
                 ph,
             )
             return
-        if null_safe_keys:
-            # COALESCE-indexed keys: NULL and '' are ONE key at the
-            # store, so they must collapse within the batch too — a
-            # multi-row VALUES touching that key twice errors on
-            # Postgres ("cannot affect row a second time"). ONLY the
-            # declared null_safe_keys fold; other key columns keep
-            # NULL-distinct-from-'' semantics, as the store does.
-            from nextbus2pg_spark.operators.keyed_write import _dedup_on_keys
-
-            batch_df = _dedup_on_keys(
-                batch_df, list(key_cols), True,
-                null_safe_cols=list(null_safe_keys),
-            )
-        else:
-            batch_df = append_dedup(batch_df, list(key_cols))
+        # COALESCE-indexed keys: NULL and '' are ONE key at the store,
+        # so they must collapse within the batch too — a multi-row
+        # VALUES touching that key twice errors on Postgres ("cannot
+        # affect row a second time"). ONLY the declared null_safe_keys
+        # fold; other key columns keep NULL-distinct-from-'' semantics,
+        # as the store does (no null_safe_keys: plain dropDuplicates).
+        batch_df = _dedup_on_keys(
+            batch_df, list(key_cols), True,
+            null_safe_cols=list(null_safe_keys),
+        )
         stmt = pg_upsert_statement(
             table, batch_df.columns, key_cols, update_cols, null_safe_keys,
             do_nothing, omit_conflict_target,
@@ -183,12 +179,15 @@ class ParquetUpsertTable:
 
     State lives under ``path`` as a :class:`~nextbus2pg_spark.sinks.
     store.BucketedParquetStore` — hash-bucketed immutable parquet plus
-    an atomically published manifest. Each upsert reads and rewrites
-    ONLY the buckets containing batch keys (O(touched buckets) IO, not
+    an atomically published manifest. ``upsert`` and
+    ``insert_if_absent`` are each one ``store.merge`` of the
+    ``operators.keyed_write`` function: it reads and rewrites ONLY the
+    buckets containing batch keys (O(touched buckets) IO, not
     O(|table|)), and a crash at any point leaves the previous manifest
     fully readable — the file-pruned ACID-ish behavior a cluster gets
-    from Delta ``MERGE INTO``; the merge *semantics* are identical
-    because both delegate to ``operators.keyed_write``.
+    from Delta ``MERGE INTO``, with identical merge *semantics*. A
+    first write is the same merge into the empty table, so it dedups
+    on the same key grain as every later write.
     """
 
     def __init__(
@@ -235,41 +234,25 @@ class ParquetUpsertTable:
         Bucket-pruned: only the buckets containing incoming keys are
         read, merged, and republished; all other buckets keep their
         existing files byte-for-byte."""
-        if not self.exists():
-            self._init(incoming)
-            return
-        # expected_gen pins the generation this merge READS; a
-        # concurrent publish between read and republish is rejected
-        # loudly instead of silently dropping its rows.
-        base_gen = self.store.current_manifest()["gen"]
-        touched = self.store.touched_buckets(incoming)
-        merged = upsert_batch(
-            self.store.read(touched),
+        self.store.merge(
             incoming,
-            self.key_cols,
-            self.update_cols,
-            null_safe=self.null_safe,
+            lambda existing, batch: upsert_batch(
+                existing, batch, self.key_cols, self.update_cols,
+                null_safe=self.null_safe,
+            ),
         )
-        self.store.replace_buckets(merged, touched, expected_gen=base_gen)
 
     def insert_if_absent(self, incoming: DataFrame) -> None:
         """K5: idempotent append (ON CONFLICT DO NOTHING) — same
         bucket pruning as :meth:`upsert`."""
-        if not self.exists():
-            self._init(incoming)
-            return
-        base_gen = self.store.current_manifest()["gen"]
-        touched = self.store.touched_buckets(incoming)
-        merged = insert_if_absent(
-            self.store.read(touched), incoming, self.key_cols,
-            null_safe=self.null_safe,
+        self.store.merge(
+            incoming,
+            lambda existing, batch: insert_if_absent(
+                existing, batch, self.key_cols, null_safe=self.null_safe
+            ),
         )
-        self.store.replace_buckets(merged, touched, expected_gen=base_gen)
 
     def append_dedup(self, batch: DataFrame) -> None:
         """K6: append-only log insert with within-batch dedup — pure
         append of new files, nothing existing is read or rewritten."""
         self.store.append(append_dedup(batch, self.key_cols))
-
-    def _init(self, incoming: DataFrame) -> None:
-        self.store.init(incoming.dropDuplicates(self.key_cols))

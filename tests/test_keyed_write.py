@@ -127,6 +127,22 @@ def test_parquet_upsert_table_roundtrip(spark, tmp_path):
     leftovers = [p.name for p in tmp_path.iterdir() if p.name != "route"]
     assert leftovers == [], leftovers
 
+    # A first write into an empty null-safe table dedups on the merge
+    # grain: (k, NULL) and (k, '') are one COALESCE(tag, '') key, as
+    # under the reference's unique index — one row, whichever sink.
+    both_forms = [("s1", "r1", None, "a"), ("s2", "r1", "", "b")]
+    for method in ("upsert", "insert_if_absent"):
+        svc = ParquetUpsertTable(
+            spark, str(tmp_path / f"svc_{method}"),
+            key_cols=["route_id", "tag"], update_cols=["name"],
+            null_safe=True,
+        )
+        getattr(svc, method)(spark.createDataFrame(
+            both_forms,
+            "service_id string, route_id string, tag string, name string",
+        ))
+        assert svc.read().count() == 1, method
+
 
 def test_pg_upsert_statement_shapes():
     """The emitted SQL mirrors the reference statement family."""

@@ -74,6 +74,11 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert rows["tag7"].name == "renamed" and rows["tag7"].route_id == "u7"
     assert len(rows) == 64
 
+    # a merge whose incoming touches no bucket publishes nothing
+    gens = t.store.generations()
+    t.store.merge(seed.where(F.lit(False)), lambda existing, _: existing)
+    assert t.store.generations() == gens
+
 
 def test_crash_before_publish_is_invisible(spark, tmp_path):
     """Simulated crash: a data generation written but never published
