@@ -20,6 +20,9 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from nextbus2pg_spark.operators.metrics import staged
 
 
 class IdempotentParquetSink:
@@ -48,7 +51,8 @@ class IdempotentParquetSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.committed(batch_id):  # replay after successful commit
             return
-        if batch_df.isEmpty():  # T7
+        batch_df, seen = staged(batch_df, n=F.count(F.lit(1)))
+        if seen["n"] == 0:  # T7
             return
         if self.transform is not None:
             batch_df = self.transform(batch_df)

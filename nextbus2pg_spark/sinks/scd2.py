@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextbus2pg_spark.operators.dedup import exact_dedup
+from nextbus2pg_spark.operators.metrics import staged
 from nextbus2pg_spark.operators.scd2 import scd2_bootstrap, scd2_merge
 from nextbus2pg_spark.sinks.store import BucketedParquetStore
 
@@ -104,11 +105,14 @@ def scd2_foreach_batch(
     history. ``batch_date_fn(batch_id, batch_df)`` supplies the
     effective date of the batch (wall clock, an event-time max, or a
     deterministic function of ``batch_id`` for tests — the reference's
-    injectable-clock stance, ``run.py:103-111``). Empty batches are
-    skipped (T7)."""
+    injectable-clock stance, ``run.py:103-111``) and receives the
+    staged batch: the batch is materialized once, and its row count is
+    observed in that job, so empty batches are skipped (T7) without a
+    second pass."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        batch_df, seen = staged(batch_df, n=F.count(F.lit(1)))
+        if seen["n"] == 0:
             return
         table.apply(batch_df, batch_date_fn(batch_id, batch_df))
 

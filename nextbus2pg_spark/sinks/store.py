@@ -32,11 +32,16 @@ Design (the same shape as a Delta transaction log, minimally):
   the reference's one polling process — run.py:29-66).
 
 Write path: every keyed write is ``merge(incoming, fn)`` — pin the
-base generation, read only the buckets ``incoming`` touches, and
-replace them with ``fn(existing, incoming)`` under the base-generation
-check (nothing is published when no bucket is touched). A first write
-is the same merge into the empty table: ``existing`` is a zero-row
-frame typed like ``incoming`` and no bucket-probe job runs. ``init``,
+base generation, stage ``incoming`` once (one eager ``localCheckpoint``
+job whose observed metrics give the touched bucket set, so the probe
+costs no second pass over the input), read only those buckets, and
+replace them with ``fn(existing, staged)`` under the base-generation
+check (nothing is published when no bucket is touched). A checkpoint
+is never recomputed, so the buckets probed are exactly those of the
+rows written; an executor lost with staged blocks fails the write, the
+claim is released, and the caller retries. A first write is the same
+merge into the empty table: ``existing`` is a zero-row frame typed like
+``incoming`` and nothing is staged. ``init``,
 ``append`` and ``replace_buckets`` all end in one commit body — claim
 the next generation, read the manifest once, write, publish, vacuum —
 with one release of the claim on failure.
@@ -62,6 +67,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from nextbus2pg_spark.operators.metrics import staged
 
 _MANIFEST_RE = re.compile(r"_manifest-(\d+)\.json$")
 _CLAIM_RE = re.compile(r"_claim-(\d+)$")
@@ -681,9 +688,6 @@ class BucketedParquetStore:
         """Distinct bucket ids present in ``df`` (bounded by n_buckets,
         so the collect is a scalar-sized driver hop, not a data move)."""
         self._adopt_bucketing(self._latest_manifest())
-        return self._touched(df)
-
-    def _touched(self, df: DataFrame) -> list[int]:
         rows = (
             df.select(self._bucket_col().alias(self.BUCKET_COL))
             .distinct()
@@ -1024,18 +1028,29 @@ class BucketedParquetStore:
         rows; every other bucket keeps its files. The publish is pinned
         to the generation ``existing`` came from (else
         :class:`ConcurrentWriteError`); when no bucket is touched
-        nothing is published. On a table with no manifest ``existing``
-        is ``incoming.limit(0)`` — an empty relation the optimizer folds
-        out of ``fn``'s plan — and no bucket-probe job runs."""
+        nothing is published.
+
+        ``incoming`` is evaluated once: it is staged (one eager
+        ``localCheckpoint`` job) and the touched bucket set is observed
+        in that same job, so the buckets read are exactly those of the
+        rows written, even for a nondeterministic ``incoming``. A lost
+        executor holding staged blocks fails the write; the claim is
+        released and the caller retries the whole merge. On a table
+        with no manifest ``existing`` is ``incoming.limit(0)`` — an
+        empty relation the optimizer folds out of ``fn``'s plan — and
+        nothing is staged."""
         man = self._latest_manifest()
-        existing, touched, base_gen = incoming.limit(0), (), -1
-        if man is not None:
-            self._adopt_bucketing(man)
-            touched = self._touched(incoming)
-            if not touched:
-                return
-            existing, base_gen = self._read(man, touched), int(man["gen"])
-        self._commit(fn(existing, incoming), touched, base_gen)
+        if man is None:
+            self._commit(fn(incoming.limit(0), incoming), (), -1)
+            return
+        self._adopt_bucketing(man)
+        incoming, seen = staged(
+            incoming, touched=F.collect_set(self._bucket_col())
+        )
+        touched = sorted(seen["touched"])
+        if touched:
+            existing = self._read(man, touched)
+            self._commit(fn(existing, incoming), touched, int(man["gen"]))
 
     def _commit(
         self,

@@ -15,7 +15,10 @@ Semantics preserved from the reference:
 - event time = request time − secsSinceReport (T3, ``route.py:202``);
 - dedup within batch ONLY — the log is at-least-once across batches
   (T4, ``agency.py:316-317``);
-- empty batches are no-ops (T7, ``agency.py:303``);
+- empty batches are no-ops (T7, ``agency.py:303``): each micro-batch
+  is staged once (``operators.metrics.staged``) and its row count is
+  observed in that staging job, so the emptiness check costs no second
+  parse of the feed documents and the pipeline reads the staged rows;
 - offsets: the reference threads an in-memory ``request_times`` dict
   (T2) that loses state on crash (``run.py:96,117-119``); here source
   offsets commit transactionally with the streaming checkpoint —
@@ -44,6 +47,7 @@ from nextbus2pg_spark.functions.scalar import (
     point_struct,
 )
 from nextbus2pg_spark.operators.joins import two_level_fallback
+from nextbus2pg_spark.operators.metrics import staged
 
 #: Event-grain dedup key (A2, ``agency.py:316-317``).
 DEDUP_KEYS = ("service_id", "vehicle_tag", "location_timestamp")
@@ -219,7 +223,8 @@ def start_ingest(
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # T7
+        batch_df, seen = staged(batch_df, n=F.count(F.lit(1)))
+        if seen["n"] == 0:  # T7
             return
         route_services, agency_services = dims_provider()
         out = vehicle_pipeline(batch_df, route_services, agency_services)

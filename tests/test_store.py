@@ -80,6 +80,36 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert t.store.generations() == gens
 
 
+def test_merge_evaluates_its_input_once(spark, tmp_path):
+    """A keyed write runs ``incoming``'s plan once, on the first write
+    and on an upsert into an existing table alike: the touched-bucket
+    probe is read off the job that stages the input, so a Python UDF in
+    the input sees each row once per write. The UDF yields a key
+    column, so the probe cannot prune it away."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(tag):
+        evaluated.add(1)
+        return tag
+
+    def incoming(suffix):
+        rows = [(f"u{i}", "sf", f"tag{i}", f"name{i}{suffix}")
+                for i in range(20)]
+        return _routes(spark, rows).withColumn("tag", counted("tag"))
+
+    t = ParquetUpsertTable(
+        spark, str(tmp_path / "t"), key_cols=["agency_id", "tag"],
+        update_cols=["name"], n_buckets=8,
+    )
+    t.upsert(incoming(""))
+    assert evaluated.value == 20
+    t.upsert(incoming("-v2"))
+    assert evaluated.value == 40
+    got = {r.tag: r.name for r in t.read().collect()}
+    assert got == {f"tag{i}": f"name{i}-v2" for i in range(20)}
+
+
 def test_crash_before_publish_is_invisible(spark, tmp_path):
     """Simulated crash: a data generation written but never published
     (the manifest rename is the commit point) must not change reads,

@@ -138,8 +138,10 @@ def test_streaming_end_to_end_with_checkpoint(spark, tmp_path):
     )
 
     rs, asvc = _dims(spark)
+    sunk = []
 
     def sink(df, batch_id):
+        sunk.append(batch_id)
         df.write.mode("append").parquet(out_dir)
 
     def run_once():
@@ -149,14 +151,23 @@ def test_streaming_end_to_end_with_checkpoint(spark, tmp_path):
         )
         q = start_ingest(stream, lambda: (rs, asvc), sink, ckpt)
         q.awaitTermination(120)
+        return [(p.batchId, p.numInputRows) for p in q.recentProgress]
 
-    run_once()
+    assert run_once() == [(0, 3)]
     first = spark.read.parquet(out_dir)
     assert first.count() == 2  # dedup applied, both vehicles present
+
+    # An empty feed file is a micro-batch of its own with no rows: T7
+    # skips it before the sink, and the stored rows are unchanged.
+    write_feed("b_empty.json", [])
+    assert run_once() == [(1, 0)]
+    assert sunk == [0]
+    assert spark.read.parquet(out_dir).count() == 2
 
     # New file arrives; restart from checkpoint → only the new batch lands.
     write_feed("b2.json", [dict(base, vehicle_id="v3")])
     run_once()
+    assert sunk == [0, 2]
     second = spark.read.parquet(out_dir)
     assert second.count() == 3  # v1, v2 (once) + v3; no reprocessing
     tags = {r.vehicle_tag for r in second.collect()}
