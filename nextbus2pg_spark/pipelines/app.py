@@ -13,8 +13,8 @@
 - Daily dimension refresh at local-midnight rollover
   (``run.py:101-113``): detection is a pure function of
   (last-refresh local date, current UTC time, tz) so it is unit-
-  testable; the check runs from the streaming listener thread between
-  micro-batches, refresh failures retry ``n_tries`` times
+  testable; each micro-batch runs the check on the driver before it
+  resolves its dimensions; refresh failures retry ``n_tries`` times
   (``run.py:69-77``) and then surface instead of being silently
   swallowed (the reference's bare-except bug, SURVEY.md §3).
 
@@ -101,8 +101,8 @@ def needs_refresh(
 
 class RefreshScheduler:
     """Tracks the rollover state and runs the refresh under the retry
-    policy. ``tick()`` is called between micro-batches (cheap: a date
-    compare unless a refresh is due)."""
+    policy. ``tick()`` is called at the start of each micro-batch
+    (cheap: a date compare unless a refresh is due)."""
 
     def __init__(
         self,
@@ -147,23 +147,25 @@ def run_app(
 ):
     """Wire bootstrap + continuous ingest + scheduled refresh.
 
-    The refresh check piggybacks on the micro-batch cadence: the sink
-    wrapper calls ``scheduler.tick()`` before delegating, which mirrors
-    the reference's "check the date once per sweep" placement
-    (``run.py:101-113``) and keeps all driver-side work on one thread.
+    The refresh check piggybacks on the micro-batch cadence: each
+    non-empty batch calls ``scheduler.tick()`` just before it resolves
+    its dimensions, so a batch that arrives after the rollover already
+    sees the refreshed services — the reference checks the date before
+    its sweep (``run.py:101-119``). All driver-side work stays on one
+    thread.
     """
     from nextbus2pg_spark.streaming.ingest import start_ingest
 
     scheduler.tick()  # bootstrap refresh (first loop pass)
 
-    def refreshing_sink(batch_df, batch_id):
+    def refreshed_dims():
         scheduler.tick()
-        sink(batch_df, batch_id)
+        return dims_provider()
 
     query = start_ingest(
         raw_stream,
-        dims_provider,
-        refreshing_sink,
+        refreshed_dims,
+        sink,
         checkpoint_dir,
         trigger_seconds=int(resttime_seconds) or None,
     )

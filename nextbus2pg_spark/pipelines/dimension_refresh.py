@@ -4,8 +4,8 @@ stages over the keyed-write layer, in FK-dependency order:
 
     1. routes            (agency.py:42-71,  upsert K2)
     2. services          (agency.py:78-109, sentinel row + upsert K3)
-    3. stops             (agency.py:116-190, missing-stop repair J4/J5,
-                          upsert K4 with its A1 dedup)
+    3. stops             (agency.py:116-190, body ∪ resolved direction
+                          stops, upsert K4 with its A1 dedup)
     4. service_stop_orders (agency.py:197-232, W1 numbering,
                           insert-if-absent K5)
 
@@ -19,10 +19,13 @@ Semantics preserved:
   key (SURVEY.md §7 hard-part #4 — injectable/testable);
 - the NULL-tag sentinel service per route ("vehicles not currently
   running a service", route.py:35-37) unions in before the upsert (U3);
-- missing stops (direction lists ⊖ body stops, J3) borrow
-  (title, lon, lat) from any same-tag body stop, deterministically
-  top-1-sorted (J5, "so that choice of stop is deterministic",
-  agency.py:146-151), else NULLs (J4, agency.py:162-170);
+- which stop a direction stop means — its own route's body stop (J3),
+  else the deterministic top-1 same-tag body stop of any route (J5,
+  agency.py:146-151), else NULLs (J4, agency.py:162-170) — is decided
+  once, by the parser (``sources/route_config.py``). Stage 3 upserts
+  body stops ∪ direction stops; stage 4 joins each direction stop to
+  the stop row on the full null-safe stop key, so after a stop moves
+  its orders reference the current location's row;
 - stop dedup grain (route_id, tag, location-text) (A1) is the upsert's
   own within-batch dedup, on the NULL-tolerant location key (K4,
   create_tables.sql:85-86).
@@ -41,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextbus2pg_spark.functions.scalar import point_struct, point_text
-from nextbus2pg_spark.operators.joins import broadcast_lookup, top1_per_group
+from nextbus2pg_spark.operators.joins import broadcast_lookup
 from nextbus2pg_spark.sinks.upsert import ParquetUpsertTable
 
 
@@ -93,7 +96,7 @@ def refresh_routes(
     store: DimensionStore,
     route_list: DataFrame,
     agency_id: str,
-) -> DataFrame:
+) -> None:
     """Stage 1 (agency.py:42-71): routeList → project+keygen → upsert K2."""
     incoming = route_list.select(
         surrogate_uuid(
@@ -104,14 +107,13 @@ def refresh_routes(
         F.col("title").alias("name"),
     )
     store.route.upsert(incoming)
-    return store.route.read()
 
 
 def refresh_services(
     store: DimensionStore,
     directions: DataFrame,
     agency_id: str,
-) -> DataFrame:
+) -> None:
     """Stage 2 (agency.py:78-109): directions + NULL-tag sentinel per
     route → upsert K3 on the null-safe (route_id, tag) key."""
     routes = store.route.read().where(F.col("agency_id") == agency_id)
@@ -144,7 +146,20 @@ def refresh_services(
         "use_for_ui",
     )
     store.service.upsert(incoming)
-    return store.service.read()
+
+
+def _located(stops: DataFrame) -> DataFrame:
+    """(title, lon, lat) rows → the stop table's ``location`` and
+    ``location_text``. A row with none of the three — J4's unresolved
+    tag — has a NULL location, as the reference's J4 insert leaves it
+    (``agency.py:162-170``)."""
+    location = F.when(
+        F.coalesce("title", "lon", "lat").isNotNull(),
+        point_struct(F.col("lon"), F.col("lat")),
+    )
+    return stops.withColumn("location", location).withColumn(
+        "location_text", point_text(F.col("location"))
+    )
 
 
 def refresh_stops(
@@ -152,71 +167,28 @@ def refresh_stops(
     body_stops: DataFrame,
     direction_stops: DataFrame,
     agency_id: str,
-) -> DataFrame:
-    """Stage 3 (agency.py:116-190): body stops + repaired missing stops
-    → upsert K4 (NULL-tolerant location key), whose within-batch
-    dedup is A1 (agency.py:184)."""
+) -> None:
+    """Stage 3 (agency.py:116-190): body stops ∪ direction stops, each
+    already carrying the attributes of the stop it means (J3-J5,
+    resolved by ``RouteConfig``) → upsert K4 (NULL-tolerant location
+    key), whose within-batch dedup is A1 (agency.py:184) and folds the
+    copies."""
     routes = store.route.read().where(F.col("agency_id") == agency_id)
     rt = routes.select(F.col("tag").alias("route_tag"), "route_id")
-
-    body = broadcast_lookup(body_stops, rt, "route_tag").select(
+    cols = ["route_tag", "stop_tag", "title", "lon", "lat"]
+    stops = body_stops.select(cols).unionByName(direction_stops.select(cols))
+    incoming = _located(broadcast_lookup(stops, rt, "route_tag")).select(
+        surrogate_uuid(
+            F.col("route_id"), F.col("stop_tag"), F.col("location_text"),
+            prefix="stop",
+        ).alias("stop_id"),
         "route_id",
         F.col("stop_tag").alias("tag"),
         F.col("title").alias("name"),
-        point_struct(F.col("lon"), F.col("lat")).alias("location"),
-    )
-
-    # J3 (route.py:76-78): tags referenced by direction lists that have
-    # no body stop on the same route.
-    referenced = broadcast_lookup(direction_stops, rt, "route_tag").select(
-        "route_id", F.col("stop_tag").alias("tag")
-    ).distinct()
-    missing = referenced.join(
-        body.select("route_id", "tag"), ["route_id", "tag"], "left_anti"
-    )
-
-    # J4/J5 (agency.py:141-170): borrow attributes from any same-tag
-    # body stop, deterministic top-1; unmatched keep NULLs.
-    candidates = body.select(
-        "tag",
-        F.col("name").alias("cand_name"),
-        F.col("location").alias("cand_location"),
-        F.col("route_id").alias("cand_route_id"),
-    )
-    best = top1_per_group(
-        candidates,
-        ["tag"],
-        [
-            F.col("cand_location.lon").asc_nulls_last(),
-            F.col("cand_location.lat").asc_nulls_last(),
-            F.col("cand_name").asc_nulls_last(),
-            F.col("cand_route_id").asc(),
-        ],
-    )
-    repaired = missing.join(F.broadcast(best), "tag", "left_outer").select(
-        "route_id",
-        "tag",
-        F.col("cand_name").alias("name"),
-        F.col("cand_location").alias("location"),
-    )
-
-    incoming = (
-        body.unionByName(repaired)
-        .withColumn("location_text", point_text(F.col("location")))
-        .select(
-            surrogate_uuid(
-                F.col("route_id"), F.col("tag"), F.col("location_text"),
-                prefix="stop",
-            ).alias("stop_id"),
-            "route_id",
-            "tag",
-            "name",
-            "location",
-            "location_text",
-        )
+        "location",
+        "location_text",
     )
     store.stop.upsert(incoming)
-    return store.stop.read()
 
 
 def refresh_service_stop_orders(
@@ -224,27 +196,35 @@ def refresh_service_stop_orders(
     direction_stops: DataFrame,
     agency_id: str,
     update_timestamp: dt.datetime | None = None,
-) -> DataFrame:
+) -> None:
     """Stage 4 (agency.py:197-232): ordered (service, stop, order) rows
     snapshotted at ``update_timestamp`` → insert-if-absent K5.
 
     ``position`` carries document order (route.py:124-128 counter =
     W1); tag→id resolution via broadcast joins on the tables stages 2-3
-    just wrote (the reference's read-back round trip)."""
+    just wrote (the reference's read-back round trip). Each direction
+    stop joins the stop row on the full null-safe stop key (route,
+    tag, COALESCE(location_text, '')), so it references the row stage
+    3 wrote for it, not an older location of the same tag."""
     ts = update_timestamp or dt.datetime.utcnow().replace(microsecond=0)
     routes = store.route.read().where(F.col("agency_id") == agency_id)
     rt = routes.select(F.col("tag").alias("route_tag"), "route_id")
     services = store.service.read().select(
         "route_id", F.col("tag").alias("dir_tag"), "service_id"
     )
+    location_key = F.coalesce(F.col("location_text"), F.lit(""))
     stops = store.stop.read().select(
-        "route_id", F.col("tag").alias("stop_tag"), "stop_id"
-    ).dropDuplicates(["route_id", "stop_tag"])  # A4 collapse, deterministic
+        "route_id",
+        F.col("tag").alias("stop_tag"),
+        location_key.alias("location_key"),
+        "stop_id",
+    )
 
     rows = (
-        broadcast_lookup(direction_stops, rt, "route_tag")
+        _located(broadcast_lookup(direction_stops, rt, "route_tag"))
+        .withColumn("location_key", location_key)
         .join(F.broadcast(services), ["route_id", "dir_tag"])  # J2
-        .join(F.broadcast(stops), ["route_id", "stop_tag"])  # J2
+        .join(F.broadcast(stops), ["route_id", "stop_tag", "location_key"])
         .select(
             "service_id",
             "stop_id",
@@ -254,7 +234,6 @@ def refresh_service_stop_orders(
         .where(F.col("stop_order") > 0)  # F6 CHECK constraint
     )
     store.service_stop_order.insert_if_absent(rows)
-    return store.service_stop_order.read()
 
 
 def run_refresh(

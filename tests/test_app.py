@@ -121,6 +121,58 @@ def test_run_app_end_to_end(spark, tmp_path):
     assert landed == [1]      # the micro-batch reached the sink
 
 
+def test_run_app_rollover_batch_resolves_against_refreshed_dims(
+    spark, tmp_path
+):
+    """The day rolls over between the bootstrap and the first batch, and
+    only the rollover refresh brings in the service that batch's vehicle
+    runs on. The refresh must run before the batch resolves its
+    dimensions, as the reference checks the date before its sweep
+    (run.py:101-119); checked after, the vehicle is dropped unresolved."""
+    import itertools
+
+    from nextbus2pg_spark.sources.feed import RAW_FEED_SCHEMA
+
+    feed = tmp_path / "afeed"
+    feed.mkdir()
+    row = {
+        "route_tag": "38R", "dir_tag": "38R_out", "vehicle_id": "v1",
+        "lon": "-122.41", "lat": "37.77", "secs_since_report": "10",
+        "predictable": "true", "request_time_ms": 1706000000000,
+    }
+    with open(feed / "b1.json", "w") as f:
+        f.write(json.dumps(row) + "\n")
+
+    schema = "tag string, service_id string"
+    dims = [spark.createDataFrame([("38R_in", "svc_in")], schema)]
+
+    def refresh():
+        if refreshes:  # the rollover refresh adds the outbound service
+            dims[0] = spark.createDataFrame(
+                [("38R_in", "svc_in"), ("38R_out", "svc_out")], schema
+            )
+        refreshes.append(1)
+
+    refreshes, landed = [], []
+    days = itertools.chain(
+        [dt.datetime(2024, 1, 1, 23, 59)],
+        itertools.repeat(dt.datetime(2024, 1, 2, 0, 1)),
+    )
+    sched = RefreshScheduler(refresh, tz="UTC", clock=lambda: next(days))
+    stream = spark.readStream.schema(RAW_FEED_SCHEMA).json(str(feed))
+    run_app(
+        stream,
+        lambda: (dims[0], dims[0]),
+        lambda df, bid: landed.append(df.count()),
+        sched,
+        str(tmp_path / "ack"),
+        resttime_seconds=0,
+        await_seconds=120,
+    )
+    assert refreshes == [1, 1]  # bootstrap + rollover
+    assert landed == [1]
+
+
 def test_main_cli_end_to_end(spark, tmp_path):
     """`python -m nextbus2pg_spark` assembly, one availableNow sweep:
     agency bootstrap + dimension refresh from config-document
