@@ -9,7 +9,8 @@
   query from ``streaming/ingest.py`` with
   ``trigger(processingTime=resttime)`` — scheduling, offset
   durability (checkpoint), and retry move from hand-written Python
-  into the streaming runtime.
+  into the streaming runtime. A retried batch is appended once: the
+  sink commits it in a store transaction on (query id, batch id).
 - Daily dimension refresh at local-midnight rollover
   (``run.py:101-113``): detection is a pure function of
   (last-refresh local date, current UTC time, tz) so it is unit-
@@ -227,6 +228,7 @@ def main(argv: list[str] | None = None, spark=None):
         run_refresh,
     )
     from nextbus2pg_spark.session import get_spark
+    from nextbus2pg_spark.sinks.store import stream_app_id
     from nextbus2pg_spark.sinks.upsert import ParquetUpsertTable
     from nextbus2pg_spark.sources.feed_stream import VehicleFeedDataSource
     from nextbus2pg_spark.sources.route_config import RouteConfig
@@ -336,10 +338,15 @@ def main(argv: list[str] | None = None, spark=None):
         .option("path", args.spool)
         .load()
     )
+    def sink(batch_df, batch_id: int) -> None:
+        # A replayed batch id is already in the manifest: no re-append.
+        with locations.store.transaction(stream_app_id(spark), batch_id):
+            locations.append_dedup(batch_df)
+
     query = run_app(
         raw,
         dims_provider,
-        lambda batch_df, batch_id: locations.append_dedup(batch_df),
+        sink,
         scheduler,
         args.checkpoint,
         resttime_seconds=args.resttime,

@@ -13,9 +13,12 @@ re-invent them subtly wrong.
 Delivery contract: AT-LEAST-ONCE. The marker advances only after
 ``apply_fn`` returns — a crash in between re-delivers the same delta
 on restart, so ``apply_fn`` must be idempotent per generation (upsert/
-delete by key is; blind appends are not). This matches the engine's
-other sinks (``sinks/exactly_once.py`` documents the same stance and
-the idempotence recipe).
+delete by key is; blind appends are not). It stays at-least-once
+because the marker records the consumer's position in the store, not
+a write to it: ``apply_fn`` writes elsewhere (an index, a replica), so
+no single manifest can publish the marker together with the effect
+(the store's ``transaction`` records a write's batch in the manifest
+that publishes that write — ``sinks/exactly_once.py``).
 
 Retention: the CDC window is bounded by the store's
 ``keep_generations`` (read_changes can only diff retained manifests).

@@ -16,9 +16,10 @@ KMV sketch for approximate distinct counts), so
     merge(stored, agg(batch)) == agg(stored_rows ∪ batch_rows)
 
 holds regardless of batch boundaries, arrival order, or how many
-times the stream restarts mid-history (re-delivered batches are the
-caller's concern: pair with the idempotent sink's batch markers for
-exactly-once, sinks/exactly_once.py). Derived values (mean) are
+times the stream restarts mid-history. A re-delivered batch is not
+counted twice: ``sink()`` merges each batch inside the store's
+transaction on its batch id, so a replay publishes nothing
+(exactly-once, sinks/exactly_once.py). Derived values (mean) are
 computed at read time from the monoid state, never stored — storing
 a mean would make merging wrong.
 
@@ -38,7 +39,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nextbus2pg_spark.sinks.store import BucketedParquetStore
+from nextbus2pg_spark.sinks.store import BucketedParquetStore, stream_app_id
 
 #: KMV sketch width for the mergeable approx-distinct state
 #: (relative error ~ 1/sqrt(k-2) = ~13%; same sketch as
@@ -236,10 +237,13 @@ class ContinuousAggregate:
 
     def sink(self):
         """foreachBatch adapter: ``stream.writeStream.foreachBatch(
-        ca.sink())``."""
+        ca.sink())``. Each batch merges inside the store's transaction
+        on its batch id, so a replay publishes nothing; an empty batch
+        touches no bucket, and into a new table lands no rows, so it
+        publishes nothing either."""
 
         def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.isEmpty():
+            with self.store.transaction(stream_app_id(self.spark), batch_id):
                 self.apply_batch(batch_df)
 
         return _apply

@@ -266,7 +266,7 @@ def make_agency_table(spark: SparkSession, root: str) -> ParquetUpsertTable:
 
 def refresh_agencies(
     agency_table: ParquetUpsertTable, agency_list: DataFrame
-) -> DataFrame:
+) -> None:
     """K1 (agency.py:26-37): fetch S1 → project P1 → upsert on the
     natural key. Columns: (tag → agency_id, title → name,
     regionTitle → region)."""
@@ -276,7 +276,6 @@ def refresh_agencies(
         F.col("regionTitle").alias("region"),
     )
     agency_table.upsert(incoming)
-    return agency_table.read()
 
 
 def with_retries(fn, n_tries: int = 10, on_error=None):

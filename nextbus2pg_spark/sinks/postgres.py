@@ -215,10 +215,13 @@ class _StopTableAdapter:
 
     def read(self) -> DataFrame:
         flat = self.inner.read()
+        # location_text is NULL exactly when location is: a titled stop
+        # without coordinates keeps its struct of NULLs, as the parquet
+        # store does.
         loc = F.when(
-            F.col("lon").isNotNull() | F.col("lat").isNotNull(),
+            F.col("location_text").isNotNull(),
             F.struct(F.col("lon"), F.col("lat")),
-        )  # both-NULL → NULL struct, matching the repaired-stop form
+        )
         return flat.select(
             "stop_id", "route_id", "tag", "name",
             loc.alias("location"), "location_text",

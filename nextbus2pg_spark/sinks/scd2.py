@@ -17,9 +17,10 @@ Scale/processing notes:
   ``ParquetUpsertTable`` (``sinks/store.py``) — atomic publish, merges
   rewrite only the buckets containing batch keys; the local stand-in
   for a transactional MERGE target (MIGRATION.md maps it to Delta).
-- Replays are harmless: re-applying a batch whose changes are already
-  in the history is a no-op (idempotent merge), which is exactly the
-  at-least-once contract ``foreachBatch`` requires.
+- Replays publish nothing: ``scd2_foreach_batch`` writes each batch
+  inside ``store.transaction(query id, batch_id)``, so the manifest
+  that publishes a batch's history also records its id, and a
+  replayed id is skipped (exactly-once, ``sinks/exactly_once.py``).
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from pyspark.sql import functions as F
 from nextbus2pg_spark.operators.dedup import exact_dedup
 from nextbus2pg_spark.operators.metrics import staged
 from nextbus2pg_spark.operators.scd2 import scd2_bootstrap, scd2_merge
-from nextbus2pg_spark.sinks.store import BucketedParquetStore
+from nextbus2pg_spark.sinks.store import BucketedParquetStore, stream_app_id
 
 
 class Scd2Table:
@@ -108,12 +109,15 @@ def scd2_foreach_batch(
     injectable-clock stance, ``run.py:103-111``) and receives the
     staged batch: the batch is materialized once, and its row count is
     observed in that job, so empty batches are skipped (T7) without a
-    second pass."""
+    second pass. The write runs inside the store's transaction on
+    ``batch_id``, so a replayed batch publishes nothing."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df, seen = staged(batch_df, n=F.count(F.lit(1)))
         if seen["n"] == 0:
             return
-        table.apply(batch_df, batch_date_fn(batch_id, batch_df))
+        app_id = stream_app_id(table.spark)
+        with table.store.transaction(app_id, batch_id):
+            table.apply(batch_df, batch_date_fn(batch_id, batch_df))
 
     return write

@@ -2,12 +2,9 @@
 stand-in for a transactional MERGE target (Delta/Iceberg), built from
 nothing but parquet dirs + an atomic manifest pointer.
 
-Why this exists (round-2 verdict "What's wrong" #2 + advisor finding):
-the previous rename-swap stores rewrote the FULL table per micro-batch
-(O(|table|) IO — a scale-killer for a large dimension or a long SCD2
-history) and had a crash window between two directory renames in which
-the table path did not exist, so a crashed swap silently re-bootstrapped
-and discarded history.
+It replaces rename-swap stores, which rewrote the FULL table per
+micro-batch (O(|table|) IO) and had a crash window in which the table
+path did not exist, so a crashed swap re-bootstrapped and lost history.
 
 Design (the same shape as a Delta transaction log, minimally):
 
@@ -46,6 +43,14 @@ merge into the empty table: ``existing`` is a zero-row frame typed like
 the next generation, read the manifest once, write, publish, vacuum —
 with one release of the claim on failure.
 
+Exactly-once: the manifest is also the commit record of the batches
+that wrote the table. A write made inside ``transaction(app_id,
+version)`` publishes ``{app_id: version}`` in the same manifest as its
+data (Delta's ``SetTransaction``, ``txnAppId``/``txnVersion``); a
+later write in a transaction whose version is at or below the one
+recorded for its app is a replay and publishes nothing. Every publish
+carries the previous manifest's map forward, one entry per app.
+
 Reference parity note: the reference's store is Postgres — every upsert
 is row-level in-place (agency.py:60-71). This module gives the same
 keyed-merge semantics on files, which is what the 100 TB deployment
@@ -63,7 +68,8 @@ import datetime as _dt
 import json
 import re
 import time
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -133,11 +139,25 @@ def bucket_expr(
     (sql/create_tables.sql:62-63), so the NULL and empty forms of a key
     land in (and merge within) the same bucket.
     """
+    if not key_cols:  # a keyless store (an append log) is one bucket
+        return F.lit(0)
     parts = []
     for c in key_cols:
         s = F.col(c).cast("string")
         parts.append(F.coalesce(s, F.lit("")) if null_safe else s)
     return F.pmod(F.xxhash64(*parts), F.lit(n_buckets)).cast("int")
+
+
+def stream_app_id(spark: SparkSession) -> str:
+    """The transaction app id of a ``foreachBatch`` write: the running
+    streaming query's id, which Spark sets as the
+    ``sql.streaming.queryId`` local property of the thread that runs
+    the batch. The id lives in the checkpoint, so a restart keeps it
+    and a wiped checkpoint, whose batch ids restart at 0, gets a new
+    one. Outside a streaming query it is ``"direct"``: the caller
+    numbers its own batches."""
+    qid = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+    return qid or "direct"
 
 
 class BucketedParquetStore:
@@ -169,38 +189,26 @@ class BucketedParquetStore:
         # opened — at 100 TB that is the difference between touching
         # O(matching dirs) and O(table) on every time-bounded query.
         self.stats_cols = list(stats_cols or [])
-        # Floor of 2: the concurrent-reader grace window REQUIRES the
-        # previous manifest's files to survive one publish — a reader
-        # that resolved gen N just before the writer publishes N+1 must
-        # still find gen N's files afterward (proven by
-        # tests/test_store.py::test_reader_survives_concurrent_publish
-        # _and_gc). keep_generations=1 would vacuum them at publish
-        # time, silently invalidating in-flight reads.
+        # Floor of 2: a reader that resolved gen N just before the
+        # writer publishes N+1 must still find gen N's files afterward
+        # (test_store.py::test_reader_survives_concurrent_publish_and_gc).
         self.keep_generations = max(2, keep_generations)
         # Concurrency contract: publishes are serialized by per-
-        # generation CLAIM files (``_claim-<N>``, created with
-        # overwrite=False — atomic-exclusive on HDFS; exists+create on
-        # the local FS, adequate for the crash cases it arbitrates).
-        # Exactly one writer can claim generation N, so two concurrent
-        # writers can never both rename onto ``_manifest-<N>.json`` —
-        # the loser raises ConcurrentWriteError BEFORE writing any data
-        # instead of silently dropping the winner's generation
-        # (last-rename-wins). A claim left by a crashed writer blocks
-        # its generation until ``claim_ttl_sec`` has passed, after
-        # which exactly ONE writer takes it over (arbitrated by an
-        # exclusive reap-lock create). TTL CONTRACT: claim_ttl_sec must exceed
-        # the longest write job the table can see — a takeover of a
-        # merely-SLOW living writer re-opens the very race the claims
-        # close (the default is deliberately generous; size it to your
-        # write SLA, or disable takeover with claim_ttl_sec=inf and
-        # clear crashed claims operationally). On object storage (no
-        # atomic create/rename) use a real commit service —
-        # MIGRATION.md maps this onto Delta's LogStore.
+        # generation CLAIM files (``_claim-<N>``, exclusive create — see
+        # _create_exclusive), so the loser of a race for generation N
+        # raises ConcurrentWriteError BEFORE writing any data instead of
+        # last-rename-wins dropping a generation. A crashed writer's
+        # claim is taken over after ``claim_ttl_sec``
+        # (_takeover_stale_claim). TTL CONTRACT: it must exceed the
+        # longest write job — taking over a merely SLOW writer re-opens
+        # the race (or pass inf and clear crashed claims by hand).
         self.claim_ttl_sec = claim_ttl_sec
         # Claim INSTANCE keys (mtime at claim/takeover time) for claims
         # THIS writer holds — _release_claim releases only the recorded
         # instance, never a successor's fresh claim (see its docstring).
         self._claimed_instances: dict[int, int] = {}
+        # (app_id, version) of the open transaction(), if any
+        self._txn: tuple[str, int] | None = None
 
     # -- filesystem plumbing -------------------------------------------
 
@@ -244,19 +252,16 @@ class BucketedParquetStore:
 
     def _create_exclusive(self, rel: str) -> bool:
         """Atomically create ``rel`` as a zero-byte lock file; False if
-        it already exists. Only a lost-the-race condition maps to
-        False — a real IO/permission failure re-raises instead of
-        masquerading as a concurrency conflict (which would send the
-        operator chasing a phantom writer).
+        it already exists. Only a lost race maps to False — a real
+        IO/permission failure re-raises instead of posing as a
+        concurrency conflict.
 
-        Scheme matters for atomicity: ``fs.create(overwrite=False)``
-        is atomic on HDFS (namenode arbitration) but CHECK-THEN-ACT on
-        RawLocalFileSystem — two local writers crossing the window both
-        'win' and double-claim a generation (caught live by the
-        two-writer race test). On file:// the lock therefore goes
-        through ``java.io.File.createNewFile`` (POSIX O_CREAT|O_EXCL —
-        the kernel arbitrates). Object stores without atomic create
-        need a commit service (MIGRATION.md → Delta LogStore)."""
+        ``fs.create(overwrite=False)`` is atomic on HDFS but
+        CHECK-THEN-ACT on RawLocalFileSystem (two local writers could
+        both 'win'), so on file:// the lock goes through
+        ``java.io.File.createNewFile`` (O_CREAT|O_EXCL). Object stores
+        without atomic create need a commit service (MIGRATION.md →
+        Delta LogStore)."""
         jvm, fs, root = self._fs()
         if not fs.exists(root):
             fs.mkdirs(root)
@@ -300,44 +305,23 @@ class BucketedParquetStore:
             raise
         return int(st.getModificationTime())
 
-    def _age_of(self, rel: str) -> float | None:
-        """Seconds since ``rel``'s modification time, None if absent
-        (error contract per :meth:`_mtime_of`)."""
-        m = self._mtime_of(rel)
-        return None if m is None else time.time() - m / 1000.0
-
     def _takeover_stale_claim(self, gen: int) -> bool:
         """Single-winner takeover of a stale claim. The arbitration is
         an EXCLUSIVE create of a reap-lock file whose NAME is keyed to
-        the stale claim INSTANCE (its mtime): all blocked writers cross
-        the TTL at the same wall-clock moment and race, but racers for
-        the same instance compute the same reap name, so exactly one
-        wins the create. Instance keying is what makes inline deletion
-        of 'abandoned' reap files unnecessary — an earlier design
-        deleted a reap older than the TTL and re-created it, which let
-        a second racer (whose age read predated the re-create) delete
-        the winner's FRESH reap and double-claim the generation. A
-        reap file for instance M is inert the moment claim M is gone
-        (later takeovers key on the new instance); it is GC'd by
-        ``_vacuum`` with its generation.
+        the stale claim INSTANCE (its mtime): racers for the same
+        instance compute the same reap name, so exactly one wins, and
+        no reap file is ever deleted inline (deleting and re-creating
+        one let a second racer double-claim). A reap file for instance
+        M is inert once claim M is gone; ``_vacuum`` collects it.
 
         Holding the reap lock, the winner re-verifies the claim is
-        STILL instance M (a completed parallel takeover or a release +
-        re-claim replaces it with a fresh instance), deletes it, and
-        claims normally. The mtime equality check — not just an age
-        check — is what stops a reaper from deleting a successor's
-        fresh claim.
-
-        Liveness caveat (documented, loud): a reaper that crashes
-        INSIDE the two-metadata-op critical section leaves reap-M held
-        with claim M still present; takeover of that instance then
-        needs operator intervention (delete both files), signalled by
-        :class:`ConcurrentWriteError` from the ordinary path. That
-        window is two FS metadata calls — vastly narrower than the
-        crashed-WRITER window the TTL exists for — and trading it for
-        silent double-claim corruption is the right side of the trade.
-        Perfect mutual exclusion on object storage needs a commit
-        service (MIGRATION.md maps this onto Delta's LogStore)."""
+        STILL instance M (mtime equality, not just age — a successor's
+        fresh claim must never be deleted), deletes it, and claims.
+        A reaper that crashes inside those two metadata calls leaves
+        reap-M and claim M behind; that instance then needs an operator
+        to delete both (signalled by :class:`ConcurrentWriteError`).
+        Object storage needs a commit service (MIGRATION.md → Delta's
+        LogStore)."""
         _, fs, _ = self._fs()
         claim = f"_claim-{gen}"
         m = self._mtime_of(claim)
@@ -376,7 +360,8 @@ class BucketedParquetStore:
             if self._try_claim(gen):
                 return self._record_claim_instance(gen)
         gen = self._next_gen()
-        age = self._age_of(f"_claim-{gen}")
+        m = self._mtime_of(f"_claim-{gen}")
+        age = None if m is None else time.time() - m / 1000.0
         if age is not None and age > self.claim_ttl_sec:
             if self._takeover_stale_claim(gen):
                 return self._record_claim_instance(gen)
@@ -398,17 +383,12 @@ class BucketedParquetStore:
         return gen
 
     def _release_claim(self, gen: int) -> None:
-        """Vacate a claim after a FAILED write so the generation is not
-        blocked until the TTL. No-op once the manifest is published
-        (the claim then guards the number against stale racers).
-
-        Deletes ONLY the claim instance this writer recorded at claim
-        time (mtime equality — the same instance keying
-        :meth:`_takeover_stale_claim` uses): a slow-but-live writer
-        that exceeded the TTL, was taken over, and then failed must
-        not delete the SUCCESSOR's fresh claim — that would let a
-        third writer claim the same generation and race the
-        successor's in-flight write."""
+        """Vacate a claim after a write that did not publish, so the
+        generation is not blocked until the TTL. No-op once the
+        manifest is published (the claim then guards the number).
+        Deletes ONLY the claim instance this writer recorded (mtime
+        equality): a slow writer that was taken over must not delete
+        its SUCCESSOR's claim and let a third writer race it."""
         _, fs, _ = self._fs()
         instance = self._claimed_instances.pop(gen, None)
         if instance is None:
@@ -423,6 +403,7 @@ class BucketedParquetStore:
         buckets: dict[int, list[str]],
         stats: dict[str, dict] | None = None,
         schema_json: str | None = None,
+        txn: dict[str, int] | None = None,
     ) -> dict:
         """Atomically publish generation ``gen`` (which the caller must
         have CLAIMED): write the manifest to a .tmp file and rename to
@@ -431,8 +412,9 @@ class BucketedParquetStore:
         per-column min/max; only entries for dirs actually referenced
         by ``buckets`` are kept. ``schema_json`` records the table
         schema in the manifest (so an EMPTY table — e.g. after a
-        delete-all — still reads with a typed schema). Returns the
-        published manifest doc."""
+        delete-all — still reads with a typed schema); ``txn`` the
+        app id → last committed version map. Returns the published
+        manifest doc."""
         _, fs, _ = self._fs()
         live_dirs = {d for dirs in buckets.values() for d in dirs}
         doc = {
@@ -447,15 +429,14 @@ class BucketedParquetStore:
         }
         if kept_stats:
             doc["stats"] = kept_stats
+        if txn:
+            doc["txn"] = txn
         payload = json.dumps(doc, indent=0, sort_keys=True).encode()
         tmp = self._jpath(f"_manifest-{gen}.json.tmp")
         final = self._jpath(f"_manifest-{gen}.json")
         if fs.exists(final):
-            # A manifest for OUR claimed generation can only appear if
-            # the claim protocol was bypassed (e.g. two writers with
-            # clock-skewed TTL takeover). Never overwrite a published
-            # manifest — that is exactly the silent lost-generation
-            # failure the claims exist to prevent.
+            # Only a bypassed claim protocol (e.g. clock-skewed TTL
+            # takeover) gets here; never overwrite a published manifest.
             raise ConcurrentWriteError(
                 f"manifest for generation {gen} of {self.path} already "
                 "published by another writer; this write is lost — "
@@ -527,6 +508,27 @@ class BucketedParquetStore:
         ``keep_generations`` publishes (older ones are vacuumed)."""
         return self._manifest_gens()
 
+    def txn_version(self, app_id: str) -> int:
+        """The last version committed in a :meth:`transaction` of
+        ``app_id``, -1 when it has none."""
+        man = self._latest_manifest()
+        return -1 if man is None else man.get("txn", {}).get(app_id, -1)
+
+    @contextmanager
+    def transaction(self, app_id: str, version: int) -> Iterator[None]:
+        """Make the writes inside the block idempotent on
+        ``(app_id, version)``: each commit publishes the pair in its
+        manifest, and a commit whose version is at or below the one
+        recorded for ``app_id`` publishes nothing. Versions of one app
+        must only grow (streaming batch ids do). A second write to this
+        store in the same block is skipped like a replay, as Delta
+        skips a second write carrying the same ``txnVersion``."""
+        prev, self._txn = self._txn, (str(app_id), int(version))
+        try:
+            yield
+        finally:
+            self._txn = prev
+
     def current_manifest(self) -> dict:
         man = self._latest_manifest()
         if man is None:
@@ -537,20 +539,12 @@ class BucketedParquetStore:
         """Time-travel read: the table exactly as generation ``gen``
         published it (manifests pin immutable files, so this is free —
         the same mechanism as Delta's VERSION AS OF, bounded by
-        ``keep_generations``)."""
+        ``keep_generations``), schema-pinned like :meth:`read`."""
         if gen not in self._manifest_gens():
             raise ValueError(
                 f"generation {gen} not retained; have {self._manifest_gens()}"
             )
-        man = self._read_manifest(gen)
-        dirs = [
-            f"{self.path}/{d}"
-            for dd in man["buckets"].values()
-            for d in dd
-        ]
-        if not dirs:
-            raise FileNotFoundError(f"generation {gen} has no data")
-        return self.spark.read.parquet(*dirs)
+        return self._read(self._read_manifest(gen))
 
     def read_changes(
         self, from_gen: int, to_gen: int | None = None
@@ -917,11 +911,8 @@ class BucketedParquetStore:
         out = f"{self.path}/data/g{gen}"
         _, fs, _ = self._fs()
         if fs.exists(self._jpath(f"_manifest-{gen}.json")):
-            # Last-ditch guard behind the claim protocol: if this
-            # generation already PUBLISHED, our claim was stolen in a
-            # takeover race — deleting/rewriting its data dirs now
-            # would silently corrupt a live, published generation.
-            # Fail loudly instead; the published state is untouched.
+            # Our claim was stolen in a takeover race: rewriting its
+            # dirs would corrupt a published generation. Fail loudly.
             raise ConcurrentWriteError(
                 f"generation {gen} of {self.path} is already published; "
                 "refusing to rewrite its data (claim was taken over by "
@@ -1064,10 +1055,20 @@ class BucketedParquetStore:
         authoritative); any failure releases the claim. ``drop``: the
         buckets whose dirs the new generation replaces (``()`` appends,
         ``None`` rewrites the whole table and its schema).
-        ``expected_gen`` (-1: no manifest) is the OCC check."""
+        ``expected_gen`` (-1: no manifest) is the OCC check. Nothing is
+        published for a replayed :meth:`transaction`, nor when a write
+        into a table with no manifest lands no rows (only ``init``
+        creates an empty table)."""
         gen = self.claim_next_generation()
         try:
             man = self._latest_manifest()
+            txn = dict(man.get("txn", {})) if man is not None else {}
+            if self._txn is not None:
+                app_id, version = self._txn
+                if txn.get(app_id, -1) >= version:  # a replay
+                    self._release_claim(gen)
+                    return
+                txn[app_id] = version
             base_gen = -1 if man is None else int(man["gen"])
             if expected_gen is not None and base_gen != int(expected_gen):
                 raise ConcurrentWriteError(
@@ -1090,6 +1091,9 @@ class BucketedParquetStore:
                 }
                 stats = dict(man.get("stats", {}))  # kept dirs keep stats
             written = self._write_generation(df, gen)
+            if man is None and drop is not None and not written:
+                self._release_claim(gen)
+                return
             for b, d in written.items():
                 buckets.setdefault(b, []).append(d)
             stats.update(self._collect_stats(gen, written, df.columns))
@@ -1098,6 +1102,7 @@ class BucketedParquetStore:
                 {b: d for b, d in buckets.items() if d},
                 stats,
                 schema_json,
+                txn,
             )
             known = {gen: doc} if man is None else {gen: doc, base_gen: man}
             self._vacuum(known)

@@ -16,9 +16,14 @@ so the engine ships two interchangeable sinks behind one interface:
 
 At-scale notes: each micro-batch writes one multi-row statement per
 partition (the reference's execute_values batching, K7, generalized);
-partitions write in parallel; per-batch idempotence comes from the
-conflict clause, giving at-least-once end-to-end like the reference
-(T6) but with checkpointed offsets instead of an in-memory dict.
+partitions write in parallel. Replays (T6): a ``ParquetUpsertTable``
+write made inside its store's ``transaction(app_id, batch_id)`` is
+exactly-once — the manifest that publishes it records the batch id,
+so a replayed id writes nothing (the app's sink does this). The JDBC
+path has no such record: its conflict clause makes a replayed upsert
+converge, but the ``append_only`` log re-appends a replayed batch —
+at-least-once like the reference, with checkpointed offsets instead
+of an in-memory dict.
 """
 
 from __future__ import annotations

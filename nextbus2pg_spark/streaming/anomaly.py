@@ -63,6 +63,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nextbus2pg_spark.operators.metrics import staged
 from nextbus2pg_spark.operators.timeseries import rolling_anomaly
 
 
@@ -100,30 +101,36 @@ def anomaly_batch(
     (CUSUM note: its state implicitly resets at the horizon floor,
     since pruned points leave the recurrence — the documented
     streaming delta)."""
-    batch = batch_df.select(
-        F.col(key_col).alias("key"),
-        F.col(ts_col).alias("ts"),
-        F.col(value_col).cast("double").alias("value"),
-    ).where(F.col("value").isNotNull()).localCheckpoint()
-    if batch.isEmpty():
+    # The batch's size and max event time are observed in the job that
+    # stages it, the admitted rows' count in the job that stages them.
+    batch, seen = staged(
+        batch_df.select(
+            F.col(key_col).alias("key"),
+            F.col(ts_col).alias("ts"),
+            F.col(value_col).cast("double").alias("value"),
+        ).where(F.col("value").isNotNull()),
+        n=F.count(F.lit(1)),
+        mx=F.max("ts"),
+    )
+    if seen["n"] == 0:
         return
 
-    # (1) high-water mark and admission floor. Two 1-row aggregates,
-    # bounded; the stored side prunes to the ts column via parquet
-    # stats and the store is horizon-sized by construction.
-    batch_max = batch.agg(F.max("ts")).first()[0]
+    # (1) high-water mark and admission floor. The stored side is one
+    # bounded 1-row aggregate; the store is horizon-sized by
+    # construction.
     stored_max = None
     if points_store.exists():
         stored_max = points_store.read().agg(F.max("ts")).first()[0]
-    hwm = max(t for t in (batch_max, stored_max) if t is not None)
+    hwm = max(t for t in (seen["mx"], stored_max) if t is not None)
     floor = hwm - _dt.timedelta(seconds=horizon_seconds)
 
-    admitted = batch.where(F.col("ts") >= F.lit(floor)).localCheckpoint()
-    if late_sink is not None:
-        n_late = batch.count() - admitted.count()
-        if n_late:
-            late_sink(n_late, batch_id)
-    if admitted.isEmpty():
+    admitted, adm = staged(
+        batch.where(F.col("ts") >= F.lit(floor)), n=F.count(F.lit(1))
+    )
+    n_late = seen["n"] - adm["n"]
+    if late_sink is not None and n_late:
+        late_sink(n_late, batch_id)
+    if adm["n"] == 0:
         return
 
     # (2) idempotent point upsert — replayed batches land no dupes

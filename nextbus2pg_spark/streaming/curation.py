@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nextbus2pg_spark.operators.metrics import staged
 from nextbus2pg_spark.operators.text import (
     fingerprint,
     quality_score_col,
@@ -82,11 +83,14 @@ def curate_documents(
 
 def _start_foreach_batch(stream: DataFrame, fn, checkpoint_dir: str):
     """Shared writeStream wiring for every curation-family stage:
-    foreachBatch (skipping empty batches), checkpointed offsets,
-    availableNow trigger."""
+    foreachBatch, checkpointed offsets, availableNow trigger. Each
+    batch is staged once (``operators.metrics.staged``) and ``fn``
+    gets the staged rows; an empty batch, seen in that same job, is
+    skipped (T7)."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        batch_df, seen = staged(batch_df, n=F.count(F.lit(1)))
+        if seen["n"] == 0:
             return
         fn(batch_df, batch_id)
 
@@ -155,7 +159,6 @@ def start_neardup_dedup(
     rejected-pair evidence per batch — at-least-once, may replay."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint()  # probed + filtered + stored
         matches = index.add_unique(
             batch_df, id_col, text_col, min_est_jaccard
         ).localCheckpoint()

@@ -13,8 +13,12 @@ Pipeline (SURVEY.md §3 "Spark shape"):
 
 Semantics preserved from the reference:
 - event time = request time − secsSinceReport (T3, ``route.py:202``);
-- dedup within batch ONLY — the log is at-least-once across batches
-  (T4, ``agency.py:316-317``);
+- dedup within batch ONLY — a key reported again in a later batch is
+  appended again (T4, ``agency.py:316-317``);
+- replays: the reference re-appends a retried sweep (T6,
+  ``run.py:114-121``); here the app's sink appends inside the store's
+  transaction on the batch id, so a micro-batch the runtime replays
+  after a crash is written once (exactly-once);
 - empty batches are no-ops (T7, ``agency.py:303``): each micro-batch
   is staged once (``operators.metrics.staged``) and its row count is
   observed in that staging job, so the emptiness check costs no second
@@ -214,8 +218,10 @@ def start_ingest(
 ):
     """Wire the streaming query: micro-batch trigger (T1) +
     ``foreachBatch`` keyed sink, per-batch dedup (T4) inside the sink
-    boundary so retried batches rewrite identical rows (at-least-once,
-    T6).
+    boundary. A replayed batch carries its original ``batch_id`` and
+    identical rows; ``sink(rows, batch_id)`` makes the write
+    exactly-once by committing it in a store transaction on that id
+    (the app's sink; ``sinks/exactly_once.py``).
 
     ``dims_provider`` is called per batch — the static sides re-resolve
     each micro-batch, which is exactly the reference's per-sweep dim

@@ -173,17 +173,10 @@ def test_run_app_rollover_batch_resolves_against_refreshed_dims(
     assert landed == [1]
 
 
-def test_main_cli_end_to_end(spark, tmp_path):
-    """`python -m nextbus2pg_spark` assembly, one availableNow sweep:
-    agency bootstrap + dimension refresh from config-document
-    snapshots + DSv2 spool ingest with service resolution into the
-    vehicle_location store — run.py:35-121 end to end on real parts."""
-    import os
-
-    from nextbus2pg_spark.pipelines.app import main
-    from nextbus2pg_spark.sinks.upsert import ParquetUpsertTable
-    from nextbus2pg_spark.streaming.ingest import DEDUP_KEYS
-
+def _one_route_app(tmp_path, vehicles):
+    """Config snapshots of one route (38R, direction d1) and a spool
+    document reporting ``vehicles`` on d1; returns the argv of a
+    backfill run (``-r 0``) of ``main`` over them."""
     config = tmp_path / "config"
     spool = tmp_path / "spool"
     os.makedirs(config)
@@ -205,25 +198,42 @@ def test_main_cli_end_to_end(spark, tmp_path):
            </route></body>"""
     )
     (spool / "38R__1000000.xml").write_text(
-        '<body><vehicle id="v1" dirTag="d1" lon="-122.41" lat="37.71" '
-        'secsSinceReport="9" predictable="true"/>'
-        '<lastTime time="1000000"/></body>'
+        "<body>"
+        + "".join(
+            f'<vehicle id="{v}" dirTag="d1" lon="-122.41" lat="37.71" '
+            'secsSinceReport="9" predictable="true"/>'
+            for v in vehicles
+        )
+        + '<lastTime time="1000000"/></body>'
     )
-    main(
-        [
-            "-a", "sf-muni", "-r", "0",
-            "--spool", str(spool),
-            "--config", str(config),
-            "--checkpoint", str(tmp_path / "ckpt"),
-            "--store", str(tmp_path / "store"),
-        ],
-        spark=spark,
-    )
-    locations = ParquetUpsertTable(
+    return [
+        "-a", "sf-muni", "-r", "0",
+        "--spool", str(spool),
+        "--config", str(config),
+        "--checkpoint", str(tmp_path / "ckpt"),
+        "--store", str(tmp_path / "store"),
+    ]
+
+
+def _locations(spark, tmp_path):
+    from nextbus2pg_spark.sinks.upsert import ParquetUpsertTable
+    from nextbus2pg_spark.streaming.ingest import DEDUP_KEYS
+
+    return ParquetUpsertTable(
         spark, str(tmp_path / "store" / "vehicle_location"),
         key_cols=list(DEDUP_KEYS),
     )
-    rows = locations.read().collect()
+
+
+def test_main_cli_end_to_end(spark, tmp_path):
+    """`python -m nextbus2pg_spark` assembly, one availableNow sweep:
+    agency bootstrap + dimension refresh from config-document
+    snapshots + DSv2 spool ingest with service resolution into the
+    vehicle_location store — run.py:35-121 end to end on real parts."""
+    from nextbus2pg_spark.pipelines.app import main
+
+    main(_one_route_app(tmp_path, ["v1"]), spark=spark)
+    rows = _locations(spark, tmp_path).read().collect()
     assert len(rows) == 1
     assert rows[0].vehicle_tag == "v1"
     assert rows[0].service_id is not None  # resolved via the d1 service
@@ -233,6 +243,28 @@ def test_main_cli_end_to_end(spark, tmp_path):
     ).collect()
     assert agency[0].agency_id == "sf-muni"
     assert agency[0].region == "California"
+
+
+def test_main_replayed_batch_is_stored_once(spark, tmp_path):
+    """A crash after the sink wrote batch 0 but before Spark committed
+    it (its commit-log entry removed here) makes the restart replay
+    batch 0 with the same id; the store's manifest already records it,
+    so every key stays stored exactly once (T6 — the reference
+    re-appends a retried sweep)."""
+    from nextbus2pg_spark.pipelines.app import main
+
+    argv = _one_route_app(tmp_path, ["v1", "v2"])
+    main(argv, spark=spark)
+    table = _locations(spark, tmp_path)
+    gens = table.store.generations()
+    for name in ("0", ".0.crc"):
+        os.remove(tmp_path / "ckpt" / "commits" / name)
+    main(argv, spark=spark)
+    assert sorted(r.vehicle_tag for r in table.read().collect()) == [
+        "v1", "v2"
+    ]
+    assert table.store.generations() == gens
+    assert os.path.exists(tmp_path / "ckpt" / "commits" / "0")  # replayed
 
 
 def test_main_resolves_duplicate_direction_tags_per_route(spark, tmp_path):

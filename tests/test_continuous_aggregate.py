@@ -122,3 +122,31 @@ def test_approx_distinct_state_is_mergeable(spark, tmp_path):
     assert len(out) == 1
     assert out[0].n == 60          # rows add
     assert out[0].users == 50.0    # distinct users merge, overlap once
+
+
+def test_replayed_batch_id_counts_once(spark, tmp_path):
+    """A micro-batch the runtime replays carries its batch id again;
+    the sink's merge is skipped, so the counts do not double."""
+    ca = ContinuousAggregate(spark, str(tmp_path / "ca"), ["day"], AGGS)
+    sink = ca.sink()
+    sink(_rows(spark, [("d1", 1.0), ("d1", 2.0)]), 0)
+    gens = ca.store.generations()
+    sink(_rows(spark, [("d1", 1.0), ("d1", 2.0)]), 0)  # replay
+    assert ca.store.generations() == gens
+    sink(_rows(spark, [("d1", 4.0), ("d2", 7.0)]), 1)
+    got = {r.day: (r.n, r.total) for r in ca.read().collect()}
+    assert got == {"d1": (3, 7.0), "d2": (1, 7.0)}
+
+
+def test_empty_first_batch_publishes_nothing(spark, tmp_path):
+    """An empty batch into a new rollup lands no rows and publishes no
+    (empty) generation, through the sink or apply_batch; the first
+    non-empty batch then creates the table."""
+    ca = ContinuousAggregate(spark, str(tmp_path / "ca"), ["day"], AGGS)
+    empty = _rows(spark, [])
+    ca.sink()(empty, 0)
+    ca.apply_batch(empty)
+    assert not ca.exists()
+    ca.sink()(_rows(spark, [("d1", 2.0)]), 1)
+    assert ca.store.generations() == [0]
+    assert [(r.day, r.n) for r in ca.read().collect()] == [("d1", 1)]

@@ -1,12 +1,17 @@
-"""Idempotent sink tests: replayed batch ids commit at most once; torn
-writes (data without marker) are repaired by the replay."""
+"""Idempotent sink tests: replayed batch ids commit at most once; a
+write that crashed after its data landed but before its manifest
+published is invisible, and its replay leaves one copy."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+import pytest
+
 from nextbus2pg_spark.sinks.exactly_once import IdempotentParquetSink
+from nextbus2pg_spark.sinks.store import BucketedParquetStore
 
 
 def _batch(spark, tag):
@@ -23,15 +28,28 @@ def test_replayed_batch_commits_once(spark, tmp_path):
     assert sink.committed(0) and sink.committed(1)
 
 
-def test_torn_write_repaired_on_replay(spark, tmp_path):
+def test_torn_write_repaired_on_replay(spark, tmp_path, monkeypatch):
     sink = IdempotentParquetSink(str(tmp_path / "log"))
-    sink(_batch(spark, "b0"), batch_id=0)
-    # Simulate a crash AFTER data write, BEFORE marker: drop the marker.
-    os.remove(os.path.join(str(tmp_path / "log"), "_commits", "0"))
+    publish = BucketedParquetStore._publish
+    crashes = []
+
+    def crash_once(self, *args, **kwargs):
+        if not crashes:
+            crashes.append(1)
+            raise RuntimeError("crash after the data landed")
+        return publish(self, *args, **kwargs)
+
+    monkeypatch.setattr(BucketedParquetStore, "_publish", crash_once)
+    with pytest.raises(RuntimeError, match="crash after"):
+        sink(_batch(spark, "b0"), batch_id=0)
+    # The data landed, but the manifest that commits it never published.
+    assert os.listdir(tmp_path / "log" / "data" / "g0")
     assert not sink.committed(0)
-    sink(_batch(spark, "b0"), batch_id=0)  # replay overwrites its own dir
+    sink(_batch(spark, "b0"), batch_id=0)  # the replay publishes once
     assert sink.committed(0)
     assert sink.read(spark).count() == 2  # exactly one copy
+    sink(_batch(spark, "b0"), batch_id=0)  # a second replay is skipped
+    assert sink.read(spark).count() == 2
 
 
 def test_empty_batch_noop(spark, tmp_path):
@@ -41,33 +59,59 @@ def test_empty_batch_noop(spark, tmp_path):
     assert not sink.committed(0)  # nothing written, nothing marked
 
 
-def test_streaming_end_to_end_exactly_once(spark, tmp_path):
-    """Wire into start_ingest: restart replays nothing extra."""
-    import json
+_BASE = {
+    "route_tag": "38R", "dir_tag": "38R_out", "lon": "-122.4",
+    "lat": "37.7", "secs_since_report": "10", "predictable": "true",
+    "request_time_ms": 1706000000000,
+}
 
+
+def _ingest_runner(spark, tmp_path, sink):
+    """Feed dir + a function running one availableNow ingest of it
+    into ``sink`` on the checkpoint ``tmp_path/ck``."""
     from nextbus2pg_spark.sources.feed import RAW_FEED_SCHEMA
     from nextbus2pg_spark.streaming.ingest import start_ingest
 
     feed = tmp_path / "feed"
     feed.mkdir()
-    ck = str(tmp_path / "ck")
-    base = {
-        "route_tag": "38R", "dir_tag": "38R_out", "lon": "-122.4",
-        "lat": "37.7", "secs_since_report": "10", "predictable": "true",
-        "request_time_ms": 1706000000000,
-    }
-    with open(feed / "b1.json", "w") as f:
-        f.write(json.dumps(dict(base, vehicle_id="v1")) + "\n")
-
     rs = spark.createDataFrame([("38R_out", "svc")], "tag string, service_id string")
-    sink = IdempotentParquetSink(str(tmp_path / "log"))
 
     def run():
         stream = spark.readStream.schema(RAW_FEED_SCHEMA).json(str(feed))
-        q = start_ingest(stream, lambda: (rs, rs), sink, ck)
+        q = start_ingest(stream, lambda: (rs, rs), sink, str(tmp_path / "ck"))
         q.awaitTermination(120)
+
+    return feed, run
+
+
+def _publish_vehicle(feed, name, vehicle_id):
+    with open(feed / name, "w") as f:
+        f.write(json.dumps(dict(_BASE, vehicle_id=vehicle_id)) + "\n")
+
+
+def test_streaming_end_to_end_exactly_once(spark, tmp_path):
+    """Wire into start_ingest: restart replays nothing extra."""
+    sink = IdempotentParquetSink(str(tmp_path / "log"))
+    feed, run = _ingest_runner(spark, tmp_path, sink)
+    _publish_vehicle(feed, "b1.json", "v1")
 
     run()
     assert sink.read(spark).count() == 1
     run()  # restart with no new data → no-op
     assert sink.read(spark).count() == 1
+
+
+def test_wiped_checkpoint_new_rows_land(spark, tmp_path):
+    """A wiped checkpoint restarts batch ids at 0 under a new query
+    id, so its batch 0 is a new batch, not a replay: the new vehicle
+    lands (and v1, re-read from the feed, is appended again — cross-
+    batch duplicates are the reference's T4)."""
+    sink = IdempotentParquetSink(str(tmp_path / "log"))
+    feed, run = _ingest_runner(spark, tmp_path, sink)
+    _publish_vehicle(feed, "b1.json", "v1")
+    run()
+    shutil.rmtree(tmp_path / "ck")
+    _publish_vehicle(feed, "b2.json", "v2")
+    run()
+    tags = sorted(r.vehicle_tag for r in sink.read(spark).collect())
+    assert tags == ["v1", "v1", "v2"]

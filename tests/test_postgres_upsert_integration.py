@@ -263,12 +263,18 @@ def test_dimension_refresh_postgres_equals_parquet_store(pg, spark, tmp_path):
     )
     from nextbus2pg_spark.sinks.postgres import PostgresDimensionStore
     from nextbus2pg_spark.sinks.psql_dbapi import psql_connection_factory
+    from nextbus2pg_spark.sources.route_config import BODY_STOP_SCHEMA
     from tests.test_dimension_refresh import _inputs
 
     sock_dir = pg("SHOW unix_socket_directories")
     factory = psql_connection_factory(sock_dir)
 
     route_list, body, dirs, dstops = _inputs(spark)
+    # A titled stop without coordinates: its location is a struct of
+    # NULLs (not NULL), and its text is not NULL, in both stores.
+    body = body.unionByName(spark.createDataFrame(
+        [("38R", "nocoord", "No Coordinates", None, None)], BODY_STOP_SCHEMA
+    ))
     ts = dt.datetime(2024, 1, 15, 8, 0, 0)
 
     pstore = DimensionStore(spark, str(tmp_path / "dims"))
@@ -293,8 +299,10 @@ def test_dimension_refresh_postgres_equals_parquet_store(pg, spark, tmp_path):
         return {
             (
                 r.stop_id, r.route_id, r.tag, r.name,
-                None if r.location is None else
-                (round(r.location.lon, 9), round(r.location.lat, 9)),
+                None if r.location is None else tuple(
+                    None if v is None else round(v, 9)
+                    for v in (r.location.lon, r.location.lat)
+                ),
                 r.location_text,
             )
             for r in store.stop.read().collect()
@@ -309,6 +317,7 @@ def test_dimension_refresh_postgres_equals_parquet_store(pg, spark, tmp_path):
     assert canon_routes(gstore) == canon_routes(pstore)
     assert canon_services(gstore) == canon_services(pstore)
     assert canon_stops(gstore) == canon_stops(pstore)
+    assert (None, None) in {s[4] for s in canon_stops(pstore)}
     assert canon_sso(gstore) == canon_sso(pstore)
     assert len(canon_sso(gstore)) > 0
 

@@ -76,3 +76,24 @@ def test_streaming_scd2_history(spark, tmp_path):
         dt.date(2024, 7, 1),
     )
     assert table.read().count() == 4
+
+
+def test_replayed_batch_id_publishes_one_generation(spark, tmp_path):
+    """Running the foreachBatch writer twice with the same batch id
+    (a replay) publishes one generation, on the bootstrap and on a
+    merge alike."""
+    table = Scd2Table(
+        spark, str(tmp_path / "h"), key="route_tag", tracked=["title", "color"]
+    )
+    write = scd2_foreach_batch(
+        table, lambda bid, _df: dt.date(2024, 1, 1 + bid)
+    )
+    b0 = spark.createDataFrame([("r1", "Main", "red")], SCHEMA)
+    b1 = spark.createDataFrame([("r1", "Main St", "red")], SCHEMA)
+    write(b0, 0)
+    write(b0, 0)
+    assert table.store.generations() == [0]
+    write(b1, 1)
+    write(b1, 1)
+    assert table.store.generations() == [0, 1]
+    assert table.read().count() == 2  # r1 closed + r1 open

@@ -194,6 +194,39 @@ def test_append_never_rewrites_existing_files(spark, tmp_path):
     assert t.read().count() == 100
 
 
+def test_transaction_records_batch_and_skips_replays(spark, tmp_path):
+    """store.transaction(app_id, version): the manifest that publishes
+    a write records {app_id: version}; a write at or below the recorded
+    version publishes nothing; every publish carries the map forward;
+    apps are independent."""
+    store = BucketedParquetStore(spark, str(tmp_path / "t"), ["k"], n_buckets=2)
+    mk = lambda *ks: spark.createDataFrame(  # noqa: E731
+        [(k, 1) for k in ks], "k string, v int"
+    )
+    with store.transaction("a", 0):
+        store.append(mk("x", "y"))
+    with store.transaction("a", 0):  # replay
+        store.append(mk("x", "y"))
+    assert store.generations() == [0]
+    assert store.txn_version("a") == 0 and store.txn_version("b") == -1
+    store.append(mk("z"))  # outside a transaction: carried forward
+    with store.transaction("b", 0):  # another app's batch 0 lands
+        store.append(mk("w"))
+    assert store.current_manifest()["txn"] == {"a": 0, "b": 0}
+    upsert = lambda e, i: e.unionByName(i)  # noqa: E731
+    with store.transaction("a", 1):
+        store.merge(mk("q"), upsert)
+    with store.transaction("a", 1):  # a replayed merge
+        store.merge(mk("q"), upsert)
+    with store.transaction("a", 0):  # an older batch
+        store.append(mk("old"))
+    assert store.current_manifest()["gen"] == 3
+    assert store.current_manifest()["txn"] == {"a": 1, "b": 0}
+    assert sorted(r.k for r in store.read().collect()) == [
+        "q", "w", "x", "y", "z"
+    ]
+
+
 def test_null_safe_bucket_collocation(spark):
     """NULL and '' key forms must hash to the same bucket, or the
     COALESCE(key, '') merge would pair rows across bucket boundaries."""
