@@ -71,6 +71,75 @@ def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     return d / F.greatest(norm_a * norm_b, F.lit(1e-12))
 
 
+def _topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
+    """The per-query top-k every search operator returns through →
+    (query_id, match_id, sim, rank): ``rank`` 1..k per query by sim
+    DESC (Spark's default order: NaN first, NULL last), ties to the
+    smaller match_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("match_id").asc()
+    )
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "match_id", "sim", "rank")
+    )
+
+
+def _nearest(
+    cands: Column, score, k: int = 1, descending: bool = False
+) -> Column:
+    """The in-row nearest pick over an array of candidate structs that
+    carry an ``id`` field. Order contract:
+
+    - rank by ``score(candidate)`` in the caller's direction under
+      Spark's default order: NULL scores first when ascending, last
+      when descending; NaN is the greatest double (NaN == NaN, and
+      -0.0 == 0.0);
+    - break ties by candidate id, ascending (an id of any orderable
+      type — it is never negated).
+
+    ``k == 1`` returns the picked id — one linear ``array_min`` over
+    (score key, id) structs — or NULL for an empty array. ``k > 1``
+    returns the array of up to ``k`` ids in rank order (``sort_array``
+    plus ``slice``; ``[]`` for an empty array). Neither raises under
+    ANSI. A descending key is the flat struct ``(score IS NULL, NOT
+    isnan(score), -score, id)``, whose ascending order is the
+    descending score order. It is built from an already-scored array
+    because Spark shares no subexpression inside a lambda (the score
+    would be evaluated three times), and kept flat because Spark sorts
+    nested structs about twice as slowly. Pinned against reference
+    window and join formulations by
+    tests/test_operators.py::test_ivf_assign_matches_window_formulation
+    and ::test_pq_encode_matches_join_formulation, and against a
+    model of this contract by ::test_nearest_pick_order_contract.
+    """
+    keys = F.transform(
+        cands, lambda c: F.struct(score(c).alias("s"), c["id"].alias("id"))
+    )
+    if descending:
+        keys = F.transform(
+            keys,
+            lambda x: F.struct(
+                x["s"].isNull(), ~F.isnan(x["s"]), -x["s"], x["id"].alias("id")
+            ),
+        )
+    if k == 1:
+        return F.array_min(keys)["id"]
+    return F.slice(F.sort_array(keys), 1, k)["id"]
+
+
+def _collect_row(df: DataFrame, name: str) -> DataFrame:
+    """Collapse a small candidate table (centroids, a codebook) into
+    ONE row holding the array ``name`` of its rows as structs — the
+    single-row broadcast every in-row :func:`_nearest` pick reads. One
+    task collects it (``coalesce(1)``: no shuffle). The collected
+    order is irrelevant: the pick is a total order."""
+    return df.coalesce(1).agg(
+        F.collect_list(F.struct(*df.columns)).alias(name)
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -146,14 +215,7 @@ def cosine_topk(
         .where(F.col("query_id") != F.col("match_id"))
         .select("query_id", "match_id", sim.alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("match_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "sim", "rank")
-    )
+    return _topk_per_query(pairs, k)
 
 
 def _plane_component(table: int, bit: Column, dim: Column) -> Column:
@@ -286,14 +348,7 @@ def lsh_topk(
         .join(q, "query_id")
         .select("query_id", "match_id", sim.alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("match_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "sim", "rank")
-    )
+    return _topk_per_query(pairs, k)
 
 
 # ---------------------------------------------------------------------------
@@ -353,10 +408,7 @@ def kmeans_centroids(
         "centroid_id",
         F.transform("c_vec", lambda x: x.cast("double")).alias("c_vec"),
     )
-    # Assignment is map-only since round 13 (_nearest_centroids), so
-    # the member vectors ride along in the same row — the old
-    # assigned-⋈-corpus join-back (one full shuffle of the training
-    # set per Lloyd iteration) is gone.
+    # Assignment is map-only, so the member vectors ride in-row.
     vsrc = with_norm(
         corpus.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("__vec")
@@ -365,107 +417,85 @@ def kmeans_centroids(
         "__n",
     )
     for _ in range(n_iters):
-        members = _nearest_centroids(
+        members = _assign_centroids(
             vsrc, cents, nprobe=1, vec_col="__vec", norm_col="__n"
         )
-        mean_agg = (
-            _fold_mean(F.col("id"), F.col("val").cast("double"))
-            if deterministic
-            else F.avg(F.col("val").cast("double"))
-        )
-        means = (
-            members.select(
-                "centroid_id", "id", F.posexplode("__vec").alias("pos", "val")
-            )
-            .groupBy("centroid_id", "pos")
-            .agg(mean_agg.alias("m"))
-            .groupBy("centroid_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("s")
-            )
-            .select(
-                "centroid_id",
-                F.transform("s", lambda x: x["m"]).alias("new_vec"),
-            )
-        )
-        cents = (
-            cents.join(means, "centroid_id", "left")
-            .select(
-                "centroid_id",
-                F.coalesce("new_vec", "c_vec").alias("c_vec"),
-            )
-            .localCheckpoint(eager=True)
+        cents = _lloyd_update(
+            cents, members, ["centroid_id"], "__vec", deterministic
         )
     return cents
 
 
-def _nearest_centroids(
+def _lloyd_update(
+    cents: DataFrame,
+    members: DataFrame,
+    key: "list[str]",
+    vec_col: str,
+    deterministic: bool,
+) -> DataFrame:
+    """One Lloyd mean step, shared by :func:`kmeans_centroids` (keyed
+    by ``centroid_id``) and :func:`pq_train` (keyed by ``(sub,
+    code_id)``): each centroid of ``cents`` (``*key, c_vec``) becomes
+    the element-wise mean of its ``members``' ``vec_col`` (``members``
+    carries ``*key, id, vec_col``) — posexplode, then the per-(key,
+    pos) mean (``_fold_mean`` over the member-id-sorted values when
+    ``deterministic``, else ``F.avg``), then re-pack by pos. A
+    centroid with no members keeps its vector (left join + coalesce),
+    so the centroid set's shape is stable. The result is eagerly
+    checkpointed: the next iteration's assignment collects it and the
+    lineage stays flat."""
+    val = F.col("val").cast("double")
+    mean = _fold_mean(F.col("id"), val) if deterministic else F.avg(val)
+    means = (
+        members.select(*key, "id", F.posexplode(vec_col).alias("pos", "val"))
+        .groupBy(*key, "pos")
+        .agg(mean.alias("m"))
+        .groupBy(*key)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("s"))
+        .select(*key, F.transform("s", lambda x: x["m"]).alias("new_vec"))
+    )
+    return (
+        cents.join(means, key, "left")
+        .select(*key, F.coalesce("new_vec", "c_vec").alias("c_vec"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _assign_centroids(
     v: DataFrame,
     centroids: DataFrame,
     nprobe: int = 1,
     vec_col: str = "__v",
     norm_col: str = "__vn",
 ) -> DataFrame:
-    """MAP-ONLY nearest-centroid ranking: collapse the k-row centroid
-    table into ONE collected array row, broadcast that single row, and
-    rank the candidates per vector with an in-row sort — appends an
-    exploded ``centroid_id`` while every input column passes through.
-
-    Until round 13 assignment crossJoined the corpus against the k
-    broadcast centroid ROWS (×k row multiplication) and then paid a
-    ``row_number`` window — a full shuffle plus sort of n·k rows — just
-    to take the per-id top-nprobe (guide §2.4: the window exchange was
-    the ONLY shuffle assignment paid, and it grows with n·k). The
-    in-row comparator reproduces the window's ``(sim DESC NULLS LAST,
-    centroid_id ASC)`` order bit-exactly: Spark's comparison operators
-    already give doubles the NaN-greatest / NaN==NaN total order the
-    window sort used, and NULL sims are ordered last explicitly.
-    Verified row-identical against the window formulation across
-    sf/k/nprobe combinations before the switch.
-    """
-    c = with_norm(
-        centroids.withColumnRenamed("c_vec", "__cv"), "__cv", "__cn"
-    )
-    carr = c.agg(
-        F.collect_list(
-            F.struct(
-                F.col("centroid_id").alias("cid"),
-                F.col("__cv").alias("cv"),
-                F.col("__cn").alias("cn"),
-            )
-        ).alias("__cents")
-    )
-    sims = F.transform(
-        F.col("__cents"),
-        lambda x: F.struct(
-            cosine(
-                F.col(vec_col), x["cv"], F.col(norm_col), x["cn"]
-            ).alias("sim"),
-            x["cid"].alias("cid"),
+    """Map-only centroid assignment: ``v`` with a ``centroid_id``
+    column appended — one row per each of the vector's ``nprobe``
+    nearest centroids by cosine (:func:`_nearest`, descending, ties to
+    the smaller centroid id) — while every input column passes
+    through. The centroid table is collapsed into one broadcast row
+    (:func:`_collect_row`), so the corpus side never shuffles. An
+    empty centroid table assigns nothing (no rows)."""
+    carr = _collect_row(
+        with_norm(centroids, "c_vec", "cn").select(
+            F.col("centroid_id").alias("id"), "c_vec", "cn"
         ),
+        "__cents",
     )
-    ranked = F.array_sort(
-        sims,
-        lambda a, b: F.when(
-            a["sim"].isNull() & b["sim"].isNull(),
-            F.when(a["cid"] < b["cid"], F.lit(-1))
-            .when(a["cid"] > b["cid"], F.lit(1))
-            .otherwise(F.lit(0)),
-        )
-        .when(a["sim"].isNull(), F.lit(1))
-        .when(b["sim"].isNull(), F.lit(-1))
-        .when(a["sim"] > b["sim"], F.lit(-1))
-        .when(a["sim"] < b["sim"], F.lit(1))
-        .when(a["cid"] < b["cid"], F.lit(-1))
-        .when(a["cid"] > b["cid"], F.lit(1))
-        .otherwise(F.lit(0)),
+    pick = _nearest(
+        F.col("__cents"),
+        lambda c: cosine(
+            F.col(vec_col), c["c_vec"], F.col(norm_col), c["cn"]
+        ),
+        k=nprobe,
+        descending=True,
     )
     out_cols = list(v.columns)
-    return (
-        v.crossJoin(F.broadcast(carr))
-        .select(*out_cols, F.explode(F.slice(ranked, 1, nprobe)).alias("__t"))
-        .select(*out_cols, F.col("__t.cid").alias("centroid_id"))
-    )
+    both = v.crossJoin(F.broadcast(carr))
+    if nprobe == 1:
+        return both.where(F.size("__cents") > 0).select(
+            *out_cols, pick.alias("centroid_id")
+        )
+    return both.select(*out_cols, F.explode(pick).alias("centroid_id"))
 
 
 def ivf_assign(
@@ -477,17 +507,17 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroids → (id,
     centroid_id) rows. Centroids broadcast (as ONE collected array
-    row); the corpus never shuffles for assignment — since round 13
-    the per-id ranking is an in-row sort, not a window, so assignment
-    is a pure map stage (see :func:`_nearest_centroids`). nprobe=1 for
-    indexing, >1 for query-side probing.
+    row); the corpus never shuffles for assignment — the per-id
+    ranking is an in-row pick, so assignment is a pure map stage (see
+    :func:`_assign_centroids`). nprobe=1 for indexing, >1 for
+    query-side probing.
     """
     v = with_norm(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__v")),
         "__v",
         "__vn",
     )
-    return _nearest_centroids(v, centroids, nprobe).select(
+    return _assign_centroids(v, centroids, nprobe).select(
         "id", "centroid_id"
     )
 
@@ -642,10 +672,8 @@ def ivf_topk(
         )
     else:
         cents = ivf_centroids(corpus, id_col, vec_col, n_centroids)
-    # Map-only assignment (round 13, _nearest_centroids) keeps the
-    # vectors in-row, so the old assigned-⋈-corpus join-backs — one a
-    # CORPUS-wide shuffle join — are gone from both sides.
-    c = _nearest_centroids(
+    # Map-only assignment keeps the vectors in-row on both sides.
+    c = _assign_centroids(
         with_norm(corpus, vec_col, "t_norm").select(
             F.col(id_col).alias("match_id"),
             F.col(vec_col).alias("t_vec"),
@@ -653,7 +681,7 @@ def ivf_topk(
         ),
         cents, nprobe=1, vec_col="t_vec", norm_col="t_norm",
     )
-    q = _nearest_centroids(
+    q = _assign_centroids(
         with_norm(queries, vec_col, "q_norm").select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("q_vec"),
@@ -671,14 +699,7 @@ def ivf_topk(
         .select("query_id", "match_id", sim.alias("sim"))
         .distinct()  # a pair can meet via several probed centroids
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("match_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "sim", "rank")
-    )
+    return _topk_per_query(pairs, k)
 
 
 def recall_at_k(exact: DataFrame, approx: DataFrame) -> float:
@@ -786,14 +807,7 @@ def cosine_topk_vectorized(
     partial = corpus.select(id_col, vec_col).mapInPandas(
         topk_partition, schema=out_schema
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("match_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "sim", "rank")
-    )
+    return _topk_per_query(partial, k)
 
 
 # ---------------------------------------------------------------------------
@@ -846,48 +860,35 @@ def _sub_slices(vec_col: str, m: int, subdim: int):
     )
 
 
-def _code_book_row(codebook: DataFrame) -> DataFrame:
-    """Collapse the (sub, code_id, c_vec) codebook into ONE collected
-    array row (``__book``) for a single-row broadcast — the
-    :func:`_nearest_centroids` recipe applied per subspace. The
-    collected order is irrelevant: every consumer reduces the array
-    with an order-free total-order argmin (:func:`_nearest_code`)."""
-    return codebook.agg(
-        F.collect_list(
-            F.struct(
-                F.col("sub").alias("bsub"),
-                F.col("code_id").alias("bcid"),
-                F.col("c_vec").alias("bvec"),
-            )
-        ).alias("__book")
+def _book_row(codebook: DataFrame) -> DataFrame:
+    """The (sub, code_id, c_vec) codebook as one broadcastable
+    ``__book`` array row (:func:`_collect_row`)."""
+    return _collect_row(
+        codebook.select("sub", F.col("code_id").alias("id"), "c_vec"),
+        "__book",
     )
 
 
-def _nearest_code(sub: Column, sv: Column) -> Column:
-    """In-row argmin code id for one subvector against the broadcast
-    ``__book`` array — reproduces the round-8 formulation
-    ``min_by(code_id, struct(__d, code_id))`` over the broadcast-join
-    candidates bit-exactly: the same ``_l2sq`` distance fold and the
-    same (distance, code_id) struct order, taken by ``array_min``
-    (the ordering ``min_by`` and sorts use: NULL fields first, NaN
-    greatest, NaN == NaN). code_id is unique within a subspace, so
-    the minimum is independent of the collected order. A NULL
-    distance (NULL vector, or a vector too short for this subspace —
-    ``zip_with`` pads with NULL) therefore picks the smallest code_id,
-    as ``min_by`` did. A subspace missing from the codebook yields a
-    NULL code (``array_min`` of an empty array) where the old inner
-    join silently dropped the (id, sub) pair — unreachable for
-    pq_train-produced books, which cover every subspace. Pinned
-    against the old join+min_by formulation by
-    tests/test_operators.py::test_pq_encode_matches_join_formulation."""
-    cands = F.filter(F.col("__book"), lambda b: b["bsub"] == sub)
-    scored = F.transform(
-        cands,
-        lambda b: F.struct(
-            _l2sq(sv, b["bvec"]).alias("d"), b["bcid"].alias("cid")
-        ),
+def _code_of(sub: Column, sv: Column) -> Column:
+    """The code id of subvector ``sv`` in subspace ``sub`` against the
+    broadcast ``__book``: :func:`_nearest` ascending by squared L2
+    distance, ties to the smaller code id. A NULL distance (a NULL
+    vector, or one too short for this subspace — ``zip_with`` pads
+    with NULL) sorts first, so such a subvector gets the smallest code
+    id. A subspace missing from the codebook yields a NULL code."""
+    return _nearest(
+        F.filter(F.col("__book"), lambda b: b["sub"] == sub),
+        lambda b: _l2sq(sv, b["c_vec"]),
     )
-    return F.array_min(scored)["cid"]
+
+
+def _book_shape(codebook: DataFrame) -> "tuple[int, int]":
+    """(m, subdim) of a (sub, code_id, c_vec) codebook, read in one
+    Spark job (``coalesce(1)``: the aggregate needs no shuffle)."""
+    m, subdim = codebook.coalesce(1).agg(
+        F.max("sub") + 1, F.max(F.size("c_vec"))
+    ).first()
+    return m, subdim
 
 
 def pq_train(
@@ -954,55 +955,14 @@ def pq_train(
         )
     )
     for _ in range(n_iters):
-        # In-row assignment (round 14, the _nearest_centroids recipe
-        # per subspace): the old formulation broadcast-joined the
-        # codebook, paid a groupBy(id, sub) exchange of the n·m scored
-        # rows for the min_by, then a SECOND n·m-row shuffle join back
-        # onto sub_rows just to recover the subvectors for the means.
-        # Collapsing the codebook into one broadcast row makes the
-        # assignment a pure map stage with sv riding in-row — both
-        # corpus-sized exchanges per iteration are gone (guide §2.4);
-        # only the (sub, code, pos) means aggregate shuffles.
-        assigned = sub_rows.crossJoin(F.broadcast(_code_book_row(cents))).select(
-            "id",
-            "sub",
-            "sv",
-            _nearest_code(F.col("sub"), F.col("sv")).alias("code_id"),
+        # In-row assignment: sv rides in-row, so only the means
+        # aggregate shuffles.
+        assigned = sub_rows.crossJoin(F.broadcast(_book_row(cents))).select(
+            "id", "sub", "sv",
+            _code_of(F.col("sub"), F.col("sv")).alias("code_id"),
         )
-        mean_agg = (
-            _fold_mean(F.col("id"), F.col("val"))
-            if deterministic
-            else F.avg("val")
-        )
-        means = (
-            assigned
-            .select(
-                "sub", "code_id", "id", F.posexplode("sv").alias("pos", "val")
-            )
-            .groupBy("sub", "code_id", "pos")
-            .agg(mean_agg.alias("mval"))
-            .groupBy("sub", "code_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "mval"))).alias(
-                    "srt"
-                )
-            )
-            .select(
-                "sub",
-                "code_id",
-                F.transform("srt", lambda x: x["mval"]).alias("new_vec"),
-            )
-        )
-        # A code that loses all members keeps its previous vector so
-        # the codebook shape is stable.
-        cents = (
-            cents.join(means, ["sub", "code_id"], "left")
-            .select(
-                "sub",
-                "code_id",
-                F.coalesce("new_vec", "c_vec").alias("c_vec"),
-            )
-            .localCheckpoint(eager=True)
+        cents = _lloyd_update(
+            cents, assigned, ["sub", "code_id"], "sv", deterministic
         )
     return cents
 
@@ -1022,24 +982,17 @@ def pq_encode(
     The 100 TB point of PQ: after this one pass the corpus's search
     representation is m small ints per row (64-dim float64 → 8 bytes at
     the defaults, 64× smaller), so the ANN scan reads codes, never
-    vectors. Shape since round 14: the codebook collapses into ONE
-    collected row broadcast to every task, and each vector's m codes
-    are an in-row ``transform`` over its subvector slices
-    (:func:`_nearest_code` — bit-exact vs the old join+min_by, pinned
-    by a differential test). Encoding is a PURE MAP STAGE: the round-8
-    formulation exploded to n·m (id, sub, subvector) rows, paid a
-    groupBy(id, sub) exchange for the argmin and a second groupBy(id)
-    exchange to reassemble the arrays — at corpus scale two full
-    shuffles of the exploded relation, now zero (guide §2.4).
+    vectors. The codebook collapses into ONE collected row broadcast
+    to every task, and each vector's m codes are an in-row
+    ``transform`` over its subvector slices (:func:`_code_of`), so
+    encoding is a pure map stage. The codebook's shape is read in one
+    job (:func:`_book_shape`).
     """
-    m = codebook.select(F.max("sub")).first()[0] + 1
-    subdim = len(codebook.select("c_vec").first()[0])
+    m, subdim = _book_shape(codebook)
     unit = _unit(corpus.select(id_col, vec_col, *keep), vec_col)
     slices = _sub_slices(vec_col, m, subdim)
-    codes = F.transform(
-        slices, lambda s: _nearest_code(s["sub"], s["sv"])
-    )
-    return unit.crossJoin(F.broadcast(_code_book_row(codebook))).select(
+    codes = F.transform(slices, lambda s: _code_of(s["sub"], s["sv"]))
+    return unit.crossJoin(F.broadcast(_book_row(codebook))).select(
         F.col(id_col).alias("id"), codes.alias("codes"), *keep
     )
 
@@ -1050,8 +1003,7 @@ def _adc_lut(
     """Per-query ADC lookup table → (query_id, sub, code_id, part)
     where part = dot(query subvector, code centroid). Bounded:
     queries × m × n_codes rows."""
-    m = codebook.select(F.max("sub")).first()[0] + 1
-    subdim = len(codebook.select("c_vec").first()[0])
+    m, subdim = _book_shape(codebook)
     q = _unit(
         queries.select(F.col(id_col).alias("query_id"), vec_col), vec_col
     )
@@ -1069,18 +1021,6 @@ def _adc_lut(
             F.lit(0.0),
             lambda acc, v: acc + v,
         ).alias("part"),
-    )
-
-
-def _adc_rank(scored: DataFrame, k: int) -> DataFrame:
-    """Deterministic per-query top-k over ADC-summed similarities."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "sim", "rank")
     )
 
 
@@ -1117,7 +1057,7 @@ def pq_topk(
         .agg(F.round(F.sum("part"), 6).alias("sim"))
         .where(F.col("query_id") != F.col("match_id"))
     )
-    return _adc_rank(scored, k)
+    return _topk_per_query(scored, k)
 
 
 def ivfpq_topk(
@@ -1179,7 +1119,7 @@ def ivfpq_topk(
         .groupBy("query_id", "match_id")
         .agg(F.round(F.sum("part"), 6).alias("sim"))
     )
-    return _adc_rank(scored, k)
+    return _topk_per_query(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1410,10 +1350,9 @@ def semantic_dedup(
         # vectors back by id as before.
         v = _assign(assign_nprobe).join(vbase, "id")
     else:
-        # single-level assignment is map-only since round 13
-        # (_nearest_centroids): the vectors ride along in-row, so the
-        # corpus-wide membership-⋈-corpus join-back is gone.
-        v = _nearest_centroids(
+        # single-level assignment is map-only: the vectors ride
+        # along in-row.
+        v = _assign_centroids(
             vbase, cents, nprobe=assign_nprobe, vec_col="vec",
             norm_col="nrm",
         )

@@ -46,11 +46,12 @@ previous index state fully readable — sinks/store.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextbus2pg_spark.operators.similarity import (
-    _nearest_centroids,
+    _assign_centroids,
+    _topk_per_query,
     cosine,
     ivf_assign,
     ivf_centroids,
@@ -261,12 +262,8 @@ class IvfIndex:
         """Batch → storable index rows, assigned against ``cents``.
         ``epoch`` identifies which epoch's auxiliary model applies —
         unused by the raw codec, consumed by the PQ subclass to pick
-        the matching codebook.
-
-        Round 14 (guide §2.4): assignment is map-only with the batch
-        columns riding in-row (_nearest_centroids passthrough), so the
-        old ``ivf_assign → join back by id`` — a full shuffle of the
-        batch on a key the store layout never uses — is gone; encode
+        the matching codebook. Assignment is map-only with the batch
+        columns riding in-row (:func:`_assign_centroids`), so encoding
         is one map stage over the batch."""
         v = with_norm(
             vectors.select(
@@ -275,7 +272,7 @@ class IvfIndex:
             "vec",
             "norm",
         )
-        return _nearest_centroids(
+        return _assign_centroids(
             v, cents, nprobe=1, vec_col="vec", norm_col="norm"
         ).select("id", "centroid_id", "vec", "norm")
 
@@ -376,14 +373,7 @@ class IvfIndex:
             .select("query_id", "match_id", sim.alias("sim"))
             .distinct()  # a pair can meet via several probed cells
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("match_id").asc()
-        )
-        return (
-            pairs.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "match_id", "sim", "rank")
-        )
+        return _topk_per_query(pairs, k)
 
     def delete(
         self,
@@ -545,13 +535,8 @@ class IvfPqIndex(IvfIndex):
         """(id, centroid_id, codes): coarse assignment + PQ encoding
         against the epoch's codebook (the in-training one during a
         build — published and trained as one triple, so they always
-        match).
-
-        Round 14 (guide §2.4): both halves are map-only since the
-        in-row _nearest_centroids / pq_encode rewrites, so they
-        compose as two column computations over ONE pass of the batch
-        — the old ``assigned ⋈ codes`` id-join (a full shuffle of the
-        batch) is gone."""
+        match). Both halves are map-only, so they compose as two
+        column computations over ONE pass of the batch."""
         from nextbus2pg_spark.operators.similarity import pq_encode
 
         book = (
@@ -566,7 +551,7 @@ class IvfPqIndex(IvfIndex):
             "vec",
             "norm",
         )
-        assigned = _nearest_centroids(
+        assigned = _assign_centroids(
             v, cents, nprobe=1, vec_col="vec", norm_col="norm"
         )
         return pq_encode(
@@ -646,7 +631,6 @@ class IvfPqIndex(IvfIndex):
         only the probed cells' manifest buckets; per-candidate cost is
         ``pq_m`` lookup-adds against the per-query LUT (bounded:
         queries × m × n_codes rows, broadcast)."""
-        from pyspark.sql import Window as W
         from nextbus2pg_spark.operators.similarity import _adc_lut
 
         if epoch is None:
@@ -687,11 +671,4 @@ class IvfPqIndex(IvfIndex):
             .groupBy("query_id", "match_id")
             .agg(F.round(F.sum("part"), 6).alias("sim"))
         )
-        w = W.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("match_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "match_id", "sim", "rank")
-        )
+        return _topk_per_query(scored, k)

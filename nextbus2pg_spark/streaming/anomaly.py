@@ -154,9 +154,9 @@ def anomaly_batch(
     flags_store.upsert(flags)
 
     # (4) retention: points behind the floor leave the rolling state
+    # (a delete that matches nothing publishes nothing)
     stale = points_store.read().where(F.col("ts") < F.lit(floor))
-    if not stale.isEmpty():
-        points_store.delete(stale.select("key", "ts"))
+    points_store.delete(stale.select("key", "ts"))
 
 
 def start_rolling_anomaly(

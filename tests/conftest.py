@@ -4,7 +4,10 @@ correctness harness)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
+import types
+import uuid
 
 import duckdb
 import pytest
@@ -31,6 +34,33 @@ def spark():
     spark = get_spark("nextbus2pg-tests")
     yield spark
     spark.stop()
+
+
+@contextlib.contextmanager
+def count_jobs(spark):
+    """Count the Spark jobs started inside a ``with`` block::
+
+        with count_jobs(spark) as jobs:
+            frame = build_frame()
+        assert jobs.n == 1
+
+    The block runs under a fresh job group, and ``jobs.n`` is set on
+    exit from ``statusTracker().getJobIdsForGroup`` of that group
+    (AQE's map-stage jobs included). The caller's job group is
+    restored afterwards."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    jobs = types.SimpleNamespace(n=0)
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        yield jobs
+    finally:
+        jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
 
 
 def pytest_configure(config):

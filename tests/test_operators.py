@@ -11,6 +11,7 @@ from nextbus2pg_spark.operators.asof import asof_join_by_id
 from nextbus2pg_spark.operators.joins import top1_per_group, two_level_fallback
 from nextbus2pg_spark.operators.similarity import cosine_topk, lsh_topk
 from nextbus2pg_spark.operators.text import lang_id, n_words, token_count
+from tests.conftest import count_jobs
 
 
 def test_word_shingles_short_doc(spark):
@@ -256,12 +257,13 @@ def test_ivf_topk_recall_vs_exact(spark):
 
 
 def test_ivf_assign_matches_window_formulation(spark):
-    """Round-13 differential: the map-only in-row assignment
-    (_nearest_centroids — collected centroid array + comparator sort)
-    must reproduce the pre-round-13 crossJoin + row_number window
-    formulation ROW-IDENTICALLY, including the (sim DESC NULLS LAST,
-    centroid_id ASC) tie-break, Spark's NaN-greatest double order, and
-    nprobe > k truncation. The window replay below IS the old code."""
+    """Differential: the map-only in-row assignment (_nearest over a
+    collected centroid array) must reproduce the crossJoin +
+    row_number window formulation ROW-IDENTICALLY, including the (sim
+    DESC NULLS LAST, centroid_id ASC) tie-break, Spark's NaN-greatest
+    double order, NULL sims (a NULL or too-short vector: every
+    centroid ties, so the smallest ids win), and nprobe > k
+    truncation. The window replay below is the reference."""
     from pyspark.sql import Window
 
     from nextbus2pg_spark.operators.similarity import (
@@ -279,6 +281,13 @@ def test_ivf_assign_matches_window_formulation(spark):
     rows.append((201, rows[3][1]))           # exact twin → sim ties
     rows.append((202, [float("nan")] * 8))   # NaN sims rank FIRST
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    # assigned but never a centroid: NULL sims against every centroid
+    edge = df.unionByName(
+        spark.createDataFrame(
+            [(203, None), (204, [1.0, -2.0, 3.0])],
+            "vec_id long, embedding array<float>",
+        )
+    )
 
     def window_assign(d, cents, nprobe):
         c = with_norm(
@@ -309,24 +318,69 @@ def test_ivf_assign_matches_window_formulation(spark):
         for nprobe in (1, 3, k + 2):  # k + 2 exercises nprobe > k
             new = sorted(
                 map(tuple, ivf_assign(
-                    df, "vec_id", "embedding", cents, nprobe=nprobe
+                    edge, "vec_id", "embedding", cents, nprobe=nprobe
                 ).collect())
             )
             old = sorted(
-                map(tuple, window_assign(df, cents, nprobe).collect())
+                map(tuple, window_assign(edge, cents, nprobe).collect())
             )
             assert new == old, (k, nprobe)
 
 
+def test_nearest_pick_order_contract(spark):
+    """_nearest, the in-row pick behind IVF assignment and PQ encoding,
+    against a Python model of its order contract on random candidate
+    arrays holding NULL, NaN, ±0.0, ±inf, score ties and empty arrays:
+    both directions, k = 1 (array_min) and k = 3 (sort + slice)."""
+    import math
+    import random
+
+    from nextbus2pg_spark.operators.similarity import _nearest
+
+    rng = random.Random(7)
+    pool = [None, float("nan"), 0.0, -0.0, 1.0, -1.0, 2.5,
+            float("inf"), float("-inf")]
+    rows = [
+        (i, [(rng.choice(pool), c)
+             for c in rng.sample(range(20), rng.randint(0, 6))])
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(
+        rows, "i int, c array<struct<s: double, id: int>>"
+    )
+
+    def model(cands, desc):
+        def key(x):
+            s, c = x
+            null, nan = s is None, s is not None and math.isnan(s)
+            v = 0.0 if null or nan else s
+            if desc:  # NaN first, NULL last
+                return (null, not nan, -v, c)
+            return (not null, nan, v, c)  # NULL first, NaN last
+
+        return [c for _, c in sorted(cands, key=key)]
+
+    for desc in (False, True):
+        got = df.select(
+            "i",
+            _nearest(F.col("c"), lambda x: x["s"], 1, desc).alias("p1"),
+            _nearest(F.col("c"), lambda x: x["s"], 3, desc).alias("p3"),
+        ).collect()
+        for r in got:
+            want = model(rows[r["i"]][1], desc)
+            assert r["p1"] == (want[0] if want else None), (desc, r)
+            assert r["p3"] == want[:3], (desc, r)
+
+
 def test_pq_encode_matches_join_formulation(spark):
-    """Round-14 differential: the in-row PQ encoding (_nearest_code —
-    collected codebook row + in-row array_min argmin) must reproduce
-    the round-8 explode + broadcast-join + min_by(struct(d, code_id))
-    formulation ROW-IDENTICALLY, including distance ties broken by the
-    smaller code_id, zero vectors (epsilon-floored unit norm), a NaN
-    vector (NaN distances — NaN-greatest total order), and a NULL or
+    """Differential: the in-row PQ encoding (_code_of — _nearest over
+    a collected codebook row) must reproduce the explode +
+    broadcast-join + min_by(struct(d, code_id)) formulation
+    ROW-IDENTICALLY, including distance ties broken by the smaller
+    code_id, zero vectors (epsilon-floored unit norm), a NaN vector
+    (NaN distances — NaN-greatest total order), and a NULL or
     too-short vector (NULL distances — NULLs first, then the smallest
-    code_id). The replay below IS the old code. A codebook missing a
+    code_id). The replay below is the reference. A codebook missing a
     subspace yields a NULL code for it instead of raising."""
     from nextbus2pg_spark.operators.similarity import (
         _l2sq,
@@ -659,6 +713,24 @@ def test_setsim_join_matches_brute_force(spark):
         assert got == brute(t), f"threshold {t}: mismatch"
 
 
+def test_pq_encode_reads_codebook_shape_in_one_job(spark):
+    """pq_encode learns the codebook's (m, subdim) with one Spark job
+    (one aggregate, no shuffle) while building its frame; the frame
+    itself stays lazy."""
+    from nextbus2pg_spark.operators.similarity import pq_encode, pq_train
+
+    rows = [
+        (i, [float((i * 7 + d * 3) % 5 - 2) for d in range(8)])
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    book = pq_train(df, "vec_id", "embedding", m=4, n_codes=3, n_iters=1)
+    with count_jobs(spark) as jobs:
+        codes = pq_encode(df, book, "vec_id", "embedding")
+    assert jobs.n == 1
+    assert {len(r["codes"]) for r in codes.collect()} == {4}
+
+
 def test_cosine_topk_rejects_oversized_query_set(spark):
     """ADVICE r7 + r8: the expression brute-force path guards against
     corpus-sized query frames, but LAZILY — constructing the operator
@@ -672,14 +744,11 @@ def test_cosine_topk_rejects_oversized_query_set(spark):
     rows = [(i, [float(i), 1.0]) for i in range(50)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup() or [])
-    oversized = cosine_topk(
-        df, df, "vec_id", "embedding", k=2, max_queries=10
-    )
-    assert len(tracker.getJobIdsForGroup() or []) == jobs_before, (
-        "constructing cosine_topk must not run a Spark job"
-    )
+    with count_jobs(spark) as jobs:
+        oversized = cosine_topk(
+            df, df, "vec_id", "embedding", k=2, max_queries=10
+        )
+    assert jobs.n == 0, "constructing cosine_topk must not run a Spark job"
     with pytest.raises(Exception, match="max_queries"):
         oversized.collect()
 

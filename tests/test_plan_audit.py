@@ -1190,3 +1190,32 @@ def test_url_trap_plan_is_shuffle_free(spark):
     schema = re.search(r"ReadSchema: struct<([^>]*)>", p)
     cols = sorted(c.split(":")[0] for c in schema.group(1).split(",") if c)
     assert cols == ["doc_id"], p
+
+
+
+def test_ann_assignment_is_map_only(spark):
+    """IVF assignment (nprobe 1 and 3) and PQ encoding stay map-only:
+    the trained centroids / codebook reach every task as ONE collected
+    broadcast row (gathered by one task, no shuffle) and each vector's
+    pick is in-row — the plans hold no shuffle Exchange and no Window,
+    only the BroadcastExchange."""
+    from nextbus2pg_spark.catalog import load_table
+    from nextbus2pg_spark.operators.similarity import (
+        ivf_assign,
+        kmeans_centroids,
+        pq_encode,
+        pq_train,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    cents = kmeans_centroids(emb, "vec_id", "embedding", 8, n_iters=1)
+    book = pq_train(emb, "vec_id", "embedding", m=4, n_codes=8, n_iters=1)
+    plans = [
+        ivf_assign(emb, "vec_id", "embedding", cents, nprobe=n)
+        for n in (1, 3)
+    ] + [pq_encode(emb, book, "vec_id", "embedding")]
+    for df in plans:
+        p = plan_text(df)
+        assert "BroadcastExchange" in p, p
+        assert not re.search(r"\bExchange\b", p), p
+        assert "Window" not in p, p

@@ -147,6 +147,31 @@ def test_prune_truncates_trailing_windows_at_the_floor(spark, tmp_path):
     assert all(not r["is_anomaly"] for r in got.values())
 
 
+def test_retention_publishes_only_when_points_go_stale(spark, tmp_path):
+    """Retention is one keyed delete, and the store publishes nothing
+    for a delete that matches no row: a batch with no stale points
+    adds exactly one points generation (its upsert), and a batch that
+    moves the floor past stored points still removes them."""
+    points, flags = _stores(spark, tmp_path)
+
+    def gen():
+        return points.store.current_manifest()["gen"]
+
+    anomaly_batch(spark.createDataFrame(B1[:6], SCHEMA), points, flags,
+                  **PARAMS)
+    g0 = gen()
+    anomaly_batch(spark.createDataFrame(B1[6:], SCHEMA), points, flags,
+                  **PARAMS)
+    assert gen() == g0 + 1  # the upsert; no retention publish
+    assert points.read().count() == 12
+
+    later = [("k1", T0 + dt.timedelta(hours=2), 20.0)]
+    anomaly_batch(spark.createDataFrame(later, SCHEMA), points, flags,
+                  **PARAMS)
+    assert gen() == g0 + 3  # the upsert, then the retention delete
+    assert [r["ts"] for r in points.read().collect()] == [later[0][1]]
+
+
 def test_op_fn_swaps_in_cusum(spark, tmp_path):
     """The stage is operator-generic: a CUSUM op_fn rides the same
     lateness/retention/replay loop, and within the horizon the
