@@ -681,7 +681,22 @@ def ivf_topk(
         ),
         cents, nprobe=1, vec_col="t_vec", norm_col="t_norm",
     )
-    q = _assign_centroids(
+    return _ivf_scored(
+        c, _ivf_probes(queries, id_col, vec_col, cents, nprobe), k
+    )
+
+
+def _ivf_probes(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cents: DataFrame,
+    nprobe: int,
+) -> DataFrame:
+    """The query side of an IVF search → (query_id, q_vec, q_norm,
+    centroid_id): one row per query and each of its ``nprobe`` nearest
+    cells, the query vector riding in-row (:func:`_assign_centroids`)."""
+    return _assign_centroids(
         with_norm(queries, vec_col, "q_norm").select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("q_vec"),
@@ -690,11 +705,17 @@ def ivf_topk(
         cents, nprobe=nprobe, vec_col="q_vec", norm_col="q_norm",
     )
 
+
+def _ivf_scored(cells: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k within the probed cells: the stored ``cells``
+    (match_id, centroid_id, t_vec, t_norm) meet the ``probes`` of
+    :func:`_ivf_probes` on centroid_id, self-pairs excluded. Shared by
+    :func:`ivf_topk` and ``IvfIndex.search``."""
     sim = F.round(
         cosine(F.col("q_vec"), F.col("t_vec"), F.col("q_norm"), F.col("t_norm")), 6
     )
     pairs = (
-        c.join(q, "centroid_id")
+        cells.join(probes, "centroid_id")
         .where(F.col("query_id") != F.col("match_id"))
         .select("query_id", "match_id", sim.alias("sim"))
         .distinct()  # a pair can meet via several probed centroids
@@ -1101,12 +1122,30 @@ def ivfpq_topk(
     )
     codes = pq_encode(corpus, book, id_col, vec_col).join(buckets, "id")
 
-    probes = ivf_assign(
-        queries, id_col, vec_col, cents, nprobe=nprobe
-    ).select(F.col("id").alias("query_id"), "centroid_id")
+    probes = _ivf_probes(queries, id_col, vec_col, cents, nprobe)
+    return _adc_scored(codes, probes, queries, book, id_col, vec_col, k)
+
+
+def _adc_scored(
+    codes: DataFrame,
+    probes: DataFrame,
+    queries: DataFrame,
+    book: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+) -> DataFrame:
+    """ADC top-k within the probed cells: the stored ``codes`` (id,
+    centroid_id, codes) meet the ``probes`` (query_id, centroid_id) and
+    are scored against each query's lookup table over ``book``
+    (:func:`_adc_lut`), self-pairs excluded. Shared by
+    :func:`ivfpq_topk` and ``IvfPqIndex.search``."""
     lut = _adc_lut(queries, book, id_col, vec_col)
     cand = (
-        codes.join(F.broadcast(probes), "centroid_id")
+        codes.join(
+            F.broadcast(probes.select("query_id", "centroid_id")),
+            "centroid_id",
+        )
         .where(F.col("query_id") != F.col("id"))
         .select(
             "query_id",
@@ -1114,6 +1153,9 @@ def ivfpq_topk(
             F.posexplode("codes").alias("sub", "code_id"),
         )
     )
+    # no pair-dedup needed: each stored id lives in exactly ONE cell
+    # (nprobe=1 on the corpus side), so a (query, match) pair meets at
+    # most once however many cells the query probes
     scored = (
         cand.join(F.broadcast(lut), ["query_id", "sub", "code_id"])
         .groupBy("query_id", "match_id")

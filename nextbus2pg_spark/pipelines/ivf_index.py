@@ -18,51 +18,66 @@ instead wants:
   cells, then read ONLY those cells' rows. Vectors are hash-bucketed
   on ``centroid_id`` in the manifest store, so the probe prunes whole
   buckets before any file is listed — search IO is proportional to
-  the probed cells' population, independent of corpus size.
+  the probed cells' population, independent of corpus size. Scoring
+  is the batch operators' own (``ivf_topk`` / ``ivfpq_topk``).
 
 Centroids drift as the corpus grows; that is inherent to IVF (FAISS
 has the same contract). The recall floor against the trained snapshot
-is pinned by tests; :meth:`IvfIndex.retrain_swap` handles drift
-in place: it builds a complete new EPOCH (fresh centroids + a full
-re-assignment of the given corpus snapshot) alongside the live one
-and flips readers to it with ONE atomic manifest publish.
+is pinned by tests; :meth:`IvfIndex.retrain_swap` handles drift in
+place by building a complete new EPOCH alongside the live one.
 
-Epoch mechanics: every centroid and vector row carries an ``epoch``
-int; readers resolve the current epoch from the centroid store (the
-max published epoch) and filter both stores to it. A retrain appends
-the new epoch's vectors FIRST (invisible — no centroid row exposes
-that epoch yet) and publishes the new centroids LAST, so the centroid
-manifest publish IS the swap: a reader that resolved its centroids
-before the flip keeps reading the old epoch's rows (still present)
-and sees a fully consistent pre-swap index; a reader arriving after
-sees only the new epoch. A crash between the two appends leaves
-unreferenced vector debris that no reader can select and that
-:meth:`prune_stale_epochs` sweeps. Old-epoch rows persist (snapshot
-reads via ``search(epoch=...)``) until explicitly pruned.
+Epoch rule: every row of every store carries an ``epoch`` int. Readers
+take the current epoch from the centroid store (its max epoch) and
+read every store at that one epoch. A build takes epoch 0 (``train``)
+or one more than the max epoch in ANY store (``retrain_swap``), so it
+never reuses the epoch of crash debris.
+
+Publish order: a build publishes the vectors first, then the codec's
+trained model (the PQ codebook), then the centroids. No reader can see
+an epoch before its centroids are published, so the centroid publish
+IS the swap: a reader that resolved its epoch before the flip keeps
+reading that epoch's rows (still present) and a reader arriving after
+sees only the new epoch, complete. A crash before the flip leaves
+debris no reader selects; :meth:`IvfIndex.prune_stale_epochs` sweeps
+it along with superseded epochs, which stay readable
+(``search(epoch=...)``) until then.
 
 Writes are atomic manifest publishes (crash at any point leaves the
-previous index state fully readable — sinks/store.py).
+previous index state fully readable — sinks/store.py); every rewrite
+goes through ``BucketedParquetStore.merge``.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nextbus2pg_spark.operators.metrics import staged
 from nextbus2pg_spark.operators.similarity import (
+    _adc_scored,
     _assign_centroids,
-    _topk_per_query,
-    cosine,
+    _ivf_probes,
+    _ivf_scored,
     ivf_assign,
     ivf_centroids,
     kmeans_centroids,
+    pq_encode,
+    pq_train,
     with_norm,
 )
 from nextbus2pg_spark.sinks.store import BucketedParquetStore
 
 
 class IvfIndex:
-    """Train-once / add-incrementally / search-pruned IVF ANN index."""
+    """Train-once / add-incrementally / search-pruned IVF ANN index
+    storing raw vectors. A codec subclass stores encoded rows instead
+    and may keep one extra trained model per epoch in ``codebook``."""
+
+    #: the epoch-stamped store of the codec's trained model (None: raw
+    #: vectors need none)
+    codebook: BucketedParquetStore | None = None
 
     def __init__(
         self,
@@ -95,26 +110,90 @@ class IvfIndex:
             self.centroids.read().agg(F.max("epoch")).collect()[0][0]
         )
 
-    def _cents(self) -> "tuple[DataFrame, int]":
-        """(current epoch's centroids, that epoch). Both come from the
-        same tiny store read; the epoch pins every downstream vector
-        read so a concurrent swap can't mix epochs mid-plan."""
-        epoch = self.current_epoch()
-        cents = (
-            self.centroids.read()
-            .where(F.col("epoch") == F.lit(epoch))
-            .select("centroid_id", "c_vec")
+    def _stores(self) -> "tuple[BucketedParquetStore, ...]":
+        """Every epoch-stamped store, in publish order."""
+        return tuple(
+            s for s in (self.vectors, self.codebook, self.centroids)
+            if s is not None
         )
-        return cents, epoch
+
+    @staticmethod
+    def _at(
+        store: BucketedParquetStore, epoch: int, buckets=None
+    ) -> DataFrame:
+        """``store``'s rows of ``epoch`` (optionally only ``buckets``),
+        without the epoch column."""
+        return (
+            store.read(buckets)
+            .where(F.col("epoch") == F.lit(epoch))
+            .drop("epoch")
+        )
+
+    def _cents(self, epoch: int | None = None) -> "tuple[DataFrame, int]":
+        """(centroids of ``epoch``, that epoch); the default is the
+        current epoch. The epoch pins every downstream read so a
+        concurrent swap can't mix epochs mid-plan."""
+        if epoch is None:
+            epoch = self.current_epoch()
+        return self._at(self.centroids, epoch), epoch
 
     @staticmethod
     def _stamp(df: DataFrame, epoch: int) -> DataFrame:
         return df.withColumn("epoch", F.lit(epoch).cast("int"))
 
-    def _stores(self):
-        """Every epoch-stamped store (prune iterates these; the PQ
-        subclass adds its codebook)."""
-        return (self.vectors, self.centroids)
+    # -- the codec: what a row stores --------------------------------
+
+    def _fit_codec(
+        self, vectors: DataFrame, id_col: str, vec_col: str
+    ) -> DataFrame | None:
+        """The codec's trained model for a build (raw vectors: none)."""
+        return None
+
+    def _encode(
+        self, assigned: DataFrame, model: DataFrame | None
+    ) -> DataFrame:
+        """Assigned (id, centroid_id, vec, norm) rows → stored rows."""
+        return assigned.select("id", "centroid_id", "vec", "norm")
+
+    def _assigned_rows(
+        self,
+        cents: DataFrame,
+        vectors: DataFrame,
+        id_col: str,
+        vec_col: str,
+        model: DataFrame | None,
+    ) -> DataFrame:
+        """Batch → storable index rows, assigned against ``cents`` and
+        encoded with ``model``. Assignment is map-only with the batch
+        columns riding in-row (:func:`_assign_centroids`), and so is
+        every codec, so encoding is one map stage over the batch."""
+        v = with_norm(
+            vectors.select(
+                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+            ),
+            "vec",
+            "norm",
+        )
+        return self._encode(
+            _assign_centroids(
+                v, cents, nprobe=1, vec_col="vec", norm_col="norm"
+            ),
+            model,
+        )
+
+    def _current_rows(
+        self, vectors: DataFrame, id_col: str, vec_col: str
+    ) -> "tuple[DataFrame, int]":
+        """(``vectors`` as stored rows of the current epoch, that
+        epoch)."""
+        cents, epoch = self._cents()
+        model = (
+            None if self.codebook is None else self._at(self.codebook, epoch)
+        )
+        rows = self._assigned_rows(cents, vectors, id_col, vec_col, model)
+        return self._stamp(rows, epoch), epoch
+
+    # -- build ---------------------------------------------------------
 
     def _train_centroids(
         self, vectors: DataFrame, id_col: str, vec_col: str
@@ -128,6 +207,31 @@ class IvfIndex:
             cents = ivf_centroids(vectors, id_col, vec_col, self.n_centroids)
         return cents.localCheckpoint()  # consumed by assignment + publish
 
+    def _build(
+        self,
+        vectors: DataFrame,
+        id_col: str,
+        vec_col: str,
+        epoch: int,
+        first: bool,
+    ) -> None:
+        """Train centroids and the codec's model on ``vectors``, encode
+        them, and publish all three as ``epoch`` in publish order (the
+        centroid publish last: the flip). ``first`` inits each store,
+        so a rerun after a crashed ``train`` supersedes its debris;
+        otherwise each store is appended to."""
+        cents = self._train_centroids(vectors, id_col, vec_col)
+        model = self._fit_codec(vectors, id_col, vec_col)
+        rows = self._assigned_rows(cents, vectors, id_col, vec_col, model)
+        for store, df in (
+            (self.vectors, rows),
+            (self.codebook, model),
+            (self.centroids, cents),  # the flip
+        ):
+            if store is not None:
+                write = store.init if first else store.append
+                write(self._stamp(df, epoch))
+
     def train(
         self,
         vectors: DataFrame,
@@ -136,24 +240,14 @@ class IvfIndex:
     ) -> None:
         """Fit centroids on ``vectors`` and index them as epoch 0. One-
         time cost; the centroid relation is n_centroids rows per epoch
-        (broadcast-sized forever after)."""
+        (broadcast-sized forever after). ``exists()`` keys on the
+        centroid store, published last, so a crashed train is safely
+        rerunnable."""
         if self.exists():
             raise ValueError(
                 "index already trained; call retrain_swap() to refresh"
             )
-        cents = self._train_centroids(vectors, id_col, vec_col)
-        # Vectors FIRST, centroid publish LAST: exists() keys on the
-        # centroid manifest, so a crash anywhere before the final
-        # publish leaves exists() False and train() safely rerunnable —
-        # vectors.init() on the rerun publishes a manifest referencing
-        # only its own fresh generation, superseding any crash debris.
-        self.vectors.init(
-            self._stamp(
-                self._assigned_rows(cents, vectors, id_col, vec_col, 0),
-                0,
-            )
-        )
-        self.centroids.init(self._stamp(cents, 0))
+        self._build(vectors, id_col, vec_col, 0, first=True)
 
     def retrain_swap(
         self,
@@ -161,76 +255,48 @@ class IvfIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> int:
-        """Handle centroid drift IN PLACE: fit fresh centroids on the
-        given corpus snapshot, fully re-assign it as a new epoch, and
-        flip readers to it atomically. Returns the new epoch.
+        """Handle centroid drift IN PLACE: fit fresh centroids (and
+        codec model) on the given corpus snapshot, fully re-assign it
+        as a new epoch, and flip readers to it atomically at the
+        centroid publish. Returns the new epoch.
 
-        The new epoch's vector rows are appended FIRST — invisible,
-        because no published centroid row exposes that epoch — and the
-        centroid append LAST is the single atomic commit point. An
-        in-flight reader that already resolved its centroids keeps a
-        fully consistent view of the old epoch (its rows are untouched
-        until :meth:`prune_stale_epochs`); there is no instant at
-        which a reader can pair new centroids with old assignments or
-        vice versa.
-
-        Crash-safe and rerunnable: the next epoch number is taken from
-        the max epoch across BOTH stores, so a crash between the two
-        appends leaves vector debris at an epoch a retry skips past —
-        the retry publishes a complete higher epoch, and the debris
-        (never reader-visible) is swept by prune. Adds computed
-        against the old epoch that land after the flip are likewise
-        stale-epoch rows, invisible and swept — quiesce adds during a
-        retrain, or re-add the tail after it; the snapshot you pass is
-        what the new epoch serves.
+        Crash-safe and rerunnable: a crash before the flip leaves
+        debris at an epoch the retry skips past (the epoch rule), and
+        prune sweeps it. Adds computed against the old epoch that land
+        after the flip are likewise stale-epoch rows, invisible and
+        swept — quiesce adds during a retrain, or re-add the tail
+        after it; the snapshot you pass is what the new epoch serves.
         """
         if not self.exists():
             raise ValueError("no trained index at this path; call train()")
-        # max over both stores: vector debris from a crashed prior swap
-        # must not be reused (its assignment may be half-written).
-        # v_max is None when every vector row was delete()d — an empty
-        # store is valid; fall back to the centroid epoch alone.
-        v_max = self.vectors.read().agg(F.max("epoch")).collect()[0][0]
-        new_epoch = max(
-            self.current_epoch(), int(v_max) if v_max is not None else -1
-        ) + 1
-        cents = self._train_centroids(vectors, id_col, vec_col)
-        self.vectors.append(
-            self._stamp(
-                self._assigned_rows(
-                    cents, vectors, id_col, vec_col, new_epoch
-                ),
-                new_epoch,
-            )
+        # one job over every store: never NULL, the centroids exist
+        epochs = reduce(
+            DataFrame.unionByName,
+            (s.read().select("epoch") for s in self._stores()),
         )
-        self.centroids.append(self._stamp(cents, new_epoch))  # the flip
+        new_epoch = int(epochs.agg(F.max("epoch")).first()[0]) + 1
+        self._build(vectors, id_col, vec_col, new_epoch, first=False)
         return new_epoch
 
     def prune_stale_epochs(self) -> int:
         """Drop every row whose epoch differs from the current one —
-        superseded epochs AND crash debris above it. One read-merge-
-        write over each store's populated buckets, OCC-guarded; skips
-        the publish entirely when nothing is stale. Returns the epoch
-        kept. Off the swap path by design: old epochs stay readable
+        superseded epochs AND crash debris above it. Each store merges
+        the keys of its stale rows, so only the buckets holding stale
+        rows are rewritten (OCC-guarded by ``merge``), and a store with
+        nothing stale publishes nothing. Returns the epoch kept. Off
+        the swap path by design: old epochs stay readable
         (``search(epoch=...)``) until the operator decides in-flight
         readers have drained."""
         epoch = self.current_epoch()
+        current = F.col("epoch") == F.lit(epoch)
         for store in self._stores():
-            if not store.exists():
-                continue
-            base_gen = store.current_manifest()["gen"]
-            existing = store.read().localCheckpoint()  # guard + rewrite
-            if existing.where(F.col("epoch") != F.lit(epoch)).isEmpty():
-                continue
-            touched = [
-                int(b) for b in store.current_manifest()["buckets"]
-            ]
-            store.replace_buckets(
-                existing.where(F.col("epoch") == F.lit(epoch)),
-                touched,
-                expected_gen=base_gen,
+            store.merge(
+                store.read().where(~current).select(*store.key_cols),
+                lambda existing, _: existing.where(current),
             )
         return epoch
+
+    # -- incremental writes -------------------------------------------
 
     def add(
         self,
@@ -241,40 +307,7 @@ class IvfIndex:
         """Index a batch against the EXISTING centroids: one broadcast
         assignment pass over the batch, one O(batch) append. Ids must
         be new (append-only id space, as in NearDupIndex)."""
-        cents, epoch = self._cents()
-        self.vectors.append(
-            self._stamp(
-                self._assigned_rows(
-                    cents, vectors, id_col, vec_col, epoch
-                ),
-                epoch,
-            )
-        )
-
-    def _assigned_rows(
-        self,
-        cents: DataFrame,
-        vectors: DataFrame,
-        id_col: str,
-        vec_col: str,
-        epoch: int,
-    ) -> DataFrame:
-        """Batch → storable index rows, assigned against ``cents``.
-        ``epoch`` identifies which epoch's auxiliary model applies —
-        unused by the raw codec, consumed by the PQ subclass to pick
-        the matching codebook. Assignment is map-only with the batch
-        columns riding in-row (:func:`_assign_centroids`), so encoding
-        is one map stage over the batch."""
-        v = with_norm(
-            vectors.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            ),
-            "vec",
-            "norm",
-        )
-        return _assign_centroids(
-            v, cents, nprobe=1, vec_col="vec", norm_col="norm"
-        ).select("id", "centroid_id", "vec", "norm")
+        self.vectors.append(self._current_rows(vectors, id_col, vec_col)[0])
 
     def add_if_absent(
         self,
@@ -292,88 +325,17 @@ class IvfIndex:
         The batch itself dedups on id first: a producer retry can land
         the same record twice within ONE batch, which the
         store-membership anti-join alone cannot see."""
-        vectors = vectors.dropDuplicates([id_col])
-        cents, epoch = self._cents()
-        rows = self._stamp(
-            self._assigned_rows(cents, vectors, id_col, vec_col, epoch),
-            epoch,
-        ).localCheckpoint()  # consumed by bucket-id collect + anti-join
-        if self.vectors.exists():
-            cells = rows.select("centroid_id").distinct()
-            touched = self.vectors.touched_buckets(cells)
-            seen = (
-                self.vectors.read(touched)
-                .where(F.col("epoch") == F.lit(epoch))
-                .select("id")
-            )
-            rows = rows.join(seen, "id", "left_anti").localCheckpoint()
-            if rows.isEmpty():
-                return  # full replay: no write job, no manifest churn
-        self.vectors.append(rows)
-
-    def search(
-        self,
-        queries: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        k: int = 5,
-        nprobe: int = 4,
-        epoch: int | None = None,
-    ) -> DataFrame:
-        """Approximate top-k neighbors → (query_id, match_id, sim,
-        rank), self-pairs excluded — the :func:`ivf_topk` output
-        contract. Reads only the manifest buckets holding the probed
-        cells (spy-tested), then exact cosine within them.
-
-        ``epoch`` pins the read to a specific published epoch (a
-        reader that resolved its view before a concurrent
-        :meth:`retrain_swap` — or a deliberate snapshot read); the
-        default is the current epoch. Both the centroid resolution and
-        the vector filter use the SAME epoch, so the result is always
-        a self-consistent index state."""
-        if epoch is None:
-            cents, epoch = self._cents()
-        else:
-            cents = (
-                self.centroids.read()
-                .where(F.col("epoch") == F.lit(epoch))
-                .select("centroid_id", "c_vec")
-            )
-        q_assigned = ivf_assign(queries, id_col, vec_col, cents, nprobe=nprobe)
-        probe_cells = q_assigned.select(
-            F.col("centroid_id").alias("centroid_id")
-        ).distinct()
-        touched = self.vectors.touched_buckets(probe_cells)
-        stored = (
-            self.vectors.read(touched)
-            .where(F.col("epoch") == F.lit(epoch))
-            .drop("epoch")
-            .withColumnsRenamed(
-                {"id": "match_id", "vec": "t_vec", "norm": "t_norm"}
-            )
+        rows, epoch = self._current_rows(
+            vectors.dropDuplicates([id_col]), id_col, vec_col
         )
-        qn = with_norm(queries, vec_col, "q_norm").select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("q_vec"),
-            "q_norm",
+        rows = rows.localCheckpoint()  # feeds bucket collect + anti-join
+        touched = self.vectors.touched_buckets(rows)
+        present = self._at(self.vectors, epoch, touched).select("id")
+        rows, seen = staged(
+            rows.join(present, "id", "left_anti"), n=F.count(F.lit(1))
         )
-        q = q_assigned.join(qn, "id").select(
-            F.col("id").alias("query_id"), "centroid_id", "q_vec", "q_norm"
-        )
-        sim = F.round(
-            cosine(
-                F.col("q_vec"), F.col("t_vec"),
-                F.col("q_norm"), F.col("t_norm"),
-            ),
-            6,
-        )
-        pairs = (
-            stored.join(q, "centroid_id")
-            .where(F.col("query_id") != F.col("match_id"))
-            .select("query_id", "match_id", sim.alias("sim"))
-            .distinct()  # a pair can meet via several probed cells
-        )
-        return _topk_per_query(pairs, k)
+        if seen["n"]:  # a full replay writes nothing
+            self.vectors.append(rows)
 
     def delete(
         self,
@@ -389,41 +351,81 @@ class IvfIndex:
         assigned cells' buckets, the same IO shape as ``delete_keys``
         — an id-only delete would have to scan every bucket. Centroids
         are train-once-immutable, so the recomputed assignment equals
-        the add-time one. Absent ids are a no-op (idempotent under
-        at-least-once replay; the anti-join also sweeps out a replayed
-        upsert's re-added row if it shares the touched buckets — the
-        paired insert re-applies it)."""
+        the add-time one. Only the current epoch's row is removed:
+        stale epochs are frozen snapshots (a pinned ``search(epoch=...)``
+        stays replayable until :meth:`prune_stale_epochs`). Absent ids
+        are a no-op that publishes nothing (idempotent under
+        at-least-once replay)."""
         if not self.vectors.exists():
             return
         cents, epoch = self._cents()
-        assigned = ivf_assign(
+        doomed = ivf_assign(
             vectors.dropDuplicates([id_col]), id_col, vec_col,
             cents, nprobe=1,
-        ).localCheckpoint()  # feeds cell collect AND the anti-join
-        cells = assigned.select("centroid_id").distinct()
-        touched = self.vectors.touched_buckets(cells)
+        )
+        touched = self.vectors.touched_buckets(doomed)
         if not touched:
             return
-        base_gen = self.vectors.current_manifest()["gen"]
-        # checkpoint: consumed by the emptiness guard AND the rewrite —
-        # without it the touched buckets' parquet is read twice
-        existing = self.vectors.read(touched).localCheckpoint()
-        doomed = assigned.select(F.col("id").alias("__did"))
-        current = existing.where(F.col("epoch") == F.lit(epoch))
-        if current.join(
-            doomed, current["id"] == doomed["__did"], "left_semi"
-        ).isEmpty():
-            return  # replay of a completed delete: no write, no churn
-        # only the CURRENT epoch's row is removed: stale epochs are
-        # frozen snapshots (pinned search(epoch=...) stays replayable
-        # until prune_stale_epochs sweeps them)
-        merged = existing.join(
-            doomed,
-            (existing["id"] == doomed["__did"])
-            & (existing["epoch"] == F.lit(epoch)),
-            "left_anti",
+        hits, seen = staged(
+            self._at(self.vectors, epoch, touched)
+            .join(doomed.select("id"), "id", "left_semi")
+            .select("id", "centroid_id", F.lit(epoch).alias("epoch")),
+            n=F.count(F.lit(1)),
         )
-        self.vectors.replace_buckets(merged, touched, expected_gen=base_gen)
+        if seen["n"]:  # a replay of a completed delete writes nothing
+            self.vectors.merge(
+                hits,
+                lambda existing, gone: existing.join(
+                    gone.select("id", "epoch"), ["id", "epoch"], "left_anti"
+                ),
+            )
+
+    def search(
+        self,
+        queries: DataFrame,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        k: int = 5,
+        nprobe: int = 4,
+        epoch: int | None = None,
+    ) -> DataFrame:
+        """Approximate top-k neighbors → (query_id, match_id, sim,
+        rank), self-pairs excluded — the :func:`ivf_topk` output
+        contract and scoring. Reads only the manifest buckets holding
+        the probed cells (spy-tested), then exact cosine within them.
+
+        ``epoch`` pins the read to a specific published epoch (a
+        reader that resolved its view before a concurrent
+        :meth:`retrain_swap` — or a deliberate snapshot read); the
+        default is the current epoch. Every store is read at that
+        one epoch, so the result is always a self-consistent index
+        state."""
+        probes, cells, _ = self._probed(
+            queries, id_col, vec_col, nprobe, epoch
+        )
+        return _ivf_scored(
+            cells.withColumnsRenamed(
+                {"id": "match_id", "vec": "t_vec", "norm": "t_norm"}
+            ),
+            probes,
+            k,
+        )
+
+    def _probed(
+        self,
+        queries: DataFrame,
+        id_col: str,
+        vec_col: str,
+        nprobe: int,
+        epoch: int | None,
+    ) -> "tuple[DataFrame, DataFrame, int]":
+        """The probe prefix of both searches → (probes of
+        :func:`_ivf_probes`, the stored rows of the probed cells at
+        the epoch, the epoch)."""
+        cents, epoch = self._cents(epoch)
+        probes = _ivf_probes(queries, id_col, vec_col, cents, nprobe)
+        touched = self.vectors.touched_buckets(probes)
+        return probes, self._at(self.vectors, epoch, touched), epoch
 
     def apply_changes(
         self,
@@ -461,22 +463,19 @@ class IvfIndex:
 class IvfPqIndex(IvfIndex):
     """IVF index whose rows store PQ CODES instead of raw vectors —
     the composed 100 TB ANN shape as a PERSISTENT index: coarse
-    centroids prune whole manifest buckets at search time (inherited)
-    and product quantization shrinks every stored row to ``pq_m``
-    small ints (64-dim float64 → 4 bytes at the defaults, ~128×
-    smaller), so search reads codes and a per-query lookup table —
-    never a corpus vector.
+    centroids prune whole manifest buckets at search time and product
+    quantization shrinks every stored row to ``pq_m`` small ints
+    (64-dim float64 → 4 bytes at the defaults, ~128× smaller), so
+    search reads codes and a per-query lookup table — never a corpus
+    vector.
 
-    Everything epoch-/CDC-/crash-related is inherited verbatim: the
-    codebook is a third epoch-stamped store published BETWEEN the
-    vectors and the centroid flip, so the flip atomically exposes a
-    (centroids, codebook, codes) triple trained together — no reader
-    can pair a codebook with another epoch's codes. ``add`` /
-    ``add_if_absent`` / ``delete`` / ``apply_changes`` work unchanged
-    (assignment and membership need only (id, centroid_id, epoch));
-    only row encoding and search scoring differ. Accuracy contract:
-    ``sim`` is the ADC approximation of cosine (operators/similarity
-    ``pq_topk``'s contract); recall floors are pinned by tests.
+    Only the codec differs from :class:`IvfIndex`: the codebook is the
+    codec's trained model (a third epoch-stamped store, published
+    between the codes and the centroid flip, so the flip exposes a
+    (centroids, codebook, codes) triple trained together), rows store
+    ``codes``, and search scores by ADC (``ivfpq_topk``'s scoring).
+    Accuracy contract: ``sim`` is the ADC approximation of cosine
+    (``pq_topk``'s contract); recall floors are pinned by tests.
     """
 
     def __init__(
@@ -500,121 +499,21 @@ class IvfPqIndex(IvfIndex):
         self.codebook = BucketedParquetStore(
             spark, f"{path.rstrip('/')}/codebook", ["sub"], n_buckets=1,
         )
-        #: in-training codebook: lets _assigned_rows encode against a
-        #: book that is not yet published (train/retrain build phase)
-        self._fresh_book: DataFrame | None = None
 
-    def _stores(self):
-        return (self.vectors, self.codebook, self.centroids)
-
-    def _book_at(self, epoch: int) -> DataFrame:
-        return (
-            self.codebook.read()
-            .where(F.col("epoch") == F.lit(epoch))
-            .select("sub", "code_id", "c_vec")
-        )
-
-    def _train_book(
+    def _fit_codec(
         self, vectors: DataFrame, id_col: str, vec_col: str
     ) -> DataFrame:
-        from nextbus2pg_spark.operators.similarity import pq_train
-
         return pq_train(
             vectors, id_col, vec_col, m=self.pq_m,
             n_codes=self.pq_codes, n_iters=self.pq_iters,
         ).localCheckpoint()  # consumed by encode + publish
 
-    def _assigned_rows(
-        self,
-        cents: DataFrame,
-        vectors: DataFrame,
-        id_col: str,
-        vec_col: str,
-        epoch: int,
-    ) -> DataFrame:
-        """(id, centroid_id, codes): coarse assignment + PQ encoding
-        against the epoch's codebook (the in-training one during a
-        build — published and trained as one triple, so they always
-        match). Both halves are map-only, so they compose as two
-        column computations over ONE pass of the batch."""
-        from nextbus2pg_spark.operators.similarity import pq_encode
-
-        book = (
-            self._fresh_book
-            if self._fresh_book is not None
-            else self._book_at(epoch)
-        )
-        v = with_norm(
-            vectors.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            ),
-            "vec",
-            "norm",
-        )
-        assigned = _assign_centroids(
-            v, cents, nprobe=1, vec_col="vec", norm_col="norm"
-        )
+    def _encode(self, assigned: DataFrame, model: DataFrame) -> DataFrame:
+        """(id, centroid_id, codes): PQ encoding against the epoch's
+        codebook, in the same map stage as the assignment."""
         return pq_encode(
-            assigned, book, "id", "vec", keep=("centroid_id",)
+            assigned, model, "id", "vec", keep=("centroid_id",)
         ).select("id", "centroid_id", "codes")
-
-    def train(
-        self,
-        vectors: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        """Epoch-0 build: codes FIRST, codebook SECOND, centroid
-        publish LAST (exists() keys on the centroid manifest — the
-        inherited crash-rerunnability argument, with the codebook
-        inside the invisible window)."""
-        if self.exists():
-            raise ValueError(
-                "index already trained; call retrain_swap() to refresh"
-            )
-        cents = self._train_centroids(vectors, id_col, vec_col)
-        self._fresh_book = self._train_book(vectors, id_col, vec_col)
-        try:
-            self.vectors.init(
-                self._stamp(
-                    self._assigned_rows(cents, vectors, id_col, vec_col, 0),
-                    0,
-                )
-            )
-            self.codebook.init(self._stamp(self._fresh_book, 0))
-        finally:
-            self._fresh_book = None
-        self.centroids.init(self._stamp(cents, 0))
-
-    def retrain_swap(
-        self,
-        vectors: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> int:
-        """Inherited contract (atomic flip at the centroid publish;
-        crash debris skipped by the retry's epoch choice and swept by
-        prune) with the codebook appended between codes and flip."""
-        if not self.exists():
-            raise ValueError("no trained index at this path; call train()")
-        v_max = self.vectors.read().agg(F.max("epoch")).collect()[0][0]
-        new_epoch = max(self.current_epoch(), int(v_max)) + 1
-        cents = self._train_centroids(vectors, id_col, vec_col)
-        self._fresh_book = self._train_book(vectors, id_col, vec_col)
-        try:
-            self.vectors.append(
-                self._stamp(
-                    self._assigned_rows(
-                        cents, vectors, id_col, vec_col, new_epoch
-                    ),
-                    new_epoch,
-                )
-            )
-            self.codebook.append(self._stamp(self._fresh_book, new_epoch))
-        finally:
-            self._fresh_book = None
-        self.centroids.append(self._stamp(cents, new_epoch))  # the flip
-        return new_epoch
 
     def search(
         self,
@@ -631,44 +530,10 @@ class IvfPqIndex(IvfIndex):
         only the probed cells' manifest buckets; per-candidate cost is
         ``pq_m`` lookup-adds against the per-query LUT (bounded:
         queries × m × n_codes rows, broadcast)."""
-        from nextbus2pg_spark.operators.similarity import _adc_lut
-
-        if epoch is None:
-            cents, epoch = self._cents()
-        else:
-            cents = (
-                self.centroids.read()
-                .where(F.col("epoch") == F.lit(epoch))
-                .select("centroid_id", "c_vec")
-            )
-        q_assigned = ivf_assign(queries, id_col, vec_col, cents,
-                                nprobe=nprobe)
-        probe_cells = q_assigned.select("centroid_id").distinct()
-        touched = self.vectors.touched_buckets(probe_cells)
-        stored = (
-            self.vectors.read(touched)
-            .where(F.col("epoch") == F.lit(epoch))
-            .select("id", "centroid_id", "codes")
+        probes, cells, epoch = self._probed(
+            queries, id_col, vec_col, nprobe, epoch
         )
-        probes = q_assigned.select(
-            F.col("id").alias("query_id"), "centroid_id"
+        return _adc_scored(
+            cells, probes, queries, self._at(self.codebook, epoch),
+            id_col, vec_col, k,
         )
-        lut = _adc_lut(queries, self._book_at(epoch), id_col, vec_col)
-        cand = (
-            stored.join(F.broadcast(probes), "centroid_id")
-            .where(F.col("query_id") != F.col("id"))
-            .select(
-                "query_id",
-                F.col("id").alias("match_id"),
-                F.posexplode("codes").alias("sub", "code_id"),
-            )
-        )
-        # no pair-dedup needed: each stored id lives in exactly ONE
-        # cell (index-side nprobe=1), so a (query, match) pair meets
-        # at most once however many cells the query probes
-        scored = (
-            cand.join(F.broadcast(lut), ["query_id", "sub", "code_id"])
-            .groupBy("query_id", "match_id")
-            .agg(F.round(F.sum("part"), 6).alias("sim"))
-        )
-        return _topk_per_query(scored, k)

@@ -38,6 +38,7 @@ from nextbus2pg_spark.operators.dedup import (
     minhash_signatures,
     word_shingles,
 )
+from nextbus2pg_spark.operators.metrics import staged
 from nextbus2pg_spark.sinks.store import BucketedParquetStore
 
 
@@ -204,13 +205,14 @@ class NearDupIndex:
             .localCheckpoint()
         )
         sig_buckets = self.sigs.touched_buckets(ids)
-        doomed = (
+        # staged: feeds band derivation, its count the emptiness check
+        doomed, seen = staged(
             self.sigs.read(sig_buckets)
             .join(ids, "id", "left_semi")
-            .dropDuplicates(["id"])
-            .localCheckpoint()  # feeds band derivation AND emptiness check
+            .dropDuplicates(["id"]),
+            n=F.count(F.lit(1)),
         )
-        if doomed.isEmpty():
+        if not seen["n"]:
             return  # replay of a completed delete: no write, no churn
         bands = self._bands_from_wide(doomed)
         probe = bands.select("band", "band_hash").distinct()
@@ -234,12 +236,14 @@ class NearDupIndex:
         docs = docs.dropDuplicates([id_col])
         if self.sigs.exists():
             ids = docs.select(F.col(id_col).alias("id")).distinct()
-            seen = (
+            present = (
                 self.sigs.read(self.sigs.touched_buckets(ids))
                 .select(F.col("id").alias(id_col))
             )
-            docs = docs.join(seen, id_col, "left_anti").localCheckpoint()
-            if docs.isEmpty():
+            docs, seen = staged(
+                docs.join(present, id_col, "left_anti"), n=F.count(F.lit(1))
+            )
+            if not seen["n"]:
                 return  # full replay: no write job, no manifest churn
         self.add(docs, id_col, text_col)
 

@@ -36,7 +36,7 @@ from nextbus2pg_spark.plans import timeseries as _timeseries  # noqa: F401,E402
 #: once a newer CORRECTNESS file shows it green.
 TOUCHED = (
     "q_pq_assign", "q_pq_topk", "q_ivfpq_seeded", "q_ivfpq_topk",
-    "q_semantic_dedup", "q_hits",
+    "q_semantic_dedup", "q_hits", "q_ivf_topk",
 )
 
 _REPO_ROOT = Path(__file__).resolve().parents[2]

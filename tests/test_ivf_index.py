@@ -495,14 +495,15 @@ def test_prune_stale_epochs_occ_guards_concurrent_adds(spark, tmp_path):
     idx.retrain_swap(emb.filter("vec_id >= 10 and vec_id < 60"))
 
     batch = emb.filter("vec_id >= 90 and vec_id < 95")
-    orig = idx.vectors.replace_buckets
+    # the hook sits on the commit that store.merge makes after its read
+    orig = idx.vectors._commit
 
-    def racing(merged, touched, expected_gen=None, **kw):
-        idx.vectors.replace_buckets = orig  # race once
+    def racing(df, drop, expected_gen=None, **kw):
+        idx.vectors._commit = orig  # race once
         idx.add(batch)  # concurrent writer publishes first
-        return orig(merged, touched, expected_gen=expected_gen, **kw)
+        return orig(df, drop, expected_gen, **kw)
 
-    idx.vectors.replace_buckets = racing
+    idx.vectors._commit = racing
     with pytest.raises(ConcurrentWriteError):
         idx.prune_stale_epochs()
 
@@ -515,6 +516,36 @@ def test_prune_stale_epochs_occ_guards_concurrent_adds(spark, tmp_path):
     for r in rows:
         per_id[r["id"]] = per_id.get(r["id"], 0) + 1
     assert all(c == 1 for c in per_id.values())
+
+
+def test_prune_rewrites_only_buckets_holding_stale_rows(spark, tmp_path):
+    """prune_stale_epochs merges only the stale rows' keys: a vector
+    bucket that held no superseded row keeps its manifest dir list, and
+    a second prune publishes no generation in any store."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+    idx = IvfIndex(
+        spark, str(tmp_path / "ivf"), n_centroids=8, kmeans_iters=1,
+        n_buckets=8,
+    )
+    idx.train(emb.filter("vec_id >= 10 and vec_id < 13"))  # 3 cells
+    idx.retrain_swap(emb.filter("vec_id >= 10"))
+    stale = set(idx.vectors.touched_buckets(
+        idx.vectors.read().where(F.col("epoch") == 0)
+    ))
+    before = idx.vectors.current_manifest()["buckets"]
+    kept = [b for b in before if int(b) not in stale]
+    assert stale and kept, (stale, before)
+
+    assert idx.prune_stale_epochs() == 1
+    after = idx.vectors.current_manifest()["buckets"]
+    for b in kept:
+        assert after[b] == before[b], (b, before[b], after[b])
+    assert {r["epoch"] for r in idx.vectors.read().collect()} == {1}
+
+    stores = (idx.vectors, idx.centroids)
+    gens = [s.generations() for s in stores]
+    idx.prune_stale_epochs()
+    assert [s.generations() for s in stores] == gens
 
 
 def test_retrain_swap_after_all_vectors_deleted(spark, tmp_path):

@@ -255,3 +255,31 @@ def test_streaming_embedding_index_with_pq_codec(spark, tmp_path):
     )
     res = idx.search(twin, k=1, nprobe=4).collect()
     assert res and res[0]["match_id"] == rows[3]["vec_id"]
+
+
+def test_retrain_swap_after_all_vectors_deleted(spark, tmp_path):
+    """Mirrors the IvfIndex test of the same name: with every vector
+    delete()d the vector store's max epoch is NULL, and the retrain
+    must still publish a complete next epoch (codes, codebook,
+    centroids) that search serves."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+    corpus = emb.filter("vec_id < 30")
+    idx = IvfPqIndex(
+        spark, str(tmp_path / "ivfpq"), n_centroids=4, kmeans_iters=1,
+        pq_m=4, pq_codes=16, pq_iters=1,
+    )
+    idx.train(corpus)
+    idx.delete(corpus)  # empty the vectors store entirely
+    assert idx.vectors.read().count() == 0
+
+    epoch = idx.retrain_swap(corpus)
+    assert epoch == idx.current_epoch() and epoch >= 1
+    for st, n in ((idx.vectors, 30), (idx.codebook, 4 * 16),
+                  (idx.centroids, 4)):
+        assert st.read().filter(F.col("epoch") == epoch).count() == n
+    twin = corpus.filter("vec_id = 7").select(
+        F.lit(9001).alias("vec_id"), "embedding"
+    )
+    assert 7 in {
+        r["match_id"] for r in idx.search(twin, k=5, nprobe=4).collect()
+    }

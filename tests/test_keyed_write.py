@@ -198,3 +198,38 @@ def test_sink_write_methods_callable_as_table_df():
         inspect.signature(getattr(ParquetUpsertTable, name)).bind(
             object(), object()
         )
+
+
+def test_only_the_store_rewrites_buckets():
+    """One keyed-write path: no package module but ``sinks/store.py``
+    calls ``replace_buckets`` or passes ``expected_gen=`` — every
+    rewrite goes through ``store.merge``. Reads the source only."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "nextbus2pg_spark"
+
+    def bucket_rewrites(path):
+        out = []
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                f, "id", None
+            )
+            if name == "replace_buckets" or any(
+                kw.arg == "expected_gen" for kw in node.keywords
+            ):
+                out.append(f"{path.relative_to(pkg)}:{node.lineno}")
+        return out
+
+    store = pkg / "sinks" / "store.py"
+    assert bucket_rewrites(store), "the detector finds the store's own calls"
+    offenders = [
+        hit
+        for path in sorted(pkg.rglob("*.py"))
+        if path != store
+        for hit in bucket_rewrites(path)
+    ]
+    assert not offenders, offenders
