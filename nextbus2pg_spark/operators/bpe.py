@@ -15,8 +15,8 @@ Scale design (the classic Sennrich formulation, arranged Spark-first):
   the winning pair is a 1-row driver collect (scalar).
 - Applying a merge is a pure JVM array fold (greedy left-to-right
   non-overlapping, the standard semantics): no Python in the
-  training loop. The symbol table is localCheckpoint'ed per
-  iteration so lineage doesn't grow linearly in n_merges.
+  training loop. ``scale.iterate`` cuts the symbol table's lineage
+  every iteration, so it doesn't grow linearly in n_merges.
 - ``bpe_encode`` IS the documented Python path (Arrow/mapInPandas):
   applying n merge rules sequentially as nested column expressions
   would build an O(n_merges)-deep plan, so encoding ships the (tiny)
@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nextbus2pg_spark.operators.scale import iterate
 
 #: end-of-word sentinel (standard BPE: lets the model distinguish
 #: word-final subwords; chosen outside the printable fixture alphabet)
@@ -89,8 +91,8 @@ def bpe_train(
         ).alias("symbols"),
     ).localCheckpoint(eager=True)
 
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
+    def merge_best(state):
+        syms, merges = state
         pairs = syms.select(
             "freq",
             F.explode(
@@ -109,12 +111,17 @@ def bpe_train(
             .collect()
         )
         if not best or best[0]["cnt"] < min_pair_freq:
-            break
+            return None, merges  # no pair qualifies: training is done
         a, b = best[0]["p"]["a"], best[0]["p"]["b"]
-        merges.append((a, b))
-        syms = syms.select(
+        merged = syms.select(
             "freq", _apply_merge(F.col("symbols"), a, b).alias("symbols")
-        ).localCheckpoint(eager=True)
+        )
+        return merged, [*merges, (a, b)]
+
+    (_, merges), _ = iterate(
+        (syms, []), merge_best, n_merges,
+        name="bpe_train", stop=lambda state: state[0] is None,
+    )
     return merges
 
 

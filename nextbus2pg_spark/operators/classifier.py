@@ -13,8 +13,8 @@ Design for 100 TB:
   doc, one groupBy-gradient per feature, one weight-frame left join.
   The corpus-sized feature relation is the only big operand and it
   never shuffles wider than its (id) / (feat) aggregations.
-- **Per-round lineage cut** (``localCheckpoint``), the established
-  iterative shape (components / PageRank / Lloyd).
+- **Per-round lineage cut** through ``scale.iterate``, the loop every
+  iterative operator runs on (components / PageRank / Lloyd).
 - **Fixed iteration count, no transcendentals.** The perceptron
   update is pure +/×: margins, the misclassified set, and per-feature
   gradient sums are all polynomial in the inputs, so — unlike a
@@ -36,26 +36,13 @@ like ``quality_score``/``bigram_logprob``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nextbus2pg_spark.operators.scale import iterate
 from nextbus2pg_spark.operators.sketch import _cms_bucket
+from nextbus2pg_spark.operators.stats import _sorted_fold
 from nextbus2pg_spark.operators.textstats import doc_terms
-
-
-def _sorted_fold(key: Column, val: Column) -> Column:
-    """Partition-order-free SUM (left fold of the key-sorted value
-    list) — DuckDB ``list_reduce`` replays it exactly."""
-    return F.aggregate(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(key.alias("k"), val.alias("v")))
-            ),
-            lambda s: s["v"],
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def hash_features(
@@ -129,12 +116,8 @@ def perceptron_train(
     feats = features.localCheckpoint(eager=True)  # reused every round
     labs = labels.select("id", F.col("y").cast("double").alias("y"))
     labs = labs.localCheckpoint(eager=True)
-    w = (
-        spark.range(dim)
-        .select(F.col("id").alias("feat"), F.lit(0.0).alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(n_iters):
+
+    def update(w: DataFrame) -> DataFrame:
         mg = _margins(feats, w, deterministic)
         mis = (
             mg.join(labs, "id")
@@ -150,17 +133,17 @@ def perceptron_train(
             )
         else:
             grad = gc.groupBy("feat").agg(F.sum("g").alias("g"))
-        w = (
-            w.join(grad, "feat", "left")
-            .select(
-                "feat",
-                (
-                    F.col("w")
-                    + F.lit(lr) * F.coalesce("g", F.lit(0.0))
-                ).alias("w"),
-            )
-            .localCheckpoint(eager=True)
+        return w.join(grad, "feat", "left").select(
+            "feat",
+            (F.col("w") + F.lit(lr) * F.coalesce("g", F.lit(0.0))).alias("w"),
         )
+
+    w = spark.range(dim).select(
+        F.col("id").alias("feat"), F.lit(0.0).alias("w")
+    )
+    w, _ = iterate(
+        w, update, n_iters, name="perceptron_train", fans_out=True
+    )
     return w
 
 

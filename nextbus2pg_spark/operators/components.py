@@ -21,16 +21,16 @@ Design for 100 TB:
   that turns O(diameter) rounds into O(log diameter). Near-dup
   components have tiny diameter, so this converges in 2-4 rounds; the
   same code handles pathological chains within ``max_iter``.
-- **Per-round lineage cut.** Each round's label frame is
-  ``localCheckpoint``-ed: iterative DataFrame plans otherwise double in
-  depth per round and re-derive every prior round on each action. Call
-  ``release_cached_rdds`` after consuming the result in long-running
-  apps (see operators/scale.py).
+- **Per-round lineage cut.** The rounds run on ``scale.iterate``, which
+  checkpoints each round's label frame: iterative DataFrame plans
+  otherwise double in depth per round and re-derive every prior round
+  on each action. Call ``release_cached_rdds`` after consuming the
+  result in long-running apps (see operators/scale.py).
 - **Convergence check is one scalar.** Labels decrease monotonically,
   so the round's ``sum(label)`` is a strictly decreasing fixpoint
   detector — no row-level old-vs-new comparison join.
 
-The driver-side ``for`` loop is bounded control flow, not data flow:
+The driver-side round loop is bounded control flow, not data flow:
 each round is a fully distributed job, and the loop moves only one
 aggregate scalar to the driver per round (the standard Spark shape for
 iterative graph algorithms — GraphFrames' own CC does the same).
@@ -40,6 +40,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nextbus2pg_spark.operators.graph import long_ids, symmetric_edges
+from nextbus2pg_spark.operators.scale import iterate
 
 
 def connected_components(
@@ -61,48 +64,17 @@ def connected_components(
     fixpoint (with path halving that needs a component diameter around
     2**max_iter — pathological for any real near-dup graph).
     """
-    integral = {"tinyint", "smallint", "int", "bigint", "long"}
-    dts = dict(edges.dtypes)
-    bad = {c: dts[c] for c in (src, dst) if dts[c] not in integral}
-    if bad:
-        # cast('long') maps non-numeric ids to NULL SILENTLY, which
-        # empties the edge set and makes every caller degrade to
-        # "no duplicates found" — fail loudly instead (string ids
-        # must be mapped to a numeric key, e.g. xxhash64, first).
-        raise TypeError(
-            f"connected_components needs integral edge id columns; got "
-            f"{bad} — hash or dictionary-encode string ids first"
-        )
-    # Checkpoint the (edge-bounded) pair list BEFORE symmetrizing:
-    # the union consumes it twice, and the caller's edge lineage is
-    # typically the whole LSH-verify chain — without this checkpoint
-    # that chain executes twice per call (measured ~1s at sf0.1 on
-    # q_corpus_assembly). All three checkpoints are LAZY: the seed
-    # convergence collect below is the materializing action, so setup
-    # costs one scheduled job instead of four (guide §1.2 step 1);
-    # persisted-on-first-compute blocks make the twice-consumed pairs
-    # frame still execute its lineage exactly once.
-    pairs = edges.select(
-        F.col(src).cast("long").alias("id"),
-        F.col(dst).cast("long").alias("nb"),
-    ).localCheckpoint(eager=False)
-    sym = (
-        pairs.unionByName(
-            pairs.select(F.col("nb").alias("id"), F.col("id").alias("nb"))
-        )
-        .where(F.col("id") != F.col("nb"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    ids = long_ids(edges, src, dst, "connected_components")
+    sym = symmetric_edges(ids, src, dst).withColumnRenamed("node", "id")
     labels = (
         sym.select("id").distinct().withColumn("component", F.col("id"))
     ).localCheckpoint(eager=False)
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-    if prev_sum is None:  # no edges at all
+    sums = [labels.agg(F.sum("component")).collect()[0][0]]
+    if sums[0] is None:  # no edges at all
         return labels.select("id", "component")
 
-    for _ in range(max_iter):
-        # Round part 1: take the min label over self ∪ neighbors.
+    def min_label_round(labels: DataFrame) -> DataFrame:
+        # Part 1: take the min label over self ∪ neighbors.
         nb_min = (
             sym.join(
                 labels.select(F.col("id").alias("nb"), "component"), "nb"
@@ -120,10 +92,10 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        # Round part 2 (path halving): component ids are themselves node
+        # Part 2 (path halving): component ids are themselves node
         # ids, so shortcut every label through its own current label —
         # pointer jumping that makes label distances halve per round.
-        labels = (
+        return (
             stepped.alias("l")
             .join(
                 stepped.select(
@@ -137,17 +109,21 @@ def connected_components(
                 F.col("id"),
                 F.coalesce("parent", "component").alias("component"),
             )
-            # lazy: the convergence collect below materializes it —
-            # one job per round instead of two
-            .localCheckpoint(eager=False)
         )
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
-        if cur_sum == prev_sum:
-            return labels.select("id", "component")
-        prev_sum = cur_sum
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
+
+    def converged(labels: DataFrame) -> bool:
+        sums.append(labels.agg(F.sum("component")).collect()[0][0])
+        return sums[-1] == sums[-2]
+
+    labels, stopped_at = iterate(
+        labels, min_label_round, max_iter,
+        name="connected_components", stop=converged,
     )
+    if stopped_at is None:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
+    return labels.select("id", "component")
 
 
 def dedup_corpus(

@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nextbus2pg_spark.operators.stats import _sorted_fold
+
 #: Buckets for percentage semantics: hash_bucket() ∈ [0, 100).
 N_BUCKETS = 100
 
@@ -1173,7 +1175,7 @@ def dsir_sample(
     aggregates with map-side combine; the per-bucket log-ratio table
     (``n_buckets`` rows) BROADCASTS onto the per-document feature
     counts; per-document scores fold the joined terms in bucket order
-    (deterministic FP sum — the ``_fold_mean`` discipline); selection
+    (deterministic FP sum — the ``stats._sorted_fold`` discipline); selection
     is ``orderBy().limit(k)`` = Spark's distributed TakeOrdered
     (per-partition partial top-k, never a global sort), and the rank
     window runs over the k survivors only. No driver state, no Python.
@@ -1253,22 +1255,10 @@ def dsir_sample(
         cand_feats.groupBy("id", "bucket")
         .agg(F.count(F.lit(1)).alias("__c"))
         .join(F.broadcast(ratio_table), "bucket")
-        .select(
-            "id",
-            F.struct(
-                "bucket", (F.col("__c") * F.col("__lr")).alias("term")
-            ).alias("__bt"),
-        )
+        .select("id", "bucket", (F.col("__c") * F.col("__lr")).alias("term"))
     )
     scored = doc_terms.groupBy("id").agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list("__bt")),
-                lambda t: t["term"],
-            ),
-            F.lit(0.0),
-            lambda acc, term: acc + term,
-        ).alias("__score")
+        _sorted_fold(F.col("bucket"), F.col("term")).alias("__score")
     )
     top = scored.orderBy(F.desc("__score"), F.asc("id")).limit(k)
     w = Window.orderBy(F.desc("__score"), F.asc("id"))

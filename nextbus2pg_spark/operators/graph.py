@@ -14,9 +14,11 @@ Design for 100 TB:
   per the round-6 policy: a web-scale node set is not broadcastable).
 - **The edge list is localCheckpoint-ed once** (it is consumed every
   iteration; without the cut each round would re-derive the caller's
-  full upstream lineage), and each round's rank frame is
-  localCheckpoint-ed so plan depth stays O(1) across iterations —
-  the established iterative shape of ``operators/components.py``.
+  full upstream lineage). Every iterative operator here runs its
+  rounds on ``scale.iterate``, which cuts each round's frame so plan
+  depth stays O(1) across iterations. The undirected operators share
+  one edge prep each: ``symmetric_edges`` (both directions) and
+  ``canonical_edges`` (``a < b``).
 - **One bounded scalar collect per iteration** (the dangling-node
   mass), matching the components convergence scalar: the driver loop
   is control flow, never data flow.
@@ -29,9 +31,8 @@ Design for 100 TB:
 
 Determinism: floating-point SUM order varies with partitioning, so
 ``deterministic=True`` folds every per-node sum over the sorted
-in-neighbor list (``F.aggregate`` over ``array_sort(collect_list)``)
-— bit-for-bit replayable by DuckDB ``list_reduce``, the established
-ANN-internals recipe. The fold materializes each node's in-neighbor
+in-neighbor list (``stats._sorted_fold``) — bit-for-bit replayable by
+DuckDB ``list_reduce``, the established ANN-internals recipe. The fold materializes each node's in-neighbor
 contribution array, fine when max in-degree is bounded (event-type
 graphs, host graphs after per-host aggregation) but wrong for
 power-law web graphs — production runs use the default plain
@@ -50,21 +51,66 @@ a constant is waste (same policy as ``connected_components``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nextbus2pg_spark.operators.scale import iterate
+from nextbus2pg_spark.operators.stats import _sorted_fold, grouped_pearson
 
-def _sorted_fold(key: Column, val: Column) -> Column:
-    """Partition-order-free SUM: left fold of the key-sorted value
-    list, bit-replayable by DuckDB ``list_reduce`` (0.0 + x == x in
-    IEEE doubles, so the missing init on the DuckDB side is exact)."""
-    return F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(key.alias("k"), val.alias("v")))),
-            lambda s: s["v"],
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+_INTEGRAL = {"tinyint", "smallint", "int", "bigint", "long"}
+
+
+def long_ids(edges: DataFrame, src: str, dst: str, op: str) -> DataFrame:
+    """``edges``' two id columns cast to long, after a ``TypeError``
+    unless both are integral: ``cast('long')`` maps non-numeric ids to
+    NULL SILENTLY, which empties the edge set and makes every caller
+    degrade to "no structure found". String ids must be mapped to a
+    numeric key (e.g. xxhash64) first."""
+    dts = dict(edges.dtypes)
+    bad = {c: dts[c] for c in (src, dst) if dts[c] not in _INTEGRAL}
+    if bad:
+        raise TypeError(
+            f"{op} needs integral node id columns; got {bad} — hash or "
+            "dictionary-encode string ids first"
+        )
+    return edges.select(
+        F.col(src).cast("long").alias(src), F.col(dst).cast("long").alias(dst)
+    )
+
+
+def symmetric_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple graph of an edge list as both directions
+    of every edge → distinct ``(node, nb)`` rows, NULL endpoints and
+    self-loops dropped. Lineage cut (lazily): every round of the
+    iterative operators reads it."""
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
+        F.col("a").isNotNull()
+        & F.col("b").isNotNull()
+        & (F.col("a") != F.col("b"))
+    )
+    return (
+        e.select(F.col("a").alias("node"), F.col("b").alias("nb"))
+        .unionByName(e.select(F.col("b").alias("node"), F.col("a").alias("nb")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple graph of an edge list as one ``(a, b)``
+    row per edge with ``a < b`` (``least``/``greatest``), NULL
+    endpoints and self-loops dropped, distinct. Lineage cut (lazily):
+    every caller reads it more than once."""
+    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
+    return (
+        edges.select(a.alias("a"), b.alias("b"))
+        .where(
+            F.col("a").isNotNull()
+            & F.col("b").isNotNull()
+            & (F.col("a") != F.col("b"))
+        )
+        .distinct()
+        .localCheckpoint(eager=False)
     )
 
 
@@ -104,11 +150,7 @@ def pagerank(
         F.col(weight).cast("double") if weight is not None else F.lit(1.0)
     ).alias("w")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w)
-    # Consumed every iteration — cut the caller's lineage once. Lazy:
-    # the NULL-check scan below is the materializing action, so the
-    # caller's lineage is computed exactly once instead of
-    # checkpoint-job + guard-job (guide §1.2 step 1).
-    e = e.localCheckpoint(eager=False)
+    e = e.localCheckpoint(eager=False)  # read every round
     if e.where(
         F.col("src").isNull() | F.col("dst").isNull() | F.col("w").isNull()
     ).limit(1).count():
@@ -122,7 +164,7 @@ def pagerank(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)  # materialized by count()
+        .localCheckpoint(eager=False)
     )
     n = nodes.count()
     if n == 0:
@@ -153,7 +195,7 @@ def pagerank(
             "left",
         ).select(
             "node", F.coalesce("p", F.lit(0.0)).alias("p")
-        ).localCheckpoint(eager=False)  # materialized by the sum below
+        ).localCheckpoint(eager=False)
         total_p = nodes.agg(F.sum("p")).collect()[0][0] or 0.0
         if abs(total_p - 1.0) > 1e-6:
             raise ValueError(
@@ -179,14 +221,9 @@ def pagerank(
     ).localCheckpoint(eager=False)
     has_dangling = bool(dangling_nodes.limit(1).count())
 
-    # Per-round checkpoints are LAZY: with no dangling mass there is no
-    # per-round driver action at all, so the whole fixed-iteration
-    # chain executes as ONE job (plan depth still O(1) per round — the
-    # checkpoint truncates lineage at materialization); with dangling
-    # nodes the next round's scalar collect doubles as the
-    # materializing action, halving the per-round job count.
     base = (1.0 - damping) / n
-    for _ in range(n_iters):
+
+    def power_round(ranks: DataFrame) -> DataFrame:
         if not has_dangling:
             dm = 0.0
         elif deterministic:
@@ -198,13 +235,12 @@ def pagerank(
                 F.sum("rank").alias("m")
             ).collect()[0][0] or 0.0
         if reset is None:
-            ranks = _pagerank_round(
+            return _pagerank_round(
                 ew, nodes, ranks, damping, base, dm / n, deterministic
-            ).localCheckpoint(eager=False)
-        else:
-            ranks = _ppr_round(
-                ew, nodes, ranks, damping, dm, deterministic
-            ).localCheckpoint(eager=False)
+            )
+        return _ppr_round(ew, nodes, ranks, damping, dm, deterministic)
+
+    ranks, _ = iterate(ranks, power_round, n_iters, name="pagerank")
     return ranks.select("node", "rank")
 
 
@@ -303,7 +339,7 @@ def label_propagation(
     count aggregation (map-side partial), one per-node arg-max — no
     collects, no forced broadcasts, AQE picks strategies and handles
     hub skew. The edge list is localCheckpoint-ed once, each round's
-    label frame too, so plan depth stays O(1) across rounds. All
+    label frame by ``iterate``, so plan depth stays O(1). All
     state is integers — no FP anywhere. Isolated nodes are absent
     (singleton communities; same policy as ``connected_components``).
 
@@ -314,39 +350,23 @@ def label_propagation(
     """
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1; got {n_iters}")
-    integral = {"tinyint", "smallint", "int", "bigint", "long"}
-    dts = dict(edges.dtypes)
-    bad = {c: dts[c] for c in (src, dst) if dts[c] not in integral}
-    if bad:
-        raise TypeError(
-            f"label_propagation needs integral node id columns; got "
-            f"{bad} — hash or dictionary-encode string ids first"
-        )
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    if e.where(F.col("a").isNull() | F.col("b").isNull()).limit(1).count():
+    ids = long_ids(edges, src, dst, "label_propagation")
+    if ids.where(
+        F.col(src).isNull() | F.col(dst).isNull()
+    ).limit(1).count():
         raise ValueError(
             "label_propagation edges contain NULL endpoints — drop or "
             "repair them explicitly; silently ignoring edges would "
             "change the communities"
         )
-    e = e.where(F.col("a") != F.col("b"))
-    sym = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nb"))
-        .unionByName(e.select(F.col("b").alias("node"), F.col("a").alias("nb")))
-        .distinct()
-        .localCheckpoint(eager=False)  # consumed every round
-    )
-    # All-integer state and no per-round driver decision → every
-    # checkpoint is LAZY: plan depth stays O(1) per round but the whole
-    # n_iters-round chain executes as ONE job at the caller's action
-    # instead of one scheduled job per round (guide §1.2 step 1).
+    sym = symmetric_edges(ids, src, dst)
     labels = sym.select("node").distinct().select(
         "node", F.col("node").alias("label")
     )
-    for _ in range(n_iters):
-        labels = _lpa_round(sym, labels).localCheckpoint(eager=False)
+    labels, _ = iterate(
+        labels, lambda labels: _lpa_round(sym, labels), n_iters,
+        name="label_propagation",
+    )
     return labels.select("node", "label")
 
 
@@ -458,17 +478,7 @@ def triangle_count(
     production triangle counter makes; leave it None for exact counts
     on bounded-degree graphs.
     """
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(a.alias("a"), b.alias("b"))
-        .where(
-            F.col("a").isNotNull()
-            & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # consumed by wedges, close, degree
-    )
+    e = canonical_edges(edges, src, dst)
     if max_degree is not None:
         if max_degree < 1:
             raise ValueError(f"max_degree must be >= 1; got {max_degree}")
@@ -554,45 +564,34 @@ def bfs_hops(
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0; got {max_hops}")
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a").isNotNull()
-        & F.col("b").isNotNull()
-        & (F.col("a") != F.col("b"))
-    )
-    sym = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nb"))
-        .unionByName(
-            e.select(F.col("b").alias("node"), F.col("a").alias("nb"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # consumed every round
-    )
-    # Lazy checkpoints throughout: the per-round isEmpty probe is the
-    # only required driver action, and it doubles as the materializing
-    # action for that round's frontier — one job per round instead of
-    # three (frontier checkpoint + probe + visited checkpoint).
-    visited = (
+    sym = symmetric_edges(edges, src, dst)
+    seed_frame = (
         seeds.select(F.col(seed_col).alias("node"))
         .where(F.col("node").isNotNull())
         .distinct()
         .withColumn("dist", F.lit(0).cast("int"))
         .localCheckpoint(eager=False)
     )
-    frontier = visited.select("node")
-    for i in range(1, max_hops + 1):
+
+    def hop(state):
+        """(nodes before the frontier, frontier at ``dist``) → the
+        same one hop further out."""
+        inner, frontier, dist = state
+        visited = inner.unionByName(frontier)
         nxt = (
-            sym.join(frontier, "node", "left_semi")
+            sym.join(frontier.select("node"), "node", "left_semi")
             .select(F.col("nb").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(i).cast("int"))
-            .localCheckpoint(eager=False)  # materialized by isEmpty
+            .withColumn("dist", F.lit(dist + 1).cast("int"))
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt.select("node")
-    return visited
+        return visited, nxt, dist + 1
+
+    (inner, frontier, _), _ = iterate(
+        (seed_frame.limit(0), seed_frame, 0), hop, max_hops,
+        name="bfs_hops", stop=lambda state: state[1].isEmpty(),
+    )
+    return inner.unionByName(frontier)
 
 
 def kcore(
@@ -626,19 +625,7 @@ def kcore(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1; got {k}")
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a").isNotNull()
-        & F.col("b").isNotNull()
-        & (F.col("a") != F.col("b"))
-    )
-    sym = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nb"))
-        .unionByName(
-            e.select(F.col("b").alias("node"), F.col("a").alias("nb"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # consumed every round
-    )
+    sym = symmetric_edges(edges, src, dst)
 
     def _alive_degrees(alive: DataFrame) -> DataFrame:
         return (
@@ -650,22 +637,24 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("core_degree"))
         )
 
-    # Lazy checkpoints: the per-round convergence count is the only
-    # required driver action and it materializes that round's alive
-    # set — one job per round instead of two.
-    alive = sym.select("node").distinct().localCheckpoint(eager=False)
-    n_prev = alive.count()
-    for _ in range(max_iters):
-        alive = (
+    def peel(alive: DataFrame) -> DataFrame:
+        return (
             _alive_degrees(alive)
             .where(F.col("core_degree") >= F.lit(k))
             .select("node")
-            .localCheckpoint(eager=False)  # materialized by count()
         )
-        n = alive.count()
-        if n == n_prev:  # monotone: equal count == identical set
-            break
-        n_prev = n
+
+    alive = sym.select("node").distinct().localCheckpoint(eager=False)
+    sizes = [alive.count()]
+
+    def settled(alive: DataFrame) -> bool:
+        # monotone: an equal count means an identical set
+        sizes.append(alive.count())
+        return sizes[-1] == sizes[-2]
+
+    alive, _ = iterate(
+        alive, peel, max_iters, name="kcore", stop=settled
+    )
     return _alive_degrees(alive)
 
 
@@ -764,20 +753,9 @@ def link_prediction(
     existing edges, two degree joins. No collects, no broadcasts of
     unbounded relations.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a").isNotNull() & F.col("b").isNotNull()
-        & (F.col("a") != F.col("b"))
-    )
-    und = (
-        e.select("a", "b")
-        .unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds degrees + wedges + anti
-    )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).select(
-        F.col("a").alias("node"), "deg"
-    )
-    centers = und.select(F.col("a").alias("z"), F.col("b").alias("nb"))
+    und = symmetric_edges(edges, src, dst)
+    deg = und.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
+    centers = und.select(F.col("node").alias("z"), "nb")
     if max_degree is not None:
         keep = deg.where(F.col("deg") <= F.lit(max_degree)).select(
             F.col("node").alias("z")
@@ -798,8 +776,8 @@ def link_prediction(
             F.col("z"), F.lit(1.0) / F.col("deg_z").cast("double")
         ).alias("resource_allocation"),
     )
-    existing = und.where(F.col("a") < F.col("b")).select(
-        F.col("a").alias("node_a"), F.col("b").alias("node_b")
+    existing = und.where(F.col("node") < F.col("nb")).select(
+        F.col("node").alias("node_a"), F.col("nb").alias("node_b")
     )
     non_edges = scored.join(existing, ["node_a", "node_b"], "left_anti")
     return (
@@ -866,10 +844,7 @@ def hits(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
     )
-    # Checkpoint (lazy) BEFORE the NULL guard: the guard scan is then
-    # the materializing action, so the caller's lineage is computed
-    # exactly once instead of guard-scan + checkpoint-job.
-    e = e.localCheckpoint(eager=False)  # consumed twice per round
+    e = e.localCheckpoint(eager=False)  # read twice per round
     if e.where(
         F.col("src").isNull() | F.col("dst").isNull()
     ).limit(1).count():
@@ -931,22 +906,28 @@ def hits(
         )
         return agg.select("node", F.col("s").alias("raw"))
 
-    # Lazy per-round checkpoints: no driver decision depends on a
-    # round's values (the L2 norm is a broadcast 1-row aggregate inside
-    # the plan, not a collect), so the whole 2·n_iters-step chain
-    # executes under the caller's single action instead of paying one
-    # scheduled job per half-round; lineage still truncates per step.
-    hubs = nodes.select("node", F.lit(1.0).alias("hub"))
-    auths = nodes.select("node", F.lit(1.0).alias("authority"))
-    for _ in range(n_iters):
-        a_raw = _gather(hubs, "hub", "src", "dst", "src")
-        auths = _norm_div(
-            a_raw.withColumnRenamed("raw", "authority"), "authority"
-        ).localCheckpoint(eager=False)
-        h_raw = _gather(auths, "authority", "dst", "src", "dst")
-        hubs = _norm_div(
-            h_raw.withColumnRenamed("raw", "hub"), "hub"
-        ).localCheckpoint(eager=False)
+    def half_round(state):
+        """The a-step (from the hubs) or the h-step (from the new
+        authorities): the a-step frame feeds the h-step, so each half
+        is its own ``iterate`` round and its own cut."""
+        hubs, auths, a_step = state
+        if a_step:
+            raw = _gather(hubs, "hub", "src", "dst", "src")
+            return hubs, _norm_div(
+                raw.withColumnRenamed("raw", "authority"), "authority"
+            ), False
+        raw = _gather(auths, "authority", "dst", "src", "dst")
+        hubs = _norm_div(raw.withColumnRenamed("raw", "hub"), "hub")
+        return hubs, auths, True
+
+    (hubs, auths, _), _ = iterate(
+        (
+            nodes.select("node", F.lit(1.0).alias("hub")),
+            nodes.select("node", F.lit(1.0).alias("authority")),
+            True,
+        ),
+        half_round, 2 * n_iters, name="hits",
+    )
     # The one restore join (see _gather): nodes the iteration never
     # scored are exactly the zero-score nodes the per-round restores
     # used to carry.
@@ -990,23 +971,12 @@ def modularity(
     two label-sized aggregations, and a community-sized sum — nothing
     beyond the edge scan grows with the graph.
     """
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(a.alias("a"), b.alias("b"))
-        .where(
-            F.col("a").isNotNull()
-            & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # consumed by tagged + m
-    )
+    e = canonical_edges(edges, src, dst)
     lab = labels.select(
         F.col(node_col).alias("__n"), F.col(label_col).alias("__l")
     )
     # tagged feeds the NULL guard plus the intra/degree aggregates —
-    # checkpoint it (lazily: the guard scan below materializes it) so
-    # the two label joins run once instead of once per consumer.
+    # checkpoint it so the two label joins run once, not per consumer.
     tagged = (
         e.join(lab.withColumnsRenamed({"__n": "a", "__l": "la"}), "a", "left")
         .join(lab.withColumnsRenamed({"__n": "b", "__l": "lb"}), "b", "left")
@@ -1072,19 +1042,7 @@ def degree_assortativity(
     end). Zero-variance degree distributions (regular graphs) yield
     NULL, per the stats-module convention.
     """
-    from nextbus2pg_spark.operators.stats import grouped_pearson
-
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(a.alias("a"), b.alias("b"))
-        .where(
-            F.col("a").isNotNull()
-            & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # degrees + both orientations
-    )
+    e = canonical_edges(edges, src, dst)
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))

@@ -19,11 +19,10 @@ Design for 100 TB:
   literal mean/component arrays.
 - **Determinism**: FP sum order varies with partitioning, so
   ``deterministic=True`` folds every per-group sum over the
-  row-id-sorted contribution list (the ``_fold_mean`` recipe of
-  ``operators/similarity.py``) and the driver-side iteration sums in
-  ascending index order — every intermediate is then bit-replayable
-  by a DuckDB ``list_reduce`` chain (see ``plans/northstar.py``
-  ``q_pca_project``). The fold materializes n-element lists per
+  row-id-sorted contribution list (``stats._sorted_fold``) and the
+  driver-side iteration sums in ascending index order — every
+  intermediate is then bit-replayable by a DuckDB ``list_reduce``
+  chain (see ``plans/northstar.py`` ``q_pca_project``). The fold materializes n-element lists per
   group, fine at oracle scale; production runs keep the default
   plain ``F.sum`` (map-side partial, no lists) and tests pin the two
   modes agree to float tolerance.
@@ -45,8 +44,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nextbus2pg_spark.operators.similarity import _fold_mean
-from nextbus2pg_spark.operators.graph import _sorted_fold
+from nextbus2pg_spark.operators.stats import _sorted_fold
 
 
 def _as_double(vec_col: str):
@@ -96,14 +94,13 @@ def pca_power_iteration(
     per_dim = base.select(
         "id", F.posexplode("vv").alias("i", "x")
     )
-    if deterministic:
-        mu_rows = per_dim.groupBy("i").agg(
-            _fold_mean(F.col("id"), F.col("x")).alias("m")
-        ).collect()
-    else:
-        mu_rows = per_dim.groupBy("i").agg(
-            (F.sum("x") / F.count(F.lit(1))).alias("m")
-        ).collect()
+    total = (
+        _sorted_fold(F.col("id"), F.col("x")) if deterministic
+        else F.sum("x")
+    )
+    mu_rows = per_dim.groupBy("i").agg(
+        (total / F.count(F.lit(1))).alias("m")
+    ).collect()
     mu = [0.0] * d
     for r in mu_rows:
         mu[r.i] = float(r.m)

@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nextbus2pg_spark.operators.scale import cut, iterate
+from nextbus2pg_spark.operators.stats import _sorted_fold
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Sequential in-order double fold — deterministic, engine-portable."""
@@ -26,26 +29,6 @@ def _dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def _fold_mean(key: Column, val: Column) -> Column:
-    """Partition-order-free MEAN aggregate: left fold of the key-sorted
-    value list, divided by the group count — bit-replayable by DuckDB
-    ``list_reduce`` (0.0 + x == x, so the init-less reduce matches).
-    The sorted fold materializes the group's value list, fine for
-    centroid-member groups (bounded by cluster size at training
-    sample scale) — production training keeps the default ``F.avg``
-    (map-side partial, no list) and tests pin both modes agree."""
-    return F.aggregate(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(key.alias("k"), val.alias("v")))
-            ),
-            lambda s: s["v"],
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ) / F.count(F.lit(1))
 
 
 def with_norm(df: DataFrame, vec_col: str, out_col: str = "norm") -> DataFrame:
@@ -416,13 +399,17 @@ def kmeans_centroids(
         "__vec",
         "__n",
     )
-    for _ in range(n_iters):
+    def lloyd(cents: DataFrame) -> DataFrame:
         members = _assign_centroids(
             vsrc, cents, nprobe=1, vec_col="__vec", norm_col="__n"
         )
-        cents = _lloyd_update(
+        return _lloyd_update(
             cents, members, ["centroid_id"], "__vec", deterministic
         )
+
+    cents, _ = iterate(
+        cents, lloyd, n_iters, name="kmeans_centroids", fans_out=True
+    )
     return cents
 
 
@@ -441,11 +428,14 @@ def _lloyd_update(
     pos) mean (``_fold_mean`` over the member-id-sorted values when
     ``deterministic``, else ``F.avg``), then re-pack by pos. A
     centroid with no members keeps its vector (left join + coalesce),
-    so the centroid set's shape is stable. The result is eagerly
-    checkpointed: the next iteration's assignment collects it and the
-    lineage stays flat."""
+    so the centroid set's shape is stable. The next round's assignment
+    and its update both read the result, so the training loops cut it
+    eagerly (``iterate(fans_out=True)``)."""
     val = F.col("val").cast("double")
-    mean = _fold_mean(F.col("id"), val) if deterministic else F.avg(val)
+    mean = (
+        _sorted_fold(F.col("id"), val) / F.count(F.lit(1))
+        if deterministic else F.avg(val)
+    )
     means = (
         members.select(*key, "id", F.posexplode(vec_col).alias("pos", "val"))
         .groupBy(*key, "pos")
@@ -457,7 +447,6 @@ def _lloyd_update(
     return (
         cents.join(means, key, "left")
         .select(*key, F.coalesce("new_vec", "c_vec").alias("c_vec"))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -967,24 +956,28 @@ def pq_train(
     ).select("id", F.col("__s.sub").alias("sub"), F.col("__s.sv").alias("sv"))
 
     # Seed: first n_codes vectors by id, per subspace (deterministic).
+    # Cut lazily: the first read is pq_encode's shape read or the first
+    # round's broadcast, before the other consumer.
     w_seed = Window.partitionBy("sub").orderBy(F.col("id").asc())
-    cents = (
+    cents = cut(
         sub_rows.withColumn("__rn", F.row_number().over(w_seed))
         .where(F.col("__rn") <= n_codes)
         .select(
             "sub", F.col("__rn").alias("code_id"), F.col("sv").alias("c_vec")
         )
     )
-    for _ in range(n_iters):
+    def lloyd(cents: DataFrame) -> DataFrame:
         # In-row assignment: sv rides in-row, so only the means
         # aggregate shuffles.
         assigned = sub_rows.crossJoin(F.broadcast(_book_row(cents))).select(
             "id", "sub", "sv",
             _code_of(F.col("sub"), F.col("sv")).alias("code_id"),
         )
-        cents = _lloyd_update(
+        return _lloyd_update(
             cents, assigned, ["sub", "code_id"], "sv", deterministic
         )
+
+    cents, _ = iterate(cents, lloyd, n_iters, name="pq_train", fans_out=True)
     return cents
 
 

@@ -34,6 +34,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nextbus2pg_spark.operators.stats import _sorted_fold
+
 #: 16^13 = 2^52 — the hash domain size; exact as a double.
 _KMV_DOMAIN = 16**13
 
@@ -498,17 +500,7 @@ def hll_raw_estimate(registers: DataFrame, p: int = 6) -> DataFrame:
     term = F.lit(1.0) / F.expr(
         "CAST(shiftleft(CAST(1 AS BIGINT), rho) AS DOUBLE)"
     )
-    folded = F.aggregate(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("bucket").alias("k"),
-                                        term.alias("v")))
-            ),
-            lambda s: s["v"],
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    folded = _sorted_fold(F.col("bucket"), term)
     return filled.agg(
         (F.lit(alpha) * F.lit(float(m * m)) / folded).alias("raw_estimate"),
         F.sum((F.col("rho") == 0).cast("long")).alias("n_zero_registers"),

@@ -20,10 +20,26 @@ group count bounds the output, not the input.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _DEC = "decimal(38,0)"
+
+
+def _sorted_fold(key: Column, val: Column) -> Column:
+    """Partition-order-free SUM aggregate: left fold of the key-sorted
+    value list, bit-replayable by DuckDB ``list_reduce`` (0.0 + x == x
+    in IEEE doubles, so the missing init on the DuckDB side is exact).
+    The fold materializes each group's value list: the oracle-mode
+    sum; production paths keep the map-side partial ``F.sum``."""
+    return F.aggregate(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(key.alias("k"), val.alias("v")))),
+            lambda s: s["v"],
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def grouped_pearson(
@@ -101,8 +117,6 @@ def chi_squared(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     NULL categories drop the row (a NULL level would silently absorb
     mass from every real level). ``dof = (R-1)(C-1)``.
     """
-    from nextbus2pg_spark.operators.graph import _sorted_fold
-
     base = df.select(
         F.col(col_a).alias("a"), F.col(col_b).alias("b")
     ).where(F.col("a").isNotNull() & F.col("b").isNotNull())

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nextbus2pg_spark.operators.scale import ensure_min_parallelism
+from nextbus2pg_spark.operators.stats import _sorted_fold
 
 
 def doc_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -280,14 +281,7 @@ def bigram_logprob(
         .join(ctx, "w1")
         .select("id", "w1", "w2", "m", lp.alias("lp"))
     )
-    folded = F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("w1", "w2", "lp"))),
-            lambda s: s["lp"],
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    folded = _sorted_fold(F.struct("w1", "w2"), F.col("lp"))
     return scored.groupBy("id").agg(
         F.sum("m").alias("n_bigrams"),
         F.round(folded, 6).alias("sum_logprob"),

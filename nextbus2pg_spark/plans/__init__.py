@@ -37,6 +37,15 @@ from nextbus2pg_spark.plans import timeseries as _timeseries  # noqa: F401,E402
 TOUCHED = (
     "q_pq_assign", "q_pq_topk", "q_ivfpq_seeded", "q_ivfpq_topk",
     "q_semantic_dedup", "q_hits", "q_ivf_topk",
+    "q_pagerank", "q_pagerank_personalized", "q_label_propagation",
+    "q_bfs_hops", "q_kcore", "q_modularity", "q_triangle_count",
+    "q_assortativity", "q_link_prediction",
+    "q_dedup_clusters", "q_corpus_dedup", "q_dedup_keep_best",
+    "q_embedding_clusters", "q_crawl_to_corpus", "q_corpus_assembly",
+    "q_curation_pipeline",
+    "q_bpe_merges", "q_bpe_token_count", "q_tokenizer_fertility",
+    "q_quality_classifier", "q_hll_estimate", "q_lm_logprob",
+    "q_dsir_sample", "q_pca_project", "q_chi_squared",
 )
 
 _REPO_ROOT = Path(__file__).resolve().parents[2]

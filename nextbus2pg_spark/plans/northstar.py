@@ -1260,7 +1260,7 @@ def _kmeans_chain(n_iters: int, n_centroids: int) -> tuple[str, str]:
     first-N seed, then per iteration (a) nearest-centroid assignment
     by exact cosine with centroid_id tie-break, (b) per-centroid
     member list sorted by id, (c) per-dimension fold-mean (matching
-    the Spark side's ``_fold_mean``), empty centroids keeping their
+    the Spark side's sorted fold over the member count), empty centroids keeping their
     previous vector. Assumes CTEs ``vr`` (id, vv) / ``vn`` (+ norm n)
     exist. Returns (sql, final_cte_name)."""
     parts = [f"""c0 AS MATERIALIZED (
