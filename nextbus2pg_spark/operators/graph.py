@@ -350,7 +350,11 @@ def label_propagation(
     """
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1; got {n_iters}")
+    # cut before the guard, as pagerank does: the guard's job fills
+    # the cut and the symmetric edge prep reads it, so the caller's
+    # edge lineage runs once
     ids = long_ids(edges, src, dst, "label_propagation")
+    ids = ids.localCheckpoint(eager=False)
     if ids.where(
         F.col(src).isNull() | F.col(dst).isNull()
     ).limit(1).count():

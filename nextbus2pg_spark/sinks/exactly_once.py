@@ -45,6 +45,8 @@ class IdempotentParquetSink:
         return batch_id <= self.store.txn_version(app_id)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        if self.committed(batch_id):  # a replay: no job runs
+            return
         batch_df, seen = staged(batch_df, n=F.count(F.lit(1)))
         if seen["n"] == 0:  # T7
             return

@@ -529,6 +529,14 @@ class BucketedParquetStore:
         finally:
             self._txn = prev
 
+    def _replayed(self, man: dict | None) -> bool:
+        """Whether ``man`` already records the open :meth:`transaction`:
+        its version is at or below the one ``man`` holds for its app."""
+        if self._txn is None or man is None:
+            return False
+        app_id, version = self._txn
+        return man.get("txn", {}).get(app_id, -1) >= version
+
     def current_manifest(self) -> dict:
         man = self._latest_manifest()
         if man is None:
@@ -1029,8 +1037,12 @@ class BucketedParquetStore:
         released and the caller retries the whole merge. On a table
         with no manifest ``existing`` is ``incoming.limit(0)`` — an
         empty relation the optimizer folds out of ``fn``'s plan — and
-        nothing is staged."""
+        nothing is staged. A replayed :meth:`transaction` returns
+        before any job runs (``_commit`` checks again under its
+        claim)."""
         man = self._latest_manifest()
+        if self._replayed(man):
+            return
         if man is None:
             self._commit(fn(incoming.limit(0), incoming), (), -1)
             return
@@ -1062,12 +1074,12 @@ class BucketedParquetStore:
         gen = self.claim_next_generation()
         try:
             man = self._latest_manifest()
+            if self._replayed(man):
+                self._release_claim(gen)
+                return
             txn = dict(man.get("txn", {})) if man is not None else {}
             if self._txn is not None:
                 app_id, version = self._txn
-                if txn.get(app_id, -1) >= version:  # a replay
-                    self._release_claim(gen)
-                    return
                 txn[app_id] = version
             base_gen = -1 if man is None else int(man["gen"])
             if expected_gen is not None and base_gen != int(expected_gen):

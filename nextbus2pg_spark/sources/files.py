@@ -1,4 +1,5 @@
-"""Schema-explicit file sources/sinks — CSV / JSON-lines / parquet.
+"""Schema-explicit file sources/sinks — CSV / JSON-lines / parquet /
+binary files.
 
 The reference's only sources are HTTP XML (S1-S4) and its own
 Postgres tables (S5-S7); this module rounds out the file-format
@@ -85,6 +86,38 @@ def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 
 
+#: The fixed schema of Spark's ``binaryFile`` source. Batch reads infer
+#: it; streaming reads refuse to start without it, so the one reader
+#: below always passes it.
+_BINARY_FILE_SCHEMA = (
+    "path string, modificationTime timestamp, length bigint, content binary"
+)
+
+
+def read_binary_files(
+    spark: SparkSession,
+    path: str,
+    glob: str | None = None,
+    streaming: bool = False,
+    recursive: bool = False,
+) -> DataFrame:
+    """The package's one ``binaryFile`` reader: each file under ``path``
+    whose name matches ``glob`` becomes one ``(path, modificationTime,
+    length, content)`` row, read by executors. ``streaming=True`` gives
+    the same definition as a file-watching stream, whose file listing
+    is the offset log; ``recursive=True`` lists nested directories too.
+    Hadoop's listing skips dot-prefixed names, so a spool writer's
+    in-flight ``.tmp-`` files are never read."""
+    reader = (spark.readStream if streaming else spark.read).format(
+        "binaryFile"
+    ).schema(_BINARY_FILE_SCHEMA)
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    if recursive:
+        reader = reader.option("recursiveFileLookup", "true")
+    return reader.load(path)
+
+
 def read_media_dir(
     spark: SparkSession,
     path: str,
@@ -95,26 +128,18 @@ def read_media_dir(
     """Binary media ingestion: a directory of image/audio/video files →
     the canonical media schema (``operators/multimodal.MEDIA_SCHEMA``).
 
-    Uses Spark's built-in ``binaryFile`` source — each file becomes one
-    row (path, modificationTime, length, content) read directly by
-    executors; no driver-side file loop, and pushdown on ``length``
-    filters oversized blobs before the bytes ever transfer. The file
-    path hashes to a deterministic ``media_id`` (xxhash64 — stable
-    across runs and retries); metadata stays NULL until a decode stage
-    fills it.
+    Uses :func:`read_binary_files` — each file becomes one row read
+    directly by executors; no driver-side file loop, and pushdown on
+    ``length`` filters oversized blobs before the bytes ever transfer.
+    The file path hashes to a deterministic ``media_id`` (xxhash64 —
+    stable across runs and retries); metadata stays NULL until a
+    decode stage fills it.
 
     ``streaming=True`` returns the same definition as a file-watching
     stream (new files become micro-batches) — the multimodal analogue
     of the vehicle-feed source.
     """
-    reader = (
-        spark.readStream.format("binaryFile")
-        if streaming
-        else spark.read.format("binaryFile")
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(path)
+    raw = read_binary_files(spark, path, glob, streaming)
     return raw.select(
         F.xxhash64("path").alias("media_id"),
         F.lit(kind).alias("kind"),

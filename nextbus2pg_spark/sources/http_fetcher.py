@@ -13,9 +13,10 @@ Design (deliberately driver/daemon-side, NOT a Spark job):
 
 - **stdlib only** (``urllib.request``): retries with exponential
   backoff, timeout, gzip transparently decoded. No third-party client.
-- **Atomic spool writes**: payload → ``.tmp-`` file in the spool dir,
-  then ``os.replace`` — the stream's listing can never observe a
-  truncated document (its permissive-mode guard stays a last resort).
+- **Atomic spool writes** (``_spool_write``, shared by every fetcher
+  here): payload → ``.tmp-`` file in the spool dir, then
+  ``os.replace`` — the stream's listing can never observe a truncated
+  document (its permissive-mode guard stays a last resort).
 - **Incremental offsets, fetcher-side**: the per-route ``t`` parameter
   is the previous document's ``lastTime`` (monotone per the API
   contract), persisted in the spool FILENAMES themselves — a restarted
@@ -31,12 +32,14 @@ Scale note: one fetcher daemon serves any cluster size — the feed API
 is the bottleneck, not Spark. Documents land on shared storage; the
 source's ``latestOffset`` lists names only.
 
-This module also hosts :class:`CdxRangeFetcher` (round-11), the crawl
-seam's manifest executor: HTTP ``Range`` reads of individual WARC
-records selected by the CDX index (``sources/cdx.py``), with the same
-atomic-spool / filenames-are-the-ledger crash-safety — and
-:class:`HostThrottle` (round-13), the per-host politeness budget all
-three fetchers share (min request interval per host, optional robots
+This module also hosts the crawl seam's four ledgered fetchers —
+:class:`CdxRangeFetcher` (HTTP ``Range`` reads of the WARC records a
+CDX index selects, ``sources/cdx.py``), :class:`RobotsFetcher`,
+:class:`SitemapFetcher` and :class:`PageFetcher`. They share one
+spool contract and one fetch loop, :class:`_LedgeredSpool`, and each
+supplies only its URL and its response-to-bytes step. All five
+fetchers share :class:`HostThrottle` (round-13), the per-host
+politeness budget (min request interval per host, optional robots
 ``Crawl-delay`` overrides via ``sources/robots.robots_crawl_delays``).
 """
 
@@ -51,6 +54,7 @@ import urllib.parse
 import urllib.request
 
 from nextbus2pg_spark.sources.feed_stream import _scan_spool
+from nextbus2pg_spark.sources.files import read_binary_files
 
 #: The public NextBus-style feed endpoint shape (route.py:14-16).
 DEFAULT_COMMAND = "vehicleLocations"
@@ -295,13 +299,9 @@ class HttpFeedFetcher:
         return advanced
 
     def _write_atomic(self, route: str, time_ms: int, text: str) -> None:
-        final = os.path.join(self.spool_dir, f"{route}__{time_ms}.xml")
-        tmp = os.path.join(
-            self.spool_dir, f".tmp-{route}__{time_ms}.xml"
+        _spool_write(
+            self.spool_dir, f"{route}__{time_ms}.xml", text.encode("utf-8")
         )
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(text)
-        os.replace(tmp, final)  # atomic on POSIX: all-or-nothing
 
     # -- daemon loop -----------------------------------------------------
 
@@ -443,7 +443,103 @@ def _cap_spool_stem(stem: str) -> str:
     return f"{head.replace('--sha1-', '--sha1~')}--sha1-{digest}"
 
 
-class CdxRangeFetcher:
+def _spool_write(spool_dir: str, name: str, data: bytes) -> None:
+    """Publish ``data`` as ``spool_dir/name``: write a ``.tmp-``
+    sibling, then ``os.replace`` it into place (atomic on POSIX), so a
+    listing sees the whole file or none of it. Hadoop's listing skips
+    the dot-prefixed temporary, and so does every ledger."""
+    tmp = os.path.join(spool_dir, f".tmp-{name}")
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, os.path.join(spool_dir, name))
+
+
+def _one_per_request(pending):
+    return ([entry] for entry in pending)
+
+
+class _LedgeredSpool:
+    """The spool contract of the four crawl fetchers
+    (:class:`CdxRangeFetcher`, :class:`RobotsFetcher`,
+    :class:`SitemapFetcher`, :class:`PageFetcher`), stated once:
+
+    - **The filenames are the ledger.** An item spools under its key
+      percent-encoded to one flat name (overlong keys digest-capped by
+      ``_cap_spool_stem``) plus the fetcher's suffix. :meth:`fetched`
+      lists the names already spooled and the fetch loop requests only
+      the rest, so a restarted fetcher resumes exactly where it died
+      and a finished batch re-runs with no request. The fetcher keeps
+      no other state.
+    - **Writes are atomic** (:func:`_spool_write`): a reader never
+      observes a truncated file, and a crash mid-write leaves only a
+      ``.tmp-`` file that the ledger and the readers skip.
+    - **At-least-once.** HTTP failures propagate after the client's
+      retries; the operator owns restart policy, and the ledger makes
+      the re-run cheap. One daemon serves any cluster size — the
+      remote host's rate limit is the bottleneck, never Spark.
+    - **Politeness.** Every request first waits on the optional shared
+      :class:`HostThrottle`.
+
+    A fetcher sets ``ext`` and supplies two steps: ``_url(item)``, the
+    URL an item is fetched from (the item itself by default), and
+    ``_payloads(url, items)``, the bytes spooled for each item of one
+    request."""
+
+    #: Spool file extension: the ledger lists only these names.
+    ext = ""
+
+    def __init__(
+        self,
+        spool_dir: str,
+        *,
+        client: FeedHttpClient | None = None,
+        throttle: "HostThrottle | None" = None,
+    ) -> None:
+        self.spool_dir = spool_dir
+        self.client = client or FeedHttpClient()
+        self.throttle = throttle
+        os.makedirs(spool_dir, exist_ok=True)
+
+    @classmethod
+    def _name(cls, key: str, tag: str = "") -> str:
+        stem = _cap_spool_stem(urllib.parse.quote(key, safe=""))
+        return stem + tag + cls.ext
+
+    def fetched(self) -> "set[str]":
+        """Spool names already fetched (the resume ledger)."""
+        return {
+            n for n in os.listdir(self.spool_dir)
+            if n.endswith(self.ext) and not n.startswith(".tmp-")
+        }
+
+    def _url(self, item) -> str:
+        return item
+
+    def _spool(self, named, runs=_one_per_request) -> int:
+        """The one fetch loop. ``named`` yields ``(spool name, item)``
+        pairs; items already spooled, or repeated, are skipped, and
+        ``runs`` groups the rest into requests (one item each by
+        default). Each request is throttled, fetched, and its items
+        spooled in order. Returns the number of files spooled."""
+        done = self.fetched()
+        pending = []
+        for name, item in named:
+            if name not in done:
+                done.add(name)
+                pending.append((name, item))
+        n = 0
+        for run in runs(pending):
+            url = self._url(run[0][1])
+            if self.throttle is not None:
+                self.throttle.wait(url)
+            payloads = self._payloads(url, [item for _, item in run])
+            for (name, _), data in zip(run, payloads, strict=True):
+                _spool_write(self.spool_dir, name, data)
+                n += 1
+        return n
+
+
+class CdxRangeFetcher(_LedgeredSpool):
     """Execute a CDX fetch manifest as HTTP ranged reads (round-11
     verdict item 4 — the consumer ``cdx_archive_manifest`` lacked):
     each capture ``(filename, offset, length)`` from the filtered
@@ -454,14 +550,13 @@ class CdxRangeFetcher:
     warc_spool_archives``). The index-first pipeline thus ends in
     record bytes: index → filter/dedup → manifest → ranged fetch →
     parse, never touching the ~99% of the crawl the filter dropped.
-
-    Crash-safety mirrors ``HttpFeedFetcher``: spool writes are atomic
-    (``.tmp-`` + ``os.replace``) and the spool FILENAMES are the
-    ledger — ``fetch()`` skips captures whose file already exists, so
-    a restarted fetcher resumes exactly where it died, at-least-once.
-    One daemon serves any cluster size; the archive host's rate limit
-    is the bottleneck, never Spark.
+    A short response (truncated read, stale CDX length past EOF)
+    raises before anything of its request is published — the ledger
+    would otherwise mark a corrupt record done forever (round-12
+    review).
     """
+
+    ext = ".warcrec"
 
     def __init__(
         self,
@@ -471,59 +566,41 @@ class CdxRangeFetcher:
         client: FeedHttpClient | None = None,
         throttle: "HostThrottle | None" = None,
     ) -> None:
+        super().__init__(spool_dir, client=client, throttle=throttle)
         self.base_url = base_url.rstrip("/")
-        self.spool_dir = spool_dir
-        self.client = client or FeedHttpClient()
-        self.throttle = throttle
-        os.makedirs(spool_dir, exist_ok=True)
 
     def _spool_name(self, filename: str, offset: int, length: int) -> str:
         # CC filenames carry path segments — percent-encode to one
-        # flat, collision-free, restart-stable spool name (overlong
-        # sources digest-capped: _cap_spool_stem).
-        safe = _cap_spool_stem(urllib.parse.quote(filename, safe=""))
-        return f"{safe}__{offset}_{length}.warcrec"
+        # flat, collision-free, restart-stable spool name.
+        return self._name(filename, f"__{offset}_{length}")
 
-    def fetched(self) -> "set[str]":
-        """Spool names already fetched (the resume ledger)."""
-        return {
-            n for n in os.listdir(self.spool_dir)
-            if n.endswith(".warcrec") and not n.startswith(".tmp-")
-        }
+    def _named(self, captures):
+        for cap in captures:
+            key = (cap["filename"], int(cap["offset"]), int(cap["length"]))
+            yield self._spool_name(*key), key
+
+    def _url(self, capture) -> str:
+        return f"{self.base_url}/{capture[0]}"
+
+    def _payloads(self, url: str, run) -> "list[bytes]":
+        # one Range read spanning the run, sliced back into its records
+        lo = run[0][1]
+        hi = max(offset + length for _, offset, length in run)
+        data = self.client.get_range(url, lo, hi - lo)
+        if len(data) != hi - lo:
+            raise ValueError(
+                f"short Range response for {run[0][0]}@{lo}: got "
+                f"{len(data)} of {hi - lo} bytes — refusing to "
+                f"publish {len(run)} partial record slices"
+            )
+        return [data[o - lo : o - lo + ln] for _, o, ln in run]
 
     def fetch(self, captures) -> int:
         """Fetch every capture dict (``filename``/``offset``/
         ``length`` keys — ``cdx_records`` rows after filtering) not
-        already spooled; returns the number fetched. HTTP failures
-        propagate after the client's retries — the operator owns
-        restart policy, and the ledger makes the re-run cheap."""
-        done = self.fetched()
-        n = 0
-        for cap in captures:
-            filename = cap["filename"]
-            offset, length = int(cap["offset"]), int(cap["length"])
-            name = self._spool_name(filename, offset, length)
-            if name in done:
-                continue
-            url = f"{self.base_url}/{filename}"
-            if self.throttle is not None:
-                self.throttle.wait(url)
-            data = self.client.get_range(url, offset, length)
-            if len(data) != length:
-                # a short 206 (truncated read / stale CDX length past
-                # EOF) must NOT be published — the ledger would mark a
-                # corrupt record done forever (round-12 review)
-                raise ValueError(
-                    f"short Range response for {filename}@{offset}: "
-                    f"got {len(data)} of {length} bytes"
-                )
-            tmp = os.path.join(self.spool_dir, f".tmp-{name}")
-            with open(tmp, "wb") as f:
-                f.write(data)
-            os.replace(tmp, os.path.join(self.spool_dir, name))
-            done.add(name)
-            n += 1
-        return n
+        already spooled, one request each; returns the number
+        fetched."""
+        return self._spool(self._named(captures))
 
     def fetch_coalesced(
         self,
@@ -549,69 +626,38 @@ class CdxRangeFetcher:
         slicing (gap bytes included), so runs are split whenever the
         span would exceed ``max_span_bytes`` (default 64 MiB) — a
         dense manifest over a 1 GB archive with a generous ``max_gap``
-        must not spike the daemon's RSS by the archive size. A short
-        Range response (truncated read, stale CDX lengths past EOF)
-        raises before anything is published — the per-record slices
-        would otherwise be silently empty/partial AND ledger-done."""
+        must not spike the daemon's RSS by the archive size."""
         if max_gap < 0:
             raise ValueError(f"max_gap must be >= 0; got {max_gap}")
         if max_span_bytes < 1:
             raise ValueError(
                 f"max_span_bytes must be >= 1; got {max_span_bytes}"
             )
-        done = self.fetched()
-        seen: "set[str]" = set()
-        by_file: "dict[str, list[tuple[int, int, str]]]" = {}
-        for cap in captures:
-            filename = cap["filename"]
-            offset, length = int(cap["offset"]), int(cap["length"])
-            name = self._spool_name(filename, offset, length)
-            if name in done or name in seen:
-                continue
-            seen.add(name)
-            by_file.setdefault(filename, []).append(
-                (offset, length, name)
-            )
-        n = 0
 
-        def _flush(filename: str, run: "list[tuple[int, int, str]]"):
-            nonlocal n
-            lo = run[0][0]
-            hi = max(o + ln for o, ln, _ in run)
-            url = f"{self.base_url}/{filename}"
-            if self.throttle is not None:
-                self.throttle.wait(url)
-            data = self.client.get_range(url, lo, hi - lo)
-            if len(data) != hi - lo:
-                raise ValueError(
-                    f"short Range response for {filename}@{lo}: got "
-                    f"{len(data)} of {hi - lo} bytes — refusing to "
-                    f"publish {len(run)} partial record slices"
-                )
-            for offset, length, name in run:
-                tmp = os.path.join(self.spool_dir, f".tmp-{name}")
-                with open(tmp, "wb") as f:
-                    f.write(data[offset - lo : offset - lo + length])
-                os.replace(tmp, os.path.join(self.spool_dir, name))
-                n += 1
+        def runs(pending):
+            by_file: "dict[str, list]" = {}
+            for entry in pending:
+                by_file.setdefault(entry[1][0], []).append(entry)
+            for entries in by_file.values():
+                entries.sort(key=lambda e: e[1])
+                run, end = [], 0
+                for entry in entries:
+                    _, offset, length = entry[1]
+                    new_end = max(end, offset + length)
+                    if (
+                        run
+                        and offset <= end + max_gap
+                        and new_end - run[0][1][1] <= max_span_bytes
+                    ):
+                        run.append(entry)
+                        end = new_end
+                    else:
+                        if run:
+                            yield run
+                        run, end = [entry], offset + length
+                yield run
 
-        for filename, caps in by_file.items():
-            caps.sort()
-            run = [caps[0]]
-            end = caps[0][0] + caps[0][1]
-            for c in caps[1:]:
-                new_end = max(end, c[0] + c[1])
-                if (
-                    c[0] <= end + max_gap
-                    and new_end - run[0][0] <= max_span_bytes
-                ):
-                    run.append(c)
-                    end = new_end
-                else:
-                    _flush(filename, run)
-                    run, end = [c], c[0] + c[1]
-            _flush(filename, run)
-        return n
+        return self._spool(self._named(captures), runs)
 
 
 def coalesce_ranges(captures, max_gap: int = 0):
@@ -662,8 +708,8 @@ def coalesce_ranges(captures, max_gap: int = 0):
     return out
 
 
-class RobotsFetcher:
-    """Fetch per-host ``robots.txt`` into an atomic spool (round 13 —
+class RobotsFetcher(_LedgeredSpool):
+    """Fetch per-host ``robots.txt`` into the spool (round 13 —
     the hop that was missing between a URL frontier and
     ``sources/robots.robots_rules``, which consumes a ``(domain,
     robots_txt)`` frame; ``robots_spool_frame`` reads the spool back
@@ -684,11 +730,9 @@ class RobotsFetcher:
       spools and the error propagates: the spec says assume complete
       disallow while unreachable, and an UNSPOOLED host is exactly
       that verdict for a frontier that inner-joins on fetched domains
-      (fail-closed; the ledger retries the host on the next run).
+      (fail-closed; the ledger retries the host on the next run)."""
 
-    Crash-safety and politeness mirror the other fetchers: ``.tmp-``
-    + ``os.replace`` atomic writes, spool filenames as the resume
-    ledger, optional shared :class:`HostThrottle`."""
+    ext = ".robots"
 
     def __init__(
         self,
@@ -698,93 +742,58 @@ class RobotsFetcher:
         throttle: "HostThrottle | None" = None,
         scheme: str = "https",
     ) -> None:
-        self.spool_dir = spool_dir
-        self.client = client or FeedHttpClient()
-        self.throttle = throttle
+        super().__init__(spool_dir, client=client, throttle=throttle)
         self.scheme = scheme
-        os.makedirs(spool_dir, exist_ok=True)
 
-    @staticmethod
-    def spool_name(host: str) -> str:
-        return (
-            _cap_spool_stem(urllib.parse.quote(host.lower(), safe=""))
-            + ".robots"
-        )
+    @classmethod
+    def spool_name(cls, host: str) -> str:
+        return cls._name(host.lower())
 
-    def fetched(self) -> "set[str]":
-        """Spool names already fetched (the resume ledger)."""
-        return {
-            n for n in os.listdir(self.spool_dir)
-            if n.endswith(".robots") and not n.startswith(".tmp-")
-        }
+    def _url(self, host: str) -> str:
+        return f"{self.scheme}://{host}/robots.txt"
+
+    def _payloads(self, url: str, hosts) -> "list[bytes]":
+        try:
+            return [self.client.get(url)]
+        except urllib.error.HTTPError as e:
+            if e.code >= 500:
+                raise
+            return [
+                b"# robots.txt unavailable (HTTP "
+                + str(e.code).encode()
+                + b"): crawl unrestricted per RFC 9309 2.3.1.3\n"
+            ]
 
     def fetch(self, hosts) -> int:
         """Fetch every host's robots.txt not already spooled; returns
-        the number spooled. 5xx/transport failures propagate after the
-        client's retries (nothing spools for that host — the
-        fail-closed 'unreachable' verdict); the ledger makes the
-        re-run cheap."""
-        done = self.fetched()
-        n = 0
-        for host in hosts:
-            name = self.spool_name(host)
-            if name in done:
-                continue
-            url = f"{self.scheme}://{host}/robots.txt"
-            if self.throttle is not None:
-                self.throttle.wait(url)
-            try:
-                data = self.client.get(url)
-            except urllib.error.HTTPError as e:
-                if e.code >= 500:
-                    raise
-                # 4xx: unavailable -> unrestricted. A comment line,
-                # not an empty file — binaryFile skips 0-byte files,
-                # which would erase the verdict from the frame.
-                data = (
-                    b"# robots.txt unavailable (HTTP "
-                    + str(e.code).encode()
-                    + b"): crawl unrestricted per RFC 9309 2.3.1.3\n"
-                )
-            tmp = os.path.join(self.spool_dir, f".tmp-{name}")
-            with open(tmp, "wb") as f:
-                f.write(data)
-            os.replace(tmp, os.path.join(self.spool_dir, name))
-            done.add(name)
-            n += 1
-        return n
+        the number spooled."""
+        return self._spool((self.spool_name(h), h) for h in hosts)
 
 
 def robots_spool_frame(spark, spool_dir: str):
     """Read a :class:`RobotsFetcher` spool as the ``(domain,
     robots_txt)`` frame ``robots_rules`` / ``robots_crawl_delays``
-    consume — executor-parallel ``binaryFile`` read, one host per row,
-    the domain percent-decoded back out of the ledger filename
-    (digest-capped names — hosts are bounded at 253 octets, so only
-    adversarial inputs cap — surface their truncated head; the rules
-    for such a row still parse, provenance is just lossy). Bytes
-    become text via the binary→string CAST, not ``decode``: robots.txt
-    is ASCII in practice, a stray high byte is data noise, and Spark
-    4's ``decode`` raises MALFORMED_CHARACTER_CODING on it while the
-    cast passes the bytes through — a malformed comment must not fail
-    the scan."""
+    consume — one host per row, the domain percent-decoded back out of
+    the ledger filename (digest-capped names — hosts are bounded at
+    253 octets, so only adversarial inputs cap — surface their
+    truncated head; the rules for such a row still parse, provenance
+    is just lossy). Bytes become text via the binary→string CAST, not
+    ``decode``: robots.txt is ASCII in practice, a stray high byte is
+    data noise, and Spark 4's ``decode`` raises MALFORMED_CHARACTER_
+    CODING on it while the cast passes the bytes through — a malformed
+    comment must not fail the scan."""
     from pyspark.sql import functions as F
 
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.robots")
-        .load(spool_dir)
-        .select(
-            F.url_decode(
-                F.regexp_extract("path", r"([^/]+)\.robots$", 1)
-            ).alias("domain"),
-            F.col("content").cast("string").alias("robots_txt"),
-        )
+    return read_binary_files(spark, spool_dir, "*.robots").select(
+        F.url_decode(
+            F.regexp_extract("path", r"([^/]+)\.robots$", 1)
+        ).alias("domain"),
+        F.col("content").cast("string").alias("robots_txt"),
     )
 
 
-class SitemapFetcher:
-    """Fetch sitemap documents into an atomic spool (round-12 verdict
+class SitemapFetcher(_LedgeredSpool):
+    """Fetch sitemap documents into the spool (round-12 verdict
     item 4) — the fetch hop between ``robots_sitemaps``' advertised
     URLs and ``sitemap_entries``' parse, including the one-level
     ``<sitemapindex>`` → child-sitemap indirection the spec allows
@@ -796,60 +805,25 @@ class SitemapFetcher:
     representation itself, not a Content-Encoding the client already
     stripped) — decompression is the parser's job
     (``sources/sitemap.sitemap_documents``), keeping the spool bytes
-    verbatim-refetchable. Crash-safety mirrors the other fetchers:
-    ``.tmp-`` + ``os.replace`` atomic writes, spool FILENAMES as the
-    resume ledger (percent-encoded URL, collision-free)."""
+    verbatim-refetchable."""
 
-    def __init__(
-        self,
-        spool_dir: str,
-        *,
-        client: FeedHttpClient | None = None,
-        throttle: "HostThrottle | None" = None,
-    ) -> None:
-        self.spool_dir = spool_dir
-        self.client = client or FeedHttpClient()
-        self.throttle = throttle
-        os.makedirs(spool_dir, exist_ok=True)
+    ext = ".sitemap"
 
-    @staticmethod
-    def spool_name(url: str) -> str:
-        return (
-            _cap_spool_stem(urllib.parse.quote(url, safe="")) + ".sitemap"
-        )
+    @classmethod
+    def spool_name(cls, url: str) -> str:
+        return cls._name(url)
 
-    def fetched(self) -> "set[str]":
-        """Spool names already fetched (the resume ledger)."""
-        return {
-            n for n in os.listdir(self.spool_dir)
-            if n.endswith(".sitemap") and not n.startswith(".tmp-")
-        }
+    def _payloads(self, url: str, urls) -> "list[bytes]":
+        return [self.client.get(url)]
 
     def fetch(self, urls) -> int:
         """Fetch every URL not already spooled; returns the number
-        fetched. HTTP failures propagate after the client's retries —
-        the operator owns restart policy, and the ledger makes the
-        re-run cheap."""
-        done = self.fetched()
-        n = 0
-        for url in urls:
-            name = self.spool_name(url)
-            if name in done:
-                continue
-            if self.throttle is not None:
-                self.throttle.wait(url)
-            data = self.client.get(url)
-            tmp = os.path.join(self.spool_dir, f".tmp-{name}")
-            with open(tmp, "wb") as f:
-                f.write(data)
-            os.replace(tmp, os.path.join(self.spool_dir, name))
-            done.add(name)
-            n += 1
-        return n
+        fetched."""
+        return self._spool((self.spool_name(u), u) for u in urls)
 
 
-class PageFetcher:
-    """Fetch crawl PAGES into an atomic spool — the live executor for
+class PageFetcher(_LedgeredSpool):
+    """Fetch crawl PAGES into the spool — the live executor for
     :func:`~nextbus2pg_spark.pipelines.frontier.crawl_loop`'s fetch
     batches. Each spool file is one ``<url>\\r\\n`` line followed by
     the RAW HTTP response (:meth:`FeedHttpClient.get_page`: redirects
@@ -859,53 +833,21 @@ class PageFetcher:
     names (``_cap_spool_stem``) that do not unquote back, and a
     frame keyed on a lossy filename would silently drop exactly
     those pages from the corpus while the ledger marks them fetched
-    (round-13 review). Crash-safety mirrors the other fetchers:
-    ``.tmp-`` + ``os.replace`` atomic writes, spool FILENAMES as the
-    resume ledger, optional :class:`HostThrottle` politeness."""
+    (round-13 review)."""
 
-    def __init__(
-        self,
-        spool_dir: str,
-        *,
-        client: FeedHttpClient | None = None,
-        throttle: "HostThrottle | None" = None,
-    ) -> None:
-        self.spool_dir = spool_dir
-        self.client = client or FeedHttpClient()
-        self.throttle = throttle
-        os.makedirs(spool_dir, exist_ok=True)
+    ext = ".page"
 
-    @staticmethod
-    def spool_name(url: str) -> str:
-        return _cap_spool_stem(urllib.parse.quote(url, safe="")) + ".page"
+    @classmethod
+    def spool_name(cls, url: str) -> str:
+        return cls._name(url)
 
-    def fetched(self) -> "set[str]":
-        """Spool names already fetched (the resume ledger)."""
-        return {
-            n for n in os.listdir(self.spool_dir)
-            if n.endswith(".page") and not n.startswith(".tmp-")
-        }
+    def _payloads(self, url: str, urls) -> "list[bytes]":
+        return [url.encode("utf-8") + b"\r\n" + self.client.get_page(url)]
 
     def fetch(self, urls) -> int:
         """Fetch every URL not already spooled; returns the number
-        fetched. 5xx/transport failures propagate after the client's
-        retries — the ledger makes the re-run resume mid-batch."""
-        done = self.fetched()
-        n = 0
-        for url in urls:
-            name = self.spool_name(url)
-            if name in done:
-                continue
-            if self.throttle is not None:
-                self.throttle.wait(url)
-            data = self.client.get_page(url)
-            tmp = os.path.join(self.spool_dir, f".tmp-{name}")
-            with open(tmp, "wb") as f:
-                f.write(url.encode("utf-8") + b"\r\n" + data)
-            os.replace(tmp, os.path.join(self.spool_dir, name))
-            done.add(name)
-            n += 1
-        return n
+        fetched."""
+        return self._spool((self.spool_name(u), u) for u in urls)
 
 
 def page_spool_frame(spark, spool_dir: str):
@@ -921,9 +863,8 @@ def page_spool_frame(spark, spool_dir: str):
     parseable. ``location`` is resolved ABSOLUTE against the page URI
     (RFC 9110 allows relative Location). The URI comes from the
     file's leading ``<url>\\r\\n`` line, never the filename —
-    digest-capped names are not reversible (round-13 review).
-    Executor-parallel binaryFile listing; one file per page, the
-    same shape the ranged fetcher produces."""
+    digest-capped names are not reversible (round-13 review). One
+    file per page, the same shape the ranged fetcher produces."""
     from pyspark.sql import functions as F
 
     from nextbus2pg_spark.sources.warc import (
@@ -990,19 +931,15 @@ def page_spool_frame(spark, spool_dir: str):
                 ],
             )
 
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.page")
-        .load(spool_dir)
-        .select("content")
-        .mapInPandas(
-            _parse,
-            schema=(
-                "uri string, http_status int, content string,"
-                " content_encoding string, location string,"
-                " parse_error string"
-            ),
-        )
+    return read_binary_files(spark, spool_dir, "*.page").select(
+        "content"
+    ).mapInPandas(
+        _parse,
+        schema=(
+            "uri string, http_status int, content string,"
+            " content_encoding string, location string,"
+            " parse_error string"
+        ),
     )
 
 

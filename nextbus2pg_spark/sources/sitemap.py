@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from nextbus2pg_spark.sources.files import read_binary_files
+
 #: Both sitemap document shapes in one schema: ``<urlset>`` carries
 #: repeated ``<url>`` children, ``<sitemapindex>`` repeated
 #: ``<sitemap>`` children; whichever the document is, the other array
@@ -102,22 +104,15 @@ SITEMAP_DOC_SCHEMA = StructType(
 
 def sitemap_spool_archives(spark, spool_dir: str) -> DataFrame:
     """Read a ``SitemapFetcher`` spool as ``(sitemap_url, payload)``
-    rows: executor-parallel ``binaryFile`` source, one spool file per
-    row, the URL recovered from the percent-encoded filename (the
-    same filenames-as-ledger contract the WARC spool uses; in-flight
-    ``.tmp-`` files are invisible — Hadoop's listing skips
-    dot-prefixed paths)."""
+    rows: one spool file per row, the URL recovered from the
+    percent-encoded filename (the same filenames-as-ledger contract
+    the WARC spool uses)."""
     name = F.element_at(F.split(F.col("path"), "/"), -1)
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.sitemap")
-        .load(spool_dir)
-        .select(
-            F.url_decode(
-                F.regexp_replace(name, r"\.sitemap$", "")
-            ).alias("sitemap_url"),
-            F.col("content").alias("payload"),
-        )
+    return read_binary_files(spark, spool_dir, "*.sitemap").select(
+        F.url_decode(F.regexp_replace(name, r"\.sitemap$", "")).alias(
+            "sitemap_url"
+        ),
+        F.col("content").alias("payload"),
     )
 
 

@@ -61,6 +61,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from nextbus2pg_spark.sources.files import read_binary_files
+
 GZIP_MAGIC = b"\x1f\x8b"
 _CRLF = b"\r\n"
 _CHUNK = 1 << 20  # compressed bytes fed per inflate step
@@ -1471,28 +1473,8 @@ def warc_archive_files(
     ``CdxRangeFetcher`` later appends it to an archive-host base URL
     (the CDX ``filename`` convention is a path relative to the crawl
     root — real crawl drops nest archives under segment directories,
-    so the listing is recursive). Streaming ``binaryFile`` requires
-    the explicit schema (Spark refuses inference there — the round-10
-    lesson)."""
-    if streaming:
-        from pyspark.sql.types import TimestampType
-
-        schema = StructType(
-            [
-                StructField("path", StringType(), True),
-                StructField("modificationTime", TimestampType(), True),
-                StructField("length", LongType(), True),
-                StructField("content", BinaryType(), True),
-            ]
-        )
-        reader = spark.readStream.format("binaryFile").schema(schema)
-    else:
-        reader = spark.read.format("binaryFile")
-    raw = (
-        reader.option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
+    so the listing is recursive)."""
+    raw = read_binary_files(spark, path, glob, streaming, recursive=True)
     filename = F.regexp_replace("path", r"^[a-z][a-z0-9+.-]*:/+", "/")
     if relative_to is not None:
         prefix = "/" + relative_to.strip("/") + "/"
@@ -1509,20 +1491,9 @@ def warc_spool_archives(spark, spool_dir: str) -> DataFrame:
     """Read a ``CdxRangeFetcher`` spool (one fetched WARC record — a
     complete gzip member in the CC layout — per ``*.warcrec`` file)
     as the ``(archive_id, payload)`` frame ``warc_documents``
-    consumes: the executor-parallel ``binaryFile`` source, one spool
-    file per row, archive_id = xxhash64 of the path (stable across
-    re-reads; in-flight ``.tmp-`` files are invisible — Hadoop's
-    listing skips dot-prefixed paths, the same atomicity contract the
-    feed spool relies on)."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warcrec")
-        .load(spool_dir)
-        .select(
-            F.xxhash64("path").alias("archive_id"),
-            F.col("content").alias("payload"),
-        )
-    )
+    consumes: one spool file per row, archive_id = xxhash64 of the
+    path (stable across re-reads)."""
+    return _spool_archives(read_binary_files(spark, spool_dir, "*.warcrec"))
 
 
 def warc_spool_archives_stream(spark, spool_dir: str) -> DataFrame:
@@ -1530,26 +1501,14 @@ def warc_spool_archives_stream(spark, spool_dir: str) -> DataFrame:
     ``CdxRangeFetcher`` spool with Structured Streaming — each
     micro-batch picks up newly fetched records (the file listing IS
     the offset log), so index-driven ingestion runs continuously while
-    the fetcher executes the manifest. Streaming ``binaryFile``
-    requires an explicit schema (Spark refuses inference here — the
-    round-10 lesson in tests/test_streaming_warc.py)."""
-    from pyspark.sql.types import TimestampType
-
-    schema = StructType(
-        [
-            StructField("path", StringType(), True),
-            StructField("modificationTime", TimestampType(), True),
-            StructField("length", LongType(), True),
-            StructField("content", BinaryType(), True),
-        ]
+    the fetcher executes the manifest."""
+    return _spool_archives(
+        read_binary_files(spark, spool_dir, "*.warcrec", streaming=True)
     )
-    return (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", "*.warcrec")
-        .load(spool_dir)
-        .select(
-            F.xxhash64("path").alias("archive_id"),
-            F.col("content").alias("payload"),
-        )
+
+
+def _spool_archives(raw: DataFrame) -> DataFrame:
+    return raw.select(
+        F.xxhash64("path").alias("archive_id"),
+        F.col("content").alias("payload"),
     )

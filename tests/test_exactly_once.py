@@ -28,6 +28,19 @@ def test_replayed_batch_commits_once(spark, tmp_path):
     assert sink.committed(0) and sink.committed(1)
 
 
+def test_replayed_batch_runs_no_job(spark, tmp_path):
+    """A batch id the sink has committed returns before its input is
+    staged: the replay runs no Spark job."""
+    from tests.conftest import count_jobs
+
+    sink = IdempotentParquetSink(str(tmp_path / "log"))
+    sink(_batch(spark, "b0"), batch_id=0)
+    with count_jobs(spark) as jobs:
+        sink(_batch(spark, "b0"), batch_id=0)
+    assert jobs.n == 0
+    assert sink.read(spark).count() == 2
+
+
 def test_torn_write_repaired_on_replay(spark, tmp_path, monkeypatch):
     sink = IdempotentParquetSink(str(tmp_path / "log"))
     publish = BucketedParquetStore._publish

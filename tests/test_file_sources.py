@@ -179,3 +179,54 @@ def test_read_with_deadletter_csv(spark, tmp_path):
     )
     assert sorted((r.k, r.v) for r in good.collect()) == [(1, "ok"), (2, "fine")]
     assert bad.count() == 1
+
+
+def test_one_binary_file_reader_and_one_atomic_spool_write():
+    """One mechanism each: no package module but ``sources/files.py``
+    calls ``format("binaryFile")`` (every spool and media reader goes
+    through ``read_binary_files``), and ``sources/http_fetcher.py``
+    holds one ``os.replace`` (every fetcher writes through
+    ``_spool_write``). Reads the source only."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "nextbus2pg_spark"
+
+    def calls(path, match):
+        return [
+            f"{path.relative_to(pkg)}:{node.lineno}"
+            for node in ast.walk(ast.parse(path.read_text(), str(path)))
+            if isinstance(node, ast.Call) and match(node)
+        ]
+
+    def binary_file(node):
+        f = node.func
+        return (
+            isinstance(f, ast.Attribute)
+            and f.attr == "format"
+            and any(
+                isinstance(a, ast.Constant) and a.value == "binaryFile"
+                for a in node.args
+            )
+        )
+
+    def os_replace(node):
+        f = node.func
+        return (
+            isinstance(f, ast.Attribute)
+            and f.attr == "replace"
+            and isinstance(f.value, ast.Name)
+            and f.value.id == "os"
+        )
+
+    files = pkg / "sources" / "files.py"
+    assert calls(files, binary_file), "the detector finds the reader's call"
+    offenders = [
+        hit
+        for path in sorted(pkg.rglob("*.py"))
+        if path != files
+        for hit in calls(path, binary_file)
+    ]
+    assert not offenders, offenders
+    replaces = calls(pkg / "sources" / "http_fetcher.py", os_replace)
+    assert len(replaces) == 1, replaces

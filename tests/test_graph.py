@@ -208,6 +208,30 @@ def test_label_propagation_rejects_null_and_string_ids(spark):
         label_propagation(strs)
 
 
+def test_label_propagation_evaluates_edge_lineage_once(spark):
+    """The NULL guard and the symmetric edge prep read one cut of the
+    id frame, so a counting Python UDF in the caller's edge lineage
+    sees each row once over the whole run."""
+    from pyspark.sql import functions as F
+
+    from nextbus2pg_spark.operators.graph import label_propagation
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(v):
+        evaluated.add(1)
+        return v
+
+    rows = [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4)]
+    edges = spark.createDataFrame(rows, "src long, dst long").select(
+        counted("src").alias("src"), "dst"
+    )
+    out = {r.node: r.label for r in label_propagation(edges, n_iters=2).collect()}
+    assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
+    assert evaluated.value == len(rows)
+
+
 def test_transition_matrix_hand_computed(spark):
     import datetime as dt
 

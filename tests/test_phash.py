@@ -80,3 +80,30 @@ def test_read_media_dir_binary_source(spark, tmp_path):
     again = {r.source_path: r.media_id for r in
              read_media_dir(spark, str(d), kind="image", glob="*.img").collect()}
     assert again == {r.source_path: r.media_id for r in rows}
+
+
+def test_read_media_dir_streaming_reads_every_file(spark, tmp_path):
+    """``streaming=True`` starts a file-watching stream (``binaryFile``
+    streaming needs its explicit schema) and one available-now
+    trigger reads both files."""
+    d = tmp_path / "imgs"
+    d.mkdir()
+    (d / "a.img").write_bytes(bytes(range(64)))
+    (d / "b.img").write_bytes(bytes(range(64, 128)))
+    stream = read_media_dir(
+        spark, str(d), kind="image", glob="*.img", streaming=True
+    )
+    rows = []
+    (
+        stream.writeStream.foreachBatch(
+            lambda df, _: rows.extend(df.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
+    assert sorted(r.source_path.rsplit("/", 1)[1] for r in rows) == [
+        "a.img", "b.img",
+    ]
+    assert {len(r.payload) for r in rows} == {64}

@@ -110,6 +110,29 @@ def test_merge_evaluates_its_input_once(spark, tmp_path):
     assert got == {f"tag{i}": f"name{i}-v2" for i in range(20)}
 
 
+def test_replayed_merge_runs_no_job(spark, tmp_path):
+    """``merge`` inside a replayed transaction returns on the manifest
+    it has read, before it stages ``incoming``: no Spark job runs and
+    no generation is published."""
+    from tests.conftest import count_jobs
+
+    store = BucketedParquetStore(
+        spark, str(tmp_path / "t"), ["k"], n_buckets=4
+    )
+    df = spark.range(8).select(
+        F.col("id").cast("string").alias("k"), F.lit("v").alias("v")
+    )
+    store.init(df)
+    with store.transaction("app", 0):
+        store.merge(df, lambda existing, incoming: incoming)
+    gens = store.generations()
+    with count_jobs(spark) as jobs:
+        with store.transaction("app", 0):
+            store.merge(df, lambda existing, incoming: incoming)
+    assert jobs.n == 0
+    assert store.generations() == gens
+
+
 def test_crash_before_publish_is_invisible(spark, tmp_path):
     """Simulated crash: a data generation written but never published
     (the manifest rename is the commit point) must not change reads,
